@@ -13,6 +13,11 @@ import org.apache.spark.sql.SparkSession
   *  - vectorized parquet + filter pushdown (`:126-127`, Spark defaults)
   *  - UTC session timezone (the sanitize contract normalizes to UTC)
   *  - `graft.functions.GraftExtensions` (native expressions)
+  *  - per-session artifact isolation off: Spark's codegen cache is keyed
+  *    by class loader, and an isolated session (each Thrift connection)
+  *    gets a fresh one, so every connection would recompile every query;
+  *    temp views, `SET` state and catalogs stay per session regardless
+  *    (they live in `SessionState`), and graft adds no per-session jars
   *
   * `shufflePartitions` defaults to the machine's cores for local mode; on
   * a real cluster pass ~2-3× total executor cores — AQE coalesces down,
@@ -35,4 +40,7 @@ object GraftSession {
       .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      // read at session creation, so it must ride on the builder options
+      // that `newSession()` (one per Thrift connection) inherits
+      .config("spark.sql.artifact.isolation.enabled", "false")
 }

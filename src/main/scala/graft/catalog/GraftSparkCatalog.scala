@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal => VLiteral, NamedReference, Transform}
-import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, SupportsTruncate, V1Write, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
@@ -422,8 +422,15 @@ private[catalog] class GraftSqlTable(cat: GraftCatalog, catName: String,
       override def build(): RowLevelOperation = new RowLevelOperation {
         override def command(): RowLevelOperation.Command = info.command()
 
-        override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-          GraftSqlTable.this.rawScanBuilder(options) // never prune a rewrite scan
+        // the commit replaces the WHOLE table with what this scan read, so
+        // it must read every row: no file pruning and no pushed filter.
+        // Spark pushes the statement's condition into whatever builder it
+        // gets, and the stock parquet scan would skip the row groups (whole
+        // files) that cannot match it; a bare ScanBuilder accepts nothing.
+        override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+          val all = GraftSqlTable.this.rawScanBuilder(options)
+          new ScanBuilder { override def build(): Scan = all.build() }
+        }
 
         override def newWriteBuilder(writeInfo: LogicalWriteInfo): WriteBuilder = {
           val staging = Paths.get(cat.warehouse, ns, tbl, "data",

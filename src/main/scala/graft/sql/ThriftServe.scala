@@ -48,10 +48,22 @@ object ThriftServe {
     * fresh port rather than failing the JVM's only chance to serve. */
   def ensureStarted(spark: SparkSession): Int = synchronized {
     startedPort.getOrElse {
+      warnIfRecompiling(spark)
       val port = startWithRetry(spark, attempts = 3)
       startedPort = Some(port)
       port
     }
+  }
+
+  /** Every connection is a `newSession()` of the serving session and
+    * inherits its artifact isolation; see [[graft.GraftSession]] for why
+    * that makes each connection recompile every query. */
+  private[sql] def warnIfRecompiling(spark: SparkSession): Unit = {
+    val key = "spark.sql.artifact.isolation.enabled"
+    if (spark.conf.get(key).toBoolean)
+      System.err.println("[graft-thrift] warning: the serving session has " +
+        s"$key=true, so every connection recompiles every query; build it " +
+        "with graft.GraftSession.builder, which sets it to false")
   }
 
   /** The reference's optional shared-session mode

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** GraftSession must encode the tuned envelope (BASELINE.md). */
@@ -16,5 +18,25 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(opts("spark.sql.adaptive.skewJoin.enabled") === "true")
     assert(opts("spark.sql.session.timeZone") === "UTC")
     assert(opts("spark.sql.extensions") === "graft.functions.GraftExtensions")
+    // served sessions share generated code (next test)
+    assert(opts("spark.sql.artifact.isolation.enabled") === "false")
+  }
+
+  test("sessions of one context share generated code, not session state") {
+    // each Thrift connection is a newSession() of the serving session
+    val base = SparkSpec.session
+    def agg(s: SparkSession): Map[Long, Long] =
+      s.range(0, 20000, 1, 4).selectExpr("id % 13 AS k", "id AS v")
+        .groupBy("k").sum("v").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (a, b) = (base.newSession(), base.newSession())
+    val expected = agg(a)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(agg(b) === expected)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiled,
+      "the second session recompiled code the first one compiled")
+    a.range(3).createOrReplaceTempView("only_in_a")
+    assert(a.catalog.tableExists("only_in_a"))
+    assert(!b.catalog.tableExists("only_in_a"))
   }
 }

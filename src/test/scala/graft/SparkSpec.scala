@@ -22,6 +22,8 @@ object SparkSpec {
       // holds in tests too (reference entrypoint-spark.sh:135-136)
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.ui.enabled", "false")
+      // as GraftSession.builder: sessions share the codegen cache
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

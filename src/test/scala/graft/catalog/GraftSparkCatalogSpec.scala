@@ -330,6 +330,46 @@ class GraftSparkCatalogSpec extends SparkSpec {
       .as[Double].head() === 60.0)
   }
 
+  /** A 20,000-row table in 2 files with disjoint key ranges: file stats
+    * let a pushed filter skip a whole file. */
+  private def twoFileTable(): String = {
+    val (c, _) = setup()
+    spark.sql(s"CREATE TABLE $c.nyc.two (k BIGINT, v STRING) USING parquet")
+    for (lo <- Seq(0, 10000))
+      spark.sql(s"INSERT INTO $c.nyc.two SELECT id, 'x' FROM range($lo, ${lo + 10000}, 1, 1)")
+    s"$c.nyc.two"
+  }
+
+  test("SQL UPDATE rewrites every file, not just those whose stats match") {
+    val t = twoFileTable()
+    spark.sql(s"UPDATE $t SET v = 'u' WHERE k BETWEEN 10 AND 15")
+    assert(spark.sql(s"SELECT v, count(*) FROM $t GROUP BY v ORDER BY v")
+      .as[(String, Long)].collect().toSeq === Seq(("u", 6L), ("x", 19994L)))
+  }
+
+  test("group-based SQL DELETE rewrites every file, not just those whose stats match") {
+    val t = twoFileTable()
+    // length(v) has no source-filter form, so this DELETE takes the
+    // row-level rewrite instead of deleteWhere
+    spark.sql(s"DELETE FROM $t WHERE k BETWEEN 10 AND 15 AND length(v) = 1")
+    assert(spark.sql(s"SELECT count(*) FROM $t").as[Long].head() === 19994L)
+  }
+
+  test("SQL UPDATE right after MERGE INTO keeps the MERGE's rows") {
+    val t = twoFileTable()
+    Seq((5L, "m"), (15000L, "m"), (20000L, "m")).toDF("k", "v")
+      .createOrReplaceTempView("merge_then_update")
+    spark.sql(s"MERGE INTO $t t USING merge_then_update s ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    spark.sql(s"UPDATE $t SET v = 'u' WHERE k BETWEEN 10 AND 15")
+    assert(spark.sql(s"SELECT v, count(*) FROM $t GROUP BY v ORDER BY v")
+      .as[(String, Long)].collect().toSeq ===
+      Seq(("m", 3L), ("u", 6L), ("x", 19992L)))
+    assert(spark.sql(s"SELECT k FROM $t WHERE v = 'm' ORDER BY k")
+      .as[Long].collect().toSeq === Seq(5L, 15000L, 20000L))
+    spark.catalog.dropTempView("merge_then_update")
+  }
+
   test("SQL MERGE INTO upserts: matched rows updated, unmatched inserted") {
     val (c, cat) = setup()
     Seq((2L, "b2", 222.0), (9L, "new", 99.0)).toDF("id", "name", "score")

@@ -249,6 +249,20 @@ class ThriftSpec extends SparkSpec {
     }
   }
 
+  test("a serving session with artifact isolation on is warned about") {
+    def warned(isolated: Boolean): Boolean = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.artifact.isolation.enabled", isolated.toString)
+      val err = new java.io.ByteArrayOutputStream()
+      val prev = System.err
+      System.setErr(new java.io.PrintStream(err, true))
+      try ThriftServe.warnIfRecompiling(s) finally System.setErr(prev)
+      err.toString.contains("GraftSession.builder")
+    }
+    assert(warned(isolated = true))
+    assert(!warned(isolated = false))
+  }
+
   test("a concurrent client cannot open a connection inside a singleSession window") {
     // round-10 verdict finding 5: the toggle window must be safe BY
     // CONSTRUCTION — a wire client opening during the window blocks on
