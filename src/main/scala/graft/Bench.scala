@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.Tables.QFn
 object Bench {
 
   /** Representative queries across every family (scan/filter, joins, aggs,
@@ -21,17 +22,71 @@ object Bench {
     "meta_expire", "meta_concurrent", "meta_schema_evolution", "etl_compact",
     "etl_zorder", "st_join", "st_catalog_sink")
 
+  /** Seconds one run of `fn` took, or None when it threw: a query that
+    * fails is reported as failed, never timed and summed as if it ran.
+    * The noop sink materializes every output column — count() would let
+    * Catalyst prune the projection and under-measure the real work. */
+  private[graft] def timeOnce(spark: SparkSession, sfDir: String, fn: QFn,
+                              name: String): Option[Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name FAILED: $e")
+      None
+    }
+  }
+
+  /** Best-of-`maxRuns` timing (see main): at least two runs, the third
+    * only while the runs so far stayed under `budget` seconds. None as
+    * soon as a run throws. */
+  private[graft] def bestOf(spark: SparkSession, sfDir: String, name: String,
+                            fn: QFn, maxRuns: Int, budget: Double): Option[Double] = {
+    var best = Double.MaxValue
+    var spent = 0.0
+    var runs = 0
+    while (runs < maxRuns && (runs < 2 || spent < budget)) {
+      val sec = timeOnce(spark, sfDir, fn, name).getOrElse(return None)
+      spent += sec
+      best = math.min(best, sec)
+      runs += 1
+    }
+    Some(best)
+  }
+
+  private def r2(v: Double): Double = math.round(v * 100) / 100.0
+  private def jsonMap(m: Iterable[(String, Double)]): String =
+    m.map { case (k, v) => s"\"" + k + "\":" + r2(v) }.mkString("{", ",", "}")
+
+  /** The result line. `value` sums every query that ran (`n_queries` of
+    * them); when `headline` is true the `queries` map is only the
+    * representative subset (its own sum rides in `headline_sum`), so a
+    * consumer must not recompute `value` from it. `failed` lists queries
+    * that threw — left out of both sums. `canary_sec` is the interleaved
+    * contention-canary series (flat ⇒ clean capture); `reruns` lists
+    * queries whose first best-of tripped the 2.0×-of-reference gate or
+    * sat in a canary-spike window, with the post-pass solo value
+    * reported. */
+  private[graft] def jsonLine(all: Seq[(String, Double)],
+                              qs: Iterable[(String, Double)], isHeadline: Boolean,
+                              canary: Seq[Double], reruns: Seq[(String, Double)],
+                              failed: Seq[String], sfDir: String): String =
+    s"""{"metric":"total","value":${r2(all.map(_._2).sum)},"unit":"sec",""" +
+      s""""n_queries":${all.size},"headline":$isHeadline,""" +
+      s""""headline_sum":${r2(qs.map(_._2).sum)},""" +
+      s""""canary_sec":${canary.map(c => f"$c%.3f").mkString("[", ",", "]")},""" +
+      s""""reruns":${jsonMap(reruns)},""" +
+      s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+      s""""queries":${jsonMap(qs)},"sf":"$sfDir"}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the DDL oracles probe this dir's parquet footers (Meta.oracleSfDir)
     sys.props("graft.sfdir") = sfDir
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       // FAIR across client pools, like the reference's Thrift server
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.ui.enabled", "false")
@@ -39,8 +94,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // Warm up the JVM once (codegen compiler, parquet reader, shuffle
     // machinery) so the first timed query isn't charged one-time JIT cost.
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    timeOnce(spark, sfDir, (s, _) => SparkEntry.entry(s), "warm-up")
     // Optional comma-separated query-name filter for local iteration; the
     // driver leaves it unset and measures the full contract.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -78,28 +132,8 @@ object Bench {
       (if (name == "meta_thrift_serve") 2
        else if (name == "meta_e2e_serve") 1 else 0, name)
     }
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
-      val t0 = System.nanoTime()
-      // noop sink materializes every output column — count() would let
-      // Catalyst prune the projection and under-measure the real work.
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
-    }
-    def bestOf(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
-      var best = Double.MaxValue
-      var spent = 0.0
-      var runs = 0
-      while (runs < maxRuns && (runs < 2 || spent < perQueryBudget)) {
-        val sec = timeOnce(fn)
-        spent += sec
-        best = math.min(best, sec)
-        runs += 1
-      }
-      best
-    }
+    def best(name: String, fn: QFn): Option[Double] =
+      bestOf(spark, sfDir, name, fn, maxRuns, perQueryBudget)
     // CONTENTION CANARY: a fixed map-only query (q_udf_scalar — one scan,
     // no shuffle, no fixture memoization) timed once between every
     // `canaryEvery` queries. Its solo time is milliseconds and stable, so
@@ -111,16 +145,16 @@ object Bench {
     val canaryFn = SparkEntry.queries.get("q_udf_scalar")
     val canary = scala.collection.mutable.ArrayBuffer.empty[Double]
     val canaryEvery = 10
-    canaryFn.foreach(fn => timeOnce(fn)) // warm once, untimed
+    canaryFn.foreach(fn => timeOnce(spark, sfDir, fn, "canary")) // warm once, untimed
     val results = ordered.zipWithIndex.map { case ((name, fn), i) =>
       if (i % canaryEvery == 0) canaryFn.foreach { cf =>
-        val c = timeOnce(cf)
-        canary += math.round(c * 1000) / 1000.0
+        timeOnce(spark, sfDir, cf, "canary")
+          .foreach(c => canary += math.round(c * 1000) / 1000.0)
       }
-      val best = bestOf(fn)
+      val sec = best(name, fn)
       // per-query progress on stderr: stdout stays ONE parseable line
-      System.err.println(f"[bench] $name%-28s $best%8.3f s")
-      name -> best
+      sec.foreach(b => System.err.println(f"[bench] $name%-28s $b%8.3f s"))
+      name -> sec
     }
     // AUTOMATIC SOLO RE-RUN, two triggers (round-11 verdict: st_join
     // shipped at 2.24× its clean reference because the old gate only
@@ -165,38 +199,27 @@ object Bench {
         Seq(ci - 1, ci)
     }.flatten.toSet
     val rerun = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val finalResults = results.zipWithIndex.map { case ((name, best), i) =>
-      val overRef = ref.get(name).exists(prev => best > 2.0 * prev)
-      val spiked = taintedBlocks.contains(i / canaryEvery)
-      if (overRef || spiked) {
-        val again = bestOf(SparkEntry.queries(name))
-        val merged = math.min(best, again)
-        System.err.println(
-          f"[bench] RERUN $name%-22s $best%8.3f s -> $merged%8.3f s " +
-            f"(${if (spiked) "canary-spike window" else "2x over reference"})")
-        rerun(name) = merged
-        name -> merged
-      } else name -> best
+    val rechecked = results.zipWithIndex.map {
+      case ((name, Some(first)), i) =>
+        val overRef = ref.get(name).exists(prev => first > 2.0 * prev)
+        val spiked = taintedBlocks.contains(i / canaryEvery)
+        if (overRef || spiked) {
+          val merged = best(name, SparkEntry.queries(name)).map(math.min(first, _))
+          System.err.println(
+            f"[bench] RERUN $name%-22s $first%8.3f s -> " +
+              merged.fold("FAILED")(m => f"$m%8.3f s") +
+              f" (${if (spiked) "canary-spike window" else "2x over reference"})")
+          merged.foreach(rerun(name) = _)
+          name -> merged
+        } else name -> Some(first)
+      case ((name, None), _) => name -> None
     }
-    def r2(v: Double): Double = math.round(v * 100) / 100.0
-    def jsonMap(m: Iterable[(String, Double)]): String =
-      m.map { case (k, v) => s"\"" + k + "\":" + r2(v) }.mkString("{", ",", "}")
+    val finalResults = rechecked.collect { case (name, Some(sec)) => name -> sec }
+    val failed = rechecked.collect { case (name, None) => name }
     val byName = finalResults.toMap
-    val total = if (finalResults.nonEmpty) finalResults.map(_._2).sum else 0.0
-    // `value` is the sum over ALL n_queries queries; when `headline` is true
-    // the `queries` map is only the representative subset (its own sum rides
-    // in `headline_sum`), so a consumer must not recompute `value` from it.
-    // `canary_sec` is the interleaved contention-canary series (flat ⇒
-    // clean capture); `reruns` lists queries whose first best-of tripped
-    // the 2.0×-of-reference gate or sat in a canary-spike window, with
-    // the post-pass solo value reported.
-    val canaryJson = canary.map(c => f"$c%.3f").mkString("[", ",", "]")
     def line(qs: Iterable[(String, Double)], isHeadline: Boolean): String =
-      s"""{"metric":"total","value":${r2(total)},"unit":"sec",""" +
-        s""""n_queries":${finalResults.size},"headline":$isHeadline,""" +
-        s""""headline_sum":${r2(qs.map(_._2).sum)},""" +
-        s""""canary_sec":$canaryJson,"reruns":${jsonMap(rerun)},""" +
-        s""""queries":${jsonMap(qs)},"sf":"$sfDir"}"""
+      jsonLine(finalResults, qs, isHeadline, canary.toSeq, rerun.toSeq,
+        failed, sfDir)
     // full per-query detail — survives any stdout truncation/interleaving
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(

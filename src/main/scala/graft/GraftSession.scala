@@ -43,4 +43,20 @@ object GraftSession {
       // read at session creation, so it must ride on the builder options
       // that `newSession()` (one per Thrift connection) inherits
       .config("spark.sql.artifact.isolation.enabled", "false")
+
+  /** Run `body` with `confs` set on `spark`'s session, then put back what
+    * the session held before — the caller's values, not Spark's defaults
+    * (a key that was unset is unset again) — so a scoped query neither
+    * leaks a setting into the session it borrowed nor resets one of the
+    * builder's (a 64 MB broadcast threshold silently dropping to Spark's
+    * 10 MB for every later query). */
+  def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }

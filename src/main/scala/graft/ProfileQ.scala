@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query execution profile: Spark JOB / stage / task counts and summed
   * task time next to the wall clock, so fixed scheduling overhead (many
@@ -20,11 +19,8 @@ object ProfileQ {
     val reps = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    // the session graft.Bench times under
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.sql.adaptive.enabled",
         sys.props.getOrElse("graft.profile.aqe", "true"))
@@ -71,28 +67,26 @@ object ProfileQ {
       }
     })
     // warm the JVM like Bench does
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    Bench.timeOnce(spark, sfDir, (s, _) => SparkEntry.entry(s), "warm-up")
     println(f"${"query"}%-28s ${"wall_s"}%8s ${"jobs"}%5s ${"stages"}%7s " +
       f"${"tasks"}%6s ${"task_s"}%8s")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
-      def once(): (Double, Int, Int, Int, Long) = {
+      def once(): Option[(Double, Int, Int, Int, Long)] = {
         Thread.sleep(200) // let the async listener bus drain
         jobs = 0; stages = 0; tasks = 0; taskMs = 0L
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[$n] failed: ${e.getMessage}") }
-        val wall = (System.nanoTime() - t0) / 1e9
+        val wall = Bench.timeOnce(spark, sfDir, fn, n)
         Thread.sleep(200)
-        (wall, jobs, stages, tasks, taskMs)
+        wall.map((_, jobs, stages, tasks, taskMs))
       }
       once() // warm-up: fixture memoization, codegen
       val runs = (1 to reps).map(_ => once())
-      val best = runs.minBy(_._1)
-      println(f"$n%-28s ${best._1}%8.3f ${best._2}%5d ${best._3}%7d " +
-        f"${best._4}%6d ${best._5 / 1000.0}%8.1f")
+      if (runs.exists(_.isEmpty)) println(f"$n%-28s FAILED")
+      else {
+        val best = runs.flatten.minBy(_._1)
+        println(f"$n%-28s ${best._1}%8.3f ${best._2}%5d ${best._3}%7d " +
+          f"${best._4}%6d ${best._5 / 1000.0}%8.1f")
+      }
     }
     spark.stop()
   }

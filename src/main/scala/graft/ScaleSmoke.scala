@@ -329,9 +329,11 @@ object ScaleSmoke {
       def textIndexReport(dir: String, tag: String): Unit = {
         val cat = graft.queries.Extensions.textIndexFor(spark, dir)
         def layout(query: String): Unit = {
-          val live = cat.loadTable("txt", "docs_postings").filesAsOf(None)
-          val kept = cat.filesForScanStringAny(live, "term",
-            graft.queries.Extensions.bm25Terms)
+          val meta = cat.loadTable("txt", "docs_postings")
+          val live = meta.filesAsOf(None)
+          val kept = cat.planFiles(meta, None,
+            Seq(org.apache.spark.sql.sources.In("term",
+              graft.queries.Extensions.bm25Terms.toArray[Any])))
           println(f"""{"query":"$query","tier":"$tag",""" +
             f""""kept_files":${kept.size},"total_files":${live.size},""" +
             f""""kept_mb":${kept.map(_.sizeBytes).sum / 1e6}%.2f,""" +
@@ -574,10 +576,10 @@ object ScaleSmoke {
         val emb = Tables.embeddings(spark, dir)
           .select(col("vec_id"), col("embedding"))
         val batch = emb.orderBy("vec_id").limit(batchRows)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
         // plan facts must be read while AQE is OFF — an adaptive wrapper
         // hides the leaf scans from a plain collect
-        val (n, sec, codeFiles, rawListed) = try {
+        val (n, sec, codeFiles, rawListed) =
+          GraftSession.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
           val start = System.nanoTime()
           val frame = IvfPq.augmentTop1(spark, cat, "vec", "emb", emb, batch)
           val count = frame.count()
@@ -594,7 +596,7 @@ object ScaleSmoke {
             .flatMap(_.relation.location.inputFiles)
             .filter(_.contains("emb_ivfpq_raw")).distinct
           (count, elapsed, cf, rl)
-        } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+        }
         val codesTotal =
           cat.loadTable("vec", "emb_ivfpq_codes").filesAsOf(None).size
         val rawAll = cat.loadTable("vec", "emb_ivfpq_raw").filesAsOf(None)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,11 +14,7 @@ object Verify {
     sys.props("graft.sfdir") = sfDir
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       // FAIR across client pools, like the reference's Thrift server
       // (entrypoint-spark.sh:135-136); exercised by meta_concurrent
       .config("spark.scheduler.mode", "FAIR")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * Range stats prune files only when the predicate column correlates
   * with the write layout. A table clustered by topic/time holds ids
   * SCATTERED across every file, so each file's id [min, max] spans the
-  * whole domain and `filesForScan` keeps everything — a point lookup
+  * whole domain and stats pruning keeps everything — a point lookup
   * ("fetch document 12345", the RTBF audit read) scans the table. The
   * production answer (parquet column bloom filters, Iceberg's puffin
   * sidecars, ClickHouse skip indexes) is a per-file membership sketch
@@ -24,10 +24,12 @@ import org.apache.spark.sql.functions._
   *  - each `DataFileMeta` carries `bloomPath` (the commit's sidecar);
   *    the manifest JSON stays O(files), never O(rows) — the bits live
   *    in the sidecar, not the snapshot log;
-  *  - `GraftCatalog.filesForScanEquals` range-prunes first, then
-  *    bloom-tests only the survivors, reading each sidecar once per
-  *    scan (a bounded metadata read: files without blooms, or columns
-  *    not bloomed, stay conservatively kept).
+  *  - the scan planner (`GraftCatalog.planFiles`, which SQL scans and
+  *    DataFrame reads share) runs partition, then stats pruning, then
+  *    bloom-tests only the survivors for `EqualTo`/`In` predicates
+  *    ([[keptAny]]), reading each sidecar once per scan on the driver (a
+  *    bounded metadata read, no Spark job: files without blooms, or
+  *    columns not bloomed, stay conservatively kept).
   *
   * Determinism: hashing is the splitmix64 finalizer + Kirsch-
   * Mitzenmacher double hashing — pure functions of the value, so the
@@ -204,47 +206,69 @@ object BloomIndex {
     } finally { agged.unpersist(); () }
   }
 
-  /** Bloom-test `files` (grouped by their commit sidecar — one sidecar
-    * read per scan) for a point predicate `column = value`. Files
-    * without a sidecar, or without a bloom row for this column, stay
-    * kept: skipping must be conservative. */
-  def kept(spark: SparkSession, files: Seq[DataFileMeta], column: String,
-           value: Long): Seq[DataFileMeta] =
-    keptAny(spark, files, column, Seq(value))
+  /** The bloom rows `(file, column, m, k, bits)` of sidecar `sc` for
+    * `files` × `columns`, read on the driver with parquet's own reader —
+    * a bounded metadata read, like the footer stats, with no Spark job.
+    * Both predicates push into the sorted sidecar (row-group stats, then
+    * records), so a point lookup ships only the candidate files' bit
+    * arrays, not the whole commit's. */
+  private def sidecarRows(sc: String, files: Set[String], columns: Seq[String])
+      : Seq[(String, String, Int, Int, Array[Byte])] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.parquet.filter2.compat.FilterCompat
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    import org.apache.parquet.io.api.Binary
+    def in(c: String, vs: Iterable[String]) =
+      FilterApi.in(FilterApi.binaryColumn(c), vs.map(Binary.fromString).toSet.asJava)
+    val filter = FilterCompat.get(FilterApi.and(in("column", columns), in("file", files)))
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val dir = new HPath(sc)
+    dir.getFileSystem(conf).listStatus(dir).toSeq.map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
+      .flatMap { part =>
+        val reader = ParquetReader.builder(new GroupReadSupport(), part)
+          .withConf(conf).withFilter(filter).build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null).map(g =>
+            (g.getString("file", 0), g.getString("column", 0),
+              g.getInteger("m", 0), g.getInteger("k", 0),
+              g.getBinary("bits", 0).getBytes)).toList
+        finally reader.close()
+      }
+  }
 
-  /** [[kept]] for a SET of point values (`column IN (values)`) — the
-    * batched point-lookup shape a shortlist re-rank fetch makes: a file
-    * survives when ANY of the values might be present. Still one
-    * sidecar read per commit group; the probe loop is
-    * |survivor files| × |values| × k driver-side bit tests. */
-  def keptAny(spark: SparkSession, files: Seq[DataFileMeta], column: String,
-              values: Seq[Long]): Seq[DataFileMeta] =
-    files.groupBy(_.bloomPath).toSeq.flatMap {
-      case (None, fs) => fs
+  /** Bloom-test `files` against point probes — `(column, values)` pairs,
+    * each an `EqualTo`/`In` of the scan's conjunctive filter with values
+    * already hashed ([[hash64]] for strings). A file survives when, for
+    * every probe whose column its sidecar blooms, ANY of the values might
+    * be present. One sidecar read per commit group however many probes
+    * and values; files without a sidecar, or without a bloom row for a
+    * probed column, stay kept — skipping must be conservative. Keeps the
+    * input order. */
+  def keptAny(files: Seq[DataFileMeta],
+              probes: Seq[(String, Seq[Long])]): Seq[DataFileMeta] = {
+    val columns = probes.map(_._1).distinct
+    val bitsByFile = files.groupBy(_.bloomPath).toSeq.flatMap {
+      case (None, _) => Nil
       case (Some(sc), fs) =>
-        val mine = fs.map(f => canonicalKey(f.path)).toSet
-        // push BOTH predicates into the sorted sidecar scan — without
-        // the file filter, every point lookup ships every file's bit
-        // array to the driver even when range pruning already narrowed
-        // the candidates (the sidecar is sorted by (file, column)
-        // precisely so this prunes)
-        val bitsByFile = spark.read.parquet(sc)
-          .filter(col("column") === column &&
-            col("file").isInCollection(mine))
-          .select(col("file"), col("bits"), col("m"), col("k"))
-          .collect()
-          .map { r =>
-            val bits = r.getAs[Array[Byte]]("bits")
-            val m = r.getAs[Int]("m")
+        sidecarRows(sc, fs.map(f => canonicalKey(f.path)).toSet, columns)
+          .map { case (file, column, m, k, bits) =>
             // the sidecar's persisted geometry is authoritative: a
             // truncated/corrupt bit array must fail loud, not probe the
             // wrong positions and skip files that hold real rows
             require(m == bits.length * 8, s"bloom sidecar $sc: row for " +
-              s"${r.getString(0)} declares m=$m but carries " +
-              s"${bits.length * 8} bits")
-            r.getString(0) -> ((bits, r.getAs[Int]("k")))
-          }.toMap
-        fs.filter(f => bitsByFile.get(canonicalKey(f.path)).forall {
-          case (bits, k) => values.exists(mightContain(bits, _, k)) })
-    }
+              s"$file declares m=$m but carries ${bits.length * 8} bits")
+            (sc, file, column) -> ((bits, k))
+          }
+    }.toMap
+    files.filter(f => f.bloomPath.forall { sc =>
+      val key = canonicalKey(f.path)
+      probes.forall { case (c, values) =>
+        bitsByFile.get((sc, key, c)).forall { case (bits, k) =>
+          values.exists(mightContain(bits, _, k)) }
+      }
+    })
+  }
 }

@@ -7,7 +7,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, sources}
 import org.apache.spark.sql.types.StructType
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -537,7 +537,7 @@ class GraftCatalog(val warehouse: String) {
     * columns resolve to stable field ids at creation, so the spec survives
     * later renames. The spec shapes WRITES ([[writePartitioned]] clusters
     * rows into one directory per partition tuple) and PRUNES reads
-    * ([[prunedFiles]] projects source-column predicates through the
+    * ([[planFiles]] projects source-column predicates through the
     * transforms) — hidden partitioning: queries never name the partition
     * columns. */
   def createTable(ns: String, t: String, schema: StructType,
@@ -688,102 +688,6 @@ class GraftCatalog(val warehouse: String) {
     }
   }
 
-  /** File skipping for a POINT predicate `column = value`: range stats
-    * first (free — already in the manifest), then the survivors'
-    * bloom sidecars ([[BloomIndex.kept]] — one bounded metadata read
-    * per sidecar). Files without blooms stay kept; both layers are
-    * conservative, so the caller's row filter gives exact results. */
-  def filesForScanEquals(spark: SparkSession, ns: String, t: String,
-                         column: String, value: Long,
-                         asOf: Option[Long] = None): Seq[DataFileMeta] =
-    BloomIndex.kept(spark,
-      filesForScan(loadTable(ns, t).filesAsOf(asOf), column,
-        value.toDouble, value.toDouble),
-      column, value)
-
-  /** Read with point-predicate file skipping (range + bloom); the caller
-    * still applies the row-level filter (same contract as
-    * [[readTableWhere]]). */
-  def readTableWhereEquals(spark: SparkSession, ns: String, t: String,
-                           column: String, value: Long,
-                           asOf: Option[Long] = None): DataFrame =
-    readKeptFiles(spark, ns, t, asOf,
-      filesForScanEquals(spark, ns, t, column, value, asOf)
-        .map(_.path).toSet)
-
-  /** [[filesForScanEquals]] for `column IN (values)` — the BATCHED
-    * point lookup a shortlist re-rank fetch makes (≤ a few hundred ids
-    * at a time): range stats keep a file when ANY value falls inside
-    * its [min, max]; the survivors' blooms then drop files holding
-    * none of the values ([[BloomIndex.keptAny]] — one sidecar read per
-    * commit group, however many values probe). Both layers stay
-    * conservative: stats-less files and columns survive. */
-  def filesForScanEqualsAny(spark: SparkSession, ns: String, t: String,
-                            column: String, values: Seq[Long],
-                            asOf: Option[Long] = None): Seq[DataFileMeta] = {
-    val rangeKept = loadTable(ns, t).filesAsOf(asOf).filter { f =>
-      f.colRanges.flatMap(_.get(column)) match {
-        case Some(r) => values.exists(v => v >= r.min && v <= r.max)
-        case None    => true // no stats — conservative keep
-      }
-    }
-    BloomIndex.keptAny(spark, rangeKept, column, values)
-  }
-
-  /** Read with BATCHED point-predicate file skipping (range + bloom per
-    * value set); the caller still applies the row-level `isin`. */
-  def readTableWhereEqualsAny(spark: SparkSession, ns: String, t: String,
-                              column: String, values: Seq[Long],
-                              asOf: Option[Long] = None): DataFrame =
-    readKeptFiles(spark, ns, t, asOf,
-      filesForScanEqualsAny(spark, ns, t, column, values, asOf)
-        .map(_.path).toSet)
-
-  /** COMPOSED point fetch for a clustered layout: union-range pruning
-    * on `rangeColumn` (exact — zero false positives when the layout
-    * clusters on it) narrows the candidates FIRST, then `idColumn`'s
-    * bloom sidecars prune within the survivors. This is the shortlist
-    * re-rank shape: bloom-testing a several-hundred-id set against
-    * EVERY file compounds per-id false positives into a kept-fraction
-    * floor (per file, P[any of n ids passes] = 1-(1-p)^n — at n≈500
-    * even a 1%-FPP bloom keeps a material slice of an arbitrarily
-    * large table), while the range layer caps candidates at the ids'
-    * OWN cluster values regardless of |ids|. */
-  def readTableWhereRangesAndIds(spark: SparkSession, ns: String, t: String,
-                                 rangeColumn: String,
-                                 ranges: Seq[(Double, Double)],
-                                 idColumn: String, ids: Seq[Long],
-                                 asOf: Option[Long] = None): DataFrame = {
-    val rangeKept = loadTable(ns, t).filesAsOf(asOf).filter { f =>
-      f.colRanges.flatMap(_.get(rangeColumn)) match {
-        case Some(r) =>
-          ranges.exists { case (lo, hi) => hi >= r.min && lo <= r.max }
-        case None => true // no stats — conservative keep
-      }
-    }
-    readKeptFiles(spark, ns, t, asOf,
-      BloomIndex.keptAny(spark, rangeKept, idColumn, ids)
-        .map(_.path).toSet)
-  }
-
-  /** [[filesForScanEquals]] for a STRING point predicate (UUID-style
-    * ids): truncated string ranges first, then the survivors' blooms
-    * under the canonical md5-60 hash the sidecar was built with. */
-  def filesForScanEqualsString(spark: SparkSession, ns: String, t: String,
-                               column: String, value: String,
-                               asOf: Option[Long] = None): Seq[DataFileMeta] =
-    BloomIndex.kept(spark,
-      filesForScanString(ns, t, column, value, value, asOf),
-      column, BloomIndex.hash64(value))
-
-  /** Read with STRING point-predicate file skipping (range + bloom). */
-  def readTableWhereEqualsString(spark: SparkSession, ns: String, t: String,
-                                 column: String, value: String,
-                                 asOf: Option[Long] = None): DataFrame =
-    readKeptFiles(spark, ns, t, asOf,
-      filesForScanEqualsString(spark, ns, t, column, value, asOf)
-        .map(_.path).toSet)
-
   /** Partition-clustered write: computes each spec field's canonical value,
     * writes one directory per partition tuple (`partitionBy` — the derived
     * columns are dropped from the data files; SOURCE columns stay, which is
@@ -851,20 +755,6 @@ class GraftCatalog(val warehouse: String) {
       fm.copy(partition = Some(tuple), specId = Some(meta.specs.last.specId))
     }
     commitSnapshot(ns, t, operation, withTuples, baseSnapshotId)
-  }
-
-  /** Scan-planning file pruning: partition-tuple projection (hidden
-    * partitioning) plus footer min/max bounds, both conservative. This is
-    * the driver-side, metadata-only planning step Iceberg runs over
-    * manifests — no job is launched. */
-  def prunedFiles(ns: String, t: String,
-                  filters: Seq[org.apache.spark.sql.sources.Filter],
-                  asOf: Option[Long] = None): Seq[DataFileMeta] = {
-    val meta = loadTable(ns, t)
-    val fields = meta.currentSchemaVersion.fields
-    meta.filesAsOf(asOf).filter(f => filters.forall(fl =>
-      Partitioning.keepByPartition(meta.specForFile(f), fields, f, fl) &&
-        Partitioning.keepByStats(f, meta.schema, fl)))
   }
 
   /** Iceberg-style optimistic-commit retry (`commit.retry.num-retries`,
@@ -1928,7 +1818,7 @@ class GraftCatalog(val warehouse: String) {
         // OWN new files; the added rows also emit as inserts below (a
         // same-commit insert+delete of one row nets out, the standard
         // CDC encoding)
-        val ref = readKeptFiles(spark, ns, t, Some(sn.id), refPaths,
+        val ref = readKeptFiles(spark, meta, Some(sn.id), refPaths,
           keepPos = true)
         // rows already dead under EARLIER position deletes must not
         // re-emit: Merge.deleteWherePos never re-references a dead
@@ -1962,7 +1852,7 @@ class GraftCatalog(val warehouse: String) {
         val added = sn.addedFiles.map(_.path).toSet
         if (added.isEmpty) Seq(dels)
         else Seq(dels,
-          tag(readKeptFiles(spark, ns, t, Some(sn.id), added), "insert", ord))
+          tag(readKeptFiles(spark, meta, Some(sn.id), added), "insert", ord))
       } else if (sn.deletes.nonEmpty) {
         val keys = sn.equalityKeys.getOrElse(Nil)
         require(keys.nonEmpty,
@@ -1995,11 +1885,11 @@ class GraftCatalog(val warehouse: String) {
         val added = sn.addedFiles.map(_.path).toSet
         if (added.isEmpty) Seq(dels)
         else Seq(dels,
-          tag(readKeptFiles(spark, ns, t, Some(sn.id), added), "insert", ord))
+          tag(readKeptFiles(spark, meta, Some(sn.id), added), "insert", ord))
       } else if (sn.operation == "append") {
         val files = sn.addedFiles.map(_.path).toSet
         if (files.isEmpty) Nil
-        else Seq(tag(readKeptFiles(spark, ns, t, Some(sn.id), files),
+        else Seq(tag(readKeptFiles(spark, meta, Some(sn.id), files),
           "insert", ord))
       } else { // overwrite / replace: file-set diff
         // prevId 0 = no previous lineage (e.g. the boundary checkpoint
@@ -2028,7 +1918,7 @@ class GraftCatalog(val warehouse: String) {
           }
         val inss =
           if (added.isEmpty) Nil
-          else Seq(tag(readKeptFiles(spark, ns, t, Some(sn.id), added),
+          else Seq(tag(readKeptFiles(spark, meta, Some(sn.id), added),
             "insert", ord))
         dels ++ inss
       }
@@ -2240,145 +2130,113 @@ class GraftCatalog(val warehouse: String) {
          Map[String, Long], Map[String, Long]) =
     GraftCatalog.footerStats(p)
 
-  /** Manifest-style file skipping: keep only files whose [min,max] for
-    * `column` can intersect [lower, upper]; files without stats are kept
-    * (skipping must be conservative). This happens at file-list
-    * construction time, BEFORE Spark plans the scan — row-group/page
-    * pruning inside the surviving files is then Parquet pushdown. */
-  def filesForScan(ns: String, t: String, column: String,
-                   lower: Double, upper: Double,
-                   asOf: Option[Long] = None): Seq[DataFileMeta] =
-    filesForScan(loadTable(ns, t).filesAsOf(asOf), column, lower, upper)
+  // ---------------------------------------------------------- scan planning
 
-  /** The skipping predicate over an ALREADY-loaded file list — the ONE
-    * place the range-intersection rule (and the keep-stats-less-files
-    * policy) lives; callers holding the manifest (readTableWhereAnyLive's
-    * per-range loop, IvfPq's probe sizing) filter in memory instead of
-    * re-parsing the metadata JSON per call. */
-  def filesForScan(files: Seq[DataFileMeta], column: String,
-                   lower: Double, upper: Double): Seq[DataFileMeta] =
-    files.filter { f =>
-      f.colRanges.flatMap(_.get(column)) match {
-        case Some(rg) => rg.max >= lower && rg.min <= upper
-        case None     => true
-      }
-    }
-
-  /** File skipping on a STRING column predicate `lower <= col <= upper`.
-    * The recorded bounds are truncated (Iceberg `truncate(16)`), but a
-    * truncated min is ≤ the true min and a truncated max is ≥ the true
-    * max, so the intersection test stays conservative; files without
-    * recorded bounds for the column are kept. */
-  def filesForScanString(ns: String, t: String, column: String,
-                         lower: String, upper: String,
-                         asOf: Option[Long] = None): Seq[DataFileMeta] =
-    loadTable(ns, t).filesAsOf(asOf).filter { f =>
-      f.strRanges.flatMap(_.get(column)) match {
-        case Some(rg) => rg.max >= lower && rg.min <= upper
-        case None     => true
-      }
-    }
-
-  /** Read with file skipping on a string column predicate; the caller
-    * still applies the row-level filter (same contract as
-    * [[readTableWhere]]). */
-  def readTableWhereString(spark: SparkSession, ns: String, t: String,
-                           column: String, lower: String, upper: String,
-                           asOf: Option[Long] = None): DataFrame =
-    readKeptFiles(spark, ns, t, asOf,
-      filesForScanString(ns, t, column, lower, upper, asOf).map(_.path).toSet)
-
-  /** File skipping for a UNION of string POINT lookups in one kept-file
-    * set — the inverted-index probe's read shape: a retrieval query's
-    * terms prune together against the postings table's per-file term
-    * bounds, and the survivors are scanned ONCE (the string analog of
-    * [[readTableWhereAnyLive]]'s range union; same conservative
-    * truncate(16) argument as [[filesForScanString]]). */
-  def filesForScanStringAny(files: Seq[DataFileMeta], column: String,
-                            points: Seq[String]): Seq[DataFileMeta] =
-    files.filter { f =>
-      f.strRanges.flatMap(_.get(column)) match {
-        case Some(rg) => points.exists(p => rg.max >= p && rg.min <= p)
-        case None     => true
-      }
-    }
-
-  /** Read with file skipping for a union of string point predicates; the
-    * caller still applies the row-level filter (same contract as
-    * [[readTableWhereString]]). */
-  def readTableWhereStringAny(spark: SparkSession, ns: String, t: String,
-                              column: String, points: Seq[String],
-                              asOf: Option[Long] = None): DataFrame =
-    readKeptFiles(spark, ns, t, asOf,
-      filesForScanStringAny(loadTable(ns, t).filesAsOf(asOf), column, points)
-        .map(_.path).toSet)
-
-  /** Read with file skipping on a numeric column predicate. The caller
-    * still applies the row-level filter; this only prunes whole files. */
-  def readTableWhere(spark: SparkSession, ns: String, t: String,
-                     column: String, lower: Double, upper: Double,
-                     asOf: Option[Long] = None): DataFrame = {
-    readKeptFiles(spark, ns, t, asOf,
-      filesForScan(ns, t, column, lower, upper, asOf).map(_.path).toSet)
+  /** THE scan planner: the one place a pruned read decides which of the
+    * live files at `asOf` to scan — SQL ([[GraftPruningScanBuilder]]'s
+    * `pushFilters`) and the DataFrame API ([[readPruned]],
+    * [[readPrunedLive]] and the operators built on them) alike. Iceberg's
+    * `planFiles` shape: driver-side and metadata-only (no Spark job),
+    * three conservative layers in order, each a file veto that never
+    * drops a file holding a row the (conjunctive) `filters` accept:
+    *
+    *  1. partition — each file's recorded tuple, projected through the
+    *     spec it was written under ([[Partitioning.keepByPartition]]);
+    *  2. stats — footer min/max bounds ([[Partitioning.keepByStats]]).
+    *     Literals must carry the column's own type: a DOUBLE bound on a
+    *     LONG column prunes nothing ([[Partitioning.between]] types a
+    *     numeric range);
+    *  3. bloom — for each `EqualTo`/`In` (top level or under `And`) with
+    *     integral literals on an integral column or string literals on a
+    *     string column, the survivors' bloom sidecars
+    *     ([[BloomIndex.keptAny]]: one driver-side read of the candidates'
+    *     rows per commit sidecar; files registered without blooms cost
+    *     nothing). Any other literal shape skips this layer.
+    *
+    * The caller still applies its row-level filter. */
+  def planFiles(meta: TableMeta, asOf: Option[Long],
+                filters: Seq[sources.Filter]): Seq[DataFileMeta] = {
+    val fields = meta.currentSchemaVersion.fields
+    val schema = meta.schema
+    val byStats = meta.filesAsOf(asOf).filter(f => filters.forall(fl =>
+      Partitioning.keepByPartition(meta.specForFile(f), fields, f, fl) &&
+        Partitioning.keepByStats(f, schema, fl)))
+    val probes = bloomProbes(schema, filters)
+    if (probes.isEmpty) byStats else BloomIndex.keptAny(byStats, probes)
   }
 
-  /** Read with file skipping on a numeric column predicate, with
-    * merge-on-read POSITION-delete debt applied — the scan an auxiliary
-    * INDEX probe must run once its table can carry tombstones (a vector
-    * removed from the corpus must not surface from the ANN index, even
-    * before compaction pays the debt down). [[readTableWhere]] scans
-    * data files only; this variant keeps the same manifest pruning but
-    * scans the kept files WITH their (file, pos) identity and
-    * anti-joins the state's position-delete tuples (each delete file is
-    * tiny relative to the table, so the join broadcasts — same cost
-    * argument as [[readInternal]]'s fold). Position deletes bind to
-    * exact (file_path, pos) pairs and paths are never recycled, so
-    * applying ALL of them to any file subset is order-independent —
-    * no snapshot fold needed. EQUALITY-delete debt is refused: its
-    * sequence rule is ordered (a re-inserted key in a later file must
-    * survive an earlier delete), which a flat pruned scan cannot honor
-    * — materialize first ([[graft.etl.Merge.materialize]]). */
-  def readTableWhereLive(spark: SparkSession, ns: String, t: String,
-                         column: String, lower: Double, upper: Double): DataFrame =
-    readTableWhereAnyLive(spark, ns, t, column, Seq(lower -> upper))
+  /** The point predicates the bloom layer can test, as (column, hashed
+    * values): integral values hash by value, strings by
+    * [[BloomIndex.hash64]] — the build side's two encodings, so a probe
+    * can never miss a value the sidecar holds. Null `In` members never
+    * match and drop out; a probe with any other literal type is skipped. */
+  private def bloomProbes(schema: StructType, filters: Seq[sources.Filter])
+      : Seq[(String, Seq[Long])] = {
+    import org.apache.spark.sql.types._
+    def probe(c: String, vs: Seq[Any]): Option[(String, Seq[Long])] =
+      schema.find(_.name.equalsIgnoreCase(c)).flatMap { f =>
+        val hashed = vs.map(v => (f.dataType, v) match {
+          case (ByteType | ShortType | IntegerType | LongType,
+                n @ (_: java.lang.Byte | _: java.lang.Short |
+                     _: java.lang.Integer | _: java.lang.Long)) =>
+            Some(n.asInstanceOf[Number].longValue)
+          case (StringType, s: String) => Some(BloomIndex.hash64(s))
+          case _ => None
+        })
+        if (hashed.nonEmpty && hashed.forall(_.isDefined))
+          Some(f.name -> hashed.flatten)
+        else None
+      }
+    filters.flatMap {
+      case sources.And(l, r)     => bloomProbes(schema, Seq(l, r))
+      case sources.EqualTo(c, v) => probe(c, Seq(v))
+      case sources.In(c, vs)     => probe(c, vs.toSeq.filter(_ != null))
+      case _                     => None
+    }
+  }
 
-  /** [[readTableWhereLive]] over a UNION of ranges in ONE scan: the
-    * kept-file set is the union of each range's manifest pruning, read
-    * once with the delete debt applied once — an nProbe-cell ANN probe
-    * is one pruned parquet scan, not nProbe plan branches (the per-cell
-    * union form grew the plan linearly in nProbe once cell counts
-    * scale ∝√N).
+  /** Read the files [[planFiles]] keeps, data files only (no
+    * merge-on-read delete debt applied); the caller still applies its
+    * row-level filter. */
+  def readPruned(spark: SparkSession, ns: String, t: String,
+                 filters: Seq[sources.Filter],
+                 asOf: Option[Long] = None): DataFrame = {
+    val meta = loadTable(ns, t)
+    readKeptFiles(spark, meta, asOf,
+      planFiles(meta, asOf, filters).map(_.path).toSet)
+  }
+
+  /** [[readPruned]] of the head with merge-on-read delete debt applied —
+    * the scan an auxiliary INDEX probe runs once its table can carry
+    * tombstones (a vector removed from the corpus must not surface from
+    * the ANN index, even before compaction pays the debt down). The kept
+    * files are scanned WITH their (file, pos) identity and anti-join the
+    * state's position-delete tuples (each delete file is tiny relative to
+    * the table, so the join broadcasts — same cost argument as
+    * [[readInternal]]'s fold). Position deletes bind to exact
+    * (file_path, pos) pairs and paths are never recycled, so applying ALL
+    * of them to any file subset is order-independent.
     *
-    * `appendOnlyKey`: the caller's DECLARATION that the table is
-    * append-only on that column — a key value is inserted at most once
-    * and never re-inserted after a delete (true by construction for ANN
-    * code tables: vec_ids never recycle). Equality deletes are ordered
-    * in general (a re-inserted key in a later file must survive an
-    * earlier delete — why a flat pruned scan refuses them), but under
-    * the append-only invariant the ordering is VACUOUS: no later file
-    * can re-insert a deleted key, so every equality-delete file keyed
-    * EXACTLY on that column applies to the whole scan as one broadcast
-    * anti-join, the same shape as the position path. Right-to-be-
-    * forgotten events arrive as ids, not (file, pos) pairs — this is
-    * what lets an id-keyed delete reach a pruned index probe without a
-    * rewrite. Equality deletes on any OTHER key (or with no declaration)
-    * still refuse loudly. */
-  def readTableWhereAnyLive(spark: SparkSession, ns: String, t: String,
-                            column: String,
-                            ranges: Seq[(Double, Double)],
-                            appendOnlyKey: Option[String] = None): DataFrame = {
+    * EQUALITY-delete debt is ordered in general (a re-inserted key in a
+    * later file must survive an earlier delete), which a flat pruned scan
+    * cannot honor — refused, unless `appendOnlyKey` declares the table
+    * append-only on that column (a key value is inserted at most once and
+    * never re-inserted after a delete; true by construction for ANN code
+    * tables, whose vec_ids never recycle). Then the ordering is vacuous,
+    * and every PURE equality-delete snapshot keyed exactly on that column
+    * applies to the whole scan as one broadcast anti-join — how an
+    * id-keyed right-to-be-forgotten delete reaches a pruned index probe
+    * without a rewrite. Deletes on any other key, and upsert-shaped
+    * snapshots (equality deletes plus added files in one commit, which
+    * re-insert the keys they delete), still refuse: materialize first
+    * ([[graft.etl.Merge.materialize]]). */
+  def readPrunedLive(spark: SparkSession, ns: String, t: String,
+                     filters: Seq[sources.Filter],
+                     appendOnlyKey: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
     val meta = loadTable(ns, t)
     val snaps = meta.stateAsOf(None)
     val eqSnaps = snaps.filter(sn => sn.deletes.nonEmpty && !sn.isPositionDelete)
-    // an UPSERT-shaped snapshot (equality deletes + added files in one
-    // commit, e.g. Merge.mergeIntoMor) RE-INSERTS the keys it deletes —
-    // under Iceberg's sequence-number rule the new rows survive, but the
-    // order-free broadcast anti-join below would delete them too. The
-    // append-only declaration therefore only covers PURE delete
-    // snapshots: any eq-delete snapshot that also adds data files
-    // refuses loudly rather than silently diverging from readInternal's
-    // ordered fold (the round-12 advice note).
     require(eqSnaps.forall(sn =>
         appendOnlyKey.exists(k => sn.equalityKeys.contains(List(k))) &&
           sn.addedFiles.isEmpty),
@@ -2388,18 +2246,11 @@ class GraftCatalog(val warehouse: String) {
         "keys in the same commit (sequence-ordered semantics) — " +
         "materialize the table first")
     val delFiles = snaps.filter(_.isPositionDelete).flatMap(_.deletes)
-    // skip files in memory against the ALREADY-loaded manifest — the
-    // name-based filesForScan re-parses the full metadata JSON per
-    // call, and the probed-union reads hand this scan hundreds of
-    // point ranges (same predicate, shared overload)
-    val live = meta.filesAsOf(None)
-    val keep = ranges.flatMap { case (lower, upper) =>
-      filesForScan(live, column, lower, upper).map(_.path)
-    }.toSet
+    val keep = planFiles(meta, None, filters).map(_.path).toSet
     val scanned =
-      if (delFiles.isEmpty) readKeptFiles(spark, ns, t, None, keep)
+      if (delFiles.isEmpty) readKeptFiles(spark, meta, None, keep)
       else {
-        val withPos = readKeptFiles(spark, ns, t, None, keep, keepPos = true)
+        val withPos = readKeptFiles(spark, meta, None, keep, keepPos = true)
         val del = spark.read.parquet(delFiles.map(_.path): _*)
         withPos.join(broadcast(del),
             withPos(GraftCatalog.PosFileCol) === del("file_path") &&
@@ -2419,10 +2270,9 @@ class GraftCatalog(val warehouse: String) {
 
   /** Scan the subset `keep` of the table's live files, grouped by the
     * schema version each file was written under (see [[scanAt]]). */
-  private def readKeptFiles(spark: SparkSession, ns: String, t: String,
+  private def readKeptFiles(spark: SparkSession, meta: TableMeta,
                             asOf: Option[Long], keep: Set[String],
                             keepPos: Boolean = false): DataFrame = {
-    val meta = loadTable(ns, t)
     val groups = meta.stateAsOf(asOf)
       .flatMap(sn => sn.addedFiles.map(f => sn.schemaVer -> f.path))
       .filter { case (_, p) => keep(p) }

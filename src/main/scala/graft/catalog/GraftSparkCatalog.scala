@@ -159,11 +159,8 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
         StructType(meta.schema.map(f =>
           if (identityCols.contains(f.name)) f.copy(nullable = false) else f))
       }
-    new GraftSqlTable(cat, catName, ns, ident.name, served,
-      meta.filesAsOf(asOf), morDml, identityCols,
-      meta.spec, meta.currentSchemaVersion.fields, refuseScan,
-      specForFile = meta.specForFile,
-      baseSnapshotId = asOf.getOrElse(meta.currentSnapshotId))
+    new GraftSqlTable(cat, catName, ns, ident.name, served, meta, asOf,
+      morDml, identityCols, refuseScan)
   }
 
   /** CREATE TABLE, optionally `PARTITIONED BY` Iceberg-style hidden
@@ -242,11 +239,8 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     // that causes drift fail instead of the later read
     val ns2 = nsOf(ident)
     val meta = cat.loadTable(ns2, ident.name)
-    new GraftSqlTable(cat, catName, ns2, ident.name, meta.schema,
-      meta.filesAsOf(None), morDml, identityCols,
-      meta.spec, meta.currentSchemaVersion.fields,
-      specForFile = meta.specForFile,
-      baseSnapshotId = meta.currentSnapshotId)
+    new GraftSqlTable(cat, catName, ns2, ident.name, meta.schema, meta,
+      None, morDml, identityCols)
   }
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
@@ -332,23 +326,21 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
 private[catalog] class GraftSqlTable(cat: GraftCatalog, catName: String,
                                      ns: String, tbl: String,
                                      tableSchema: StructType,
-                                     files: Seq[DataFileMeta],
+                                     meta: TableMeta,
+                                     asOf: Option[Long],
                                      morDml: Boolean = false,
                                      identityCols: Seq[String] = Nil,
-                                     spec: Seq[PartitionField] = Nil,
-                                     specFields: Seq[FieldMeta] = Nil,
-                                     refuseScan: Option[String] = None,
-                                     // spec the file was WRITTEN under (spec
-                                     // evolution: prune per-file, not per-table)
-                                     specForFile: DataFileMeta => Seq[PartitionField] = _ => Nil,
-                                     // snapshot `files` was resolved at — the
-                                     // DERIVATION BASE every copy-on-write
-                                     // rewrite below commits with, so a racing
-                                     // append folds in instead of being erased
-                                     baseSnapshotId: Long = 0L)
+                                     refuseScan: Option[String] = None)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsRowLevelOperations with TruncatableTable {
 
+  private val files: Seq[DataFileMeta] = meta.filesAsOf(asOf)
+  private def spec: Seq[PartitionField] = meta.spec
+  private def specFields: Seq[FieldMeta] = meta.currentSchemaVersion.fields
+  // the snapshot `files` was resolved at — the DERIVATION BASE every
+  // copy-on-write rewrite below commits with, so a racing append folds in
+  // instead of being erased
+  private def baseSnapshotId: Long = asOf.getOrElse(meta.currentSnapshotId)
   private def paths: Seq[String] = files.map(_.path)
 
   /** Enforce the serving refusals (MoR debt / schema drift, computed at
@@ -476,17 +468,16 @@ private[catalog] class GraftSqlTable(cat: GraftCatalog, catName: String,
     GraftPruningScanBuilder.parquetBuilder(name(), tableSchema, paths, options)
   }
 
-  /** Scans through SQL prune files at PLAN time from the pushed filters:
-    * partition-tuple projection (hidden partitioning) + footer min/max
-    * bounds — Iceberg's manifest-based scan planning, metadata-only. */
+  /** Scans through SQL prune files at PLAN time from the pushed filters,
+    * through the catalog's one scan planner ([[GraftCatalog.planFiles]]:
+    * partition, then stats, then bloom). */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     // always the pruning builder: it degrades to a plain delegate scan
     // when nothing prunes, and it is what serves metadata-only COUNT(*)
     // (exact per-file row counts exist for every registered file)
     {
       requireServable()
-      new GraftPruningScanBuilder(name(), tableSchema, files, specForFile,
-        specFields, options)
+      new GraftPruningScanBuilder(cat, name(), tableSchema, meta, asOf, options)
     }
 
   import org.apache.spark.sql.sources
@@ -696,17 +687,16 @@ private[catalog] class GraftSqlTable(cat: GraftCatalog, catName: String,
 /** Scan-planning file pruning for the SQL read path. Implements the same
   * catalyst-filter pushdown interface the stock parquet builder does, so
   * NOTHING is lost downstream: the pushed filters are (1) translated to
-  * source filters and used to prune the FILE LIST (partition-tuple
-  * projection through the hidden-partitioning transforms + footer min/max
-  * bounds — Iceberg's manifest-based scan planning, driver-side,
-  * metadata-only, no job), then (2) delegated verbatim to a stock parquet
-  * ScanBuilder over the surviving files, which keeps row-group pushdown,
-  * column pruning, and vectorized reads exactly as before (PlanSpec pins
-  * the PushedFilters transparency). */
+  * source filters and used to prune the FILE LIST through the catalog's
+  * one scan planner ([[GraftCatalog.planFiles]]: partition-tuple
+  * projection through the hidden-partitioning transforms, footer min/max
+  * bounds, then bloom sidecars for point predicates), then (2) delegated
+  * verbatim to a stock parquet ScanBuilder over the surviving files,
+  * which keeps row-group pushdown, column pruning, and vectorized reads
+  * exactly as before (PlanSpec pins the PushedFilters transparency). */
 private[catalog] class GraftPruningScanBuilder(
-    tableName: String, tableSchema: StructType, files: Seq[DataFileMeta],
-    specForFile: DataFileMeta => Seq[PartitionField], specFields: Seq[FieldMeta],
-    options: CaseInsensitiveStringMap)
+    cat: GraftCatalog, tableName: String, tableSchema: StructType,
+    meta: TableMeta, asOf: Option[Long], options: CaseInsensitiveStringMap)
     extends ScanBuilder
     with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
@@ -714,6 +704,7 @@ private[catalog] class GraftPruningScanBuilder(
 
   import org.apache.spark.sql.catalyst.expressions.Expression
 
+  private val files: Seq[DataFileMeta] = meta.filesAsOf(asOf)
   private var inner: ScanBuilder = _
   private var hadFilters = false
   // pushed metadata aggregate: (output schema, the single pre-aggregated row)
@@ -828,14 +819,10 @@ private[catalog] class GraftPruningScanBuilder(
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
     if (inner == null) {
       hadFilters = filters.nonEmpty
-      val translated = filters.flatMap(Partitioning.translateForPruning)
-      val kept = files.filter(f => translated.forall(fl =>
-        Partitioning.keepByPartition(specForFile(f), specFields, f, fl) &&
-          Partitioning.keepByStats(f, tableSchema, fl)))
-      GraftPruningScanBuilder.lastPrune = Some((files.size, kept.size))
-      scanFiles = kept
+      scanFiles = cat.planFiles(meta, asOf,
+        filters.flatMap(Partitioning.translateForPruning))
       inner = GraftPruningScanBuilder.parquetBuilder(
-        tableName, tableSchema, kept.map(_.path), options)
+        tableName, tableSchema, scanFiles.map(_.path), options)
     }
     delegate.pushFilters(filters)
   }
@@ -864,16 +851,32 @@ private[catalog] class GraftPruningScanBuilder(
         }
       case None =>
         // storage-partitioned-join reporting, when sound and opted into
-        GraftKeyedScan.maybeWrap(ensure().build(), scanFiles, specForFile,
-          specFields)
+        GraftKeyedScan.maybeWrap(ensure().build(), scanFiles, meta.specForFile,
+          meta.currentSchemaVersion.fields)
     }
 }
 
 object GraftPruningScanBuilder {
-  /** (candidate, kept) file counts of the most recent pruned scan —
-    * public observability for specs and the meta_partitioned invariants
-    * (diagnostics only; never read by the planner). */
-  @volatile var lastPrune: Option[(Int, Int)] = None
+  /** Distinct data files the scans of `df`'s executed plan read — the
+    * input partitions of each DSv2 batch scan, so a query reports its own
+    * pruning (no shared state between concurrent sessions). Planning runs
+    * once per Dataset: collect from `df` itself, then call this. */
+  def filesScanned(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def paths(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => paths(a.executedPlan)
+      case q: QueryStageExec => paths(q.plan)
+      case b: BatchScanExec => b.inputPartitions.flatMap {
+        case f: FilePartition => f.files.map(_.filePath.toString).toSeq
+        case _ => Nil
+      }
+      case other => (other.children ++ other.subqueries).flatMap(paths)
+    }
+    paths(df.queryExecution.executedPlan).distinct.size
+  }
 
   /** Stock parquet ScanBuilder over an explicit LEAF-file list. Leaf files
     * never trigger Hive partition-column inference, so the

@@ -427,4 +427,32 @@ object Partitioning {
     }
     keep(filter)
   }
+
+  /** `lower <= column <= upper` over DOUBLE bounds as a pruning filter
+    * whose literals carry the column's own type: [[keepByStats]] converts
+    * each literal through the column's type and KEEPS the file when that
+    * fails, so a Double bound on a LONG, INT or DATE column would prune
+    * nothing. Integral and date (days since epoch) bounds round inward,
+    * which keeps exactly the files whose [min, max] meets
+    * [lower, upper]; other column types keep the Double. */
+  def between(schema: StructType, column: String,
+              lower: Double, upper: Double): sources.Filter = {
+    val dt = schema.find(_.name.equalsIgnoreCase(column)).map(_.dataType)
+    def typed(d: Double, isUpper: Boolean): Any = {
+      val r = if (isUpper) math.floor(d) else math.ceil(d)
+      def clamp(lo: Long, hi: Long): Long = math.max(lo, math.min(hi, r.toLong))
+      dt match {
+        case Some(LongType)    => r.toLong
+        case Some(IntegerType) => clamp(Int.MinValue, Int.MaxValue).toInt
+        case Some(ShortType)   => clamp(Short.MinValue, Short.MaxValue).toShort
+        case Some(ByteType)    => clamp(Byte.MinValue, Byte.MaxValue).toByte
+        case Some(DateType)    =>
+          java.time.LocalDate.ofEpochDay(clamp(java.time.LocalDate.MIN.toEpochDay,
+            java.time.LocalDate.MAX.toEpochDay))
+        case _ => d
+      }
+    }
+    sources.And(sources.GreaterThanOrEqual(column, typed(lower, isUpper = false)),
+      sources.LessThanOrEqual(column, typed(upper, isUpper = true)))
+  }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, sources}
 import org.apache.spark.sql.functions._
 
 import graft.catalog.{DataFileMeta, GraftCatalog, TableMeta}
@@ -806,7 +806,7 @@ object IvfPq {
         lit(0.0).as("cos_sim")).limit(0)
     if (probedUnion.isEmpty)
       // empty batch: no cells to probe — return the empty result frame
-      // rather than handing readTableWhereAnyLive a vacuous range set
+      // rather than handing readPrunedLive a vacuous cell set
       return emptyResult()
     // STAGE 1 — approximate shortlist per query. The LIVE read (pruned
     // to the probed union): position-delete tombstones apply exactly as
@@ -817,8 +817,8 @@ object IvfPq {
       element_at(element_at(tbl, m + 1), code + lit(1))
     }.reduce(_ + _)
     val scored = byCell
-      .join(cat.readTableWhereAnyLive(s, ns, s"${table}_ivfpq_codes",
-          "cell", probedUnion.map(c => c.toDouble -> c.toDouble),
+      .join(cat.readPrunedLive(s, ns, s"${table}_ivfpq_codes",
+          Seq(sources.In("cell", probedUnion.toArray[Any])),
           appendOnlyKey = Some("vec_id"))
         .select(col("vec_id").as("neighbor_id"), col("cell"),
           col("codes")), Seq("cell"))
@@ -870,20 +870,18 @@ object IvfPq {
     // (neighbor, cell) pairs are a bounded driver fetch
     // (≤ batch × shortlistK, deduped across queries — the same order
     // as the result the caller collects anyway); their raw vectors
-    // point-fetch through the composed cell-range + vec_id-bloom
-    // pruning ([[GraftCatalog.readTableWhereRangesAndIds]]), so the
+    // point-fetch through the composed cell-stats + vec_id-bloom
+    // pruning ([[GraftCatalog.planFiles]] via [[rawFetch]]), so the
     // raw read tracks the shortlist's file span, never the probed-cell
     // union. Row selection is the JOIN itself — no O(ids) In-filter in
     // the plan.
     val pairs = slim.select("neighbor_id", "cell").distinct().collect()
     if (pairs.isEmpty) return emptyResult()
     val ids = pairs.map(_.getLong(0)).toSeq
-    val cellRanges = pairs.map(_.getLong(1)).distinct.sorted
-      .map(c => c.toDouble -> c.toDouble).toSeq
+    val cells = pairs.map(_.getLong(1)).distinct.sorted.toSeq
     val vecSrc =
       if (cat.tableExists(ns, rawTable(table)))
-        cat.readTableWhereRangesAndIds(s, ns, rawTable(table),
-            "cell", cellRanges, "vec_id", ids)
+        rawFetch(s, cat, ns, rawTable(table), cells, ids)
           .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
       else emb.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("ce"))
@@ -1156,12 +1154,9 @@ object IvfPq {
       // the exact re-rank against the committed raw store: collect the
       // shortlist (a BOUNDED ≤rerank driver fetch — the probed-union
       // precedent) and point-fetch its ids. Pruning composes BOTH
-      // layers ([[GraftCatalog.readTableWhereRangesAndIds]]): the
-      // shortlist rows' own CELLS range-prune the cell-clustered store
-      // exactly (candidates capped at the shortlist's cell span however
-      // many ids probe — bloom-testing a ~500-id set alone compounds
-      // per-id false positives into a kept-fraction floor), then the
-      // vec_id blooms prune within the survivors. Re-rank bytes track
+      // layers ([[rawFetch]]): the shortlist rows' own CELLS prune the
+      // cell-clustered store exactly, then the vec_id blooms prune
+      // within the survivors. Re-rank bytes track
       // the shortlist, not the corpus; the emb fallback below scans
       // EVERY embedding file to retrieve the same ≤rerank rows. The raw
       // row carries its cell (same deterministic assignment the codes
@@ -1171,10 +1166,8 @@ object IvfPq {
       if (ids.isEmpty) rank(emb.limit(0).select(col("vec_id"),
         lit(0L).as("cell"), col("embedding")))
       else {
-        val cellRanges = pairs.map(_.getLong(1)).distinct.sorted
-          .map(c => c.toDouble -> c.toDouble).toSeq
-        val fetched = cat.readTableWhereRangesAndIds(s, ns, rT,
-            "cell", cellRanges, "vec_id", ids)
+        val cells = pairs.map(_.getLong(1)).distinct.sorted.toSeq
+        val fetched = rawFetch(s, cat, ns, rT, cells, ids)
           .filter(col("vec_id").isInCollection(ids))
         // ONE action fetches AND guards: collect the point-fetch
         // (bounded — ≤|shortlist| live ids plus any crash-replay
@@ -1198,10 +1191,28 @@ object IvfPq {
     } else rank(emb.join(broadcast(shortlist), "vec_id"))
   }
 
+  /** COMPOSED point fetch from the cell-clustered raw store:
+    * `cell IN (cells) AND vec_id IN (ids)` through the scan planner —
+    * the cells' stats prune exactly (zero false positives when the
+    * layout clusters on cell) and narrow the candidates FIRST, then the
+    * vec_id bloom sidecars prune within the survivors. This is the
+    * shortlist re-rank shape: bloom-testing a several-hundred-id set
+    * against EVERY file compounds per-id false positives into a
+    * kept-fraction floor (per file, P[any of n ids passes] = 1-(1-p)^n
+    * — at n≈500 even a 1%-FPP bloom keeps a material slice of an
+    * arbitrarily large table), while the cell layer caps candidates at
+    * the ids' OWN cells regardless of |ids|. Data files only: the raw
+    * store carries no delete debt. */
+  private def rawFetch(spark: SparkSession, cat: GraftCatalog, ns: String,
+                       rawT: String, cells: Seq[Long], ids: Seq[Long]): DataFrame =
+    cat.readPruned(spark, ns, rawT, Seq(sources.And(
+      sources.In("cell", cells.toArray[Any]),
+      sources.In("vec_id", ids.toArray[Any]))))
+
   /** The probe-side inverted-list fetch: ONE manifest-pruned read of
     * the codes table over the union of probed cells ([[GraftCatalog
-    * .readTableWhereAnyLive]] keeps only files whose [min,max] on
-    * `cell` touches a probed cell) with the row-level `isin` on top —
+    * .readPrunedLive]] keeps only files whose [min,max] on `cell`
+    * touches a probed cell) with the row-level `isin` on top —
     * at scale this reads ~nProbe/k of the index files and nothing
     * else, and the plan stays a single scan however many cells the
     * √N-sized index probes. The LIVE read also applies any
@@ -1212,8 +1223,8 @@ object IvfPq {
     * identical plain pruned scan. */
   def probedCodes(spark: SparkSession, cat: GraftCatalog, ns: String,
                   table: String, cells: Seq[Long]): DataFrame =
-    cat.readTableWhereAnyLive(spark, ns, s"${table}_ivfpq_codes", "cell",
-        cells.map(c => c.toDouble -> c.toDouble),
+    cat.readPrunedLive(spark, ns, s"${table}_ivfpq_codes",
+        Seq(sources.In("cell", cells.toArray[Any])),
         // codes tables are append-only on vec_id BY CONSTRUCTION (ids
         // never recycle), so id-keyed equality tombstones — the shape
         // right-to-be-forgotten events actually arrive in — fold into

@@ -26,8 +26,8 @@ import graft.catalog.{GraftCatalog, TableMeta}
   *    table: scoring needs (tf, df, len, N, Σlen) and nothing else, so
   *    a probe's plan is postings-only. Written range-CLUSTERED on
   *    (term, doc_id) so each file covers a narrow term range and the
-  *    catalog's truncated string footer stats ([[GraftCatalog
-  *    .filesForScanStringAny]]) prune a query's terms to a few files.
+  *    catalog's truncated string footer stats (the scan planner,
+  *    [[GraftCatalog.planFiles]]) prune a query's terms to a few files.
   *  - `<t>_stats(n_docs BIGINT, sum_len BIGINT)` — append-only DELTA
   *    rows (one per build/append commit) summed at read time, so
   *    incremental maintenance never rewrites statistics. N and Σlen
@@ -318,17 +318,20 @@ object TextIndex {
     * fraction the scale smoke reports and specs pin. */
   def termFiles(cat: GraftCatalog, ns: String, table: String,
                 terms: Seq[String]): (Int, Int) = {
-    val live = cat.loadTable(ns, s"${table}_postings").filesAsOf(None)
-    (cat.filesForScanStringAny(live, "term", terms).size, live.size)
+    val meta = cat.loadTable(ns, s"${table}_postings")
+    (cat.planFiles(meta, None, termsIn(terms)).size,
+      meta.filesAsOf(None).size)
   }
+
+  private def termsIn(terms: Seq[String]) =
+    Seq(org.apache.spark.sql.sources.In("term", terms.toArray[Any]))
 
   /** The pruned postings scan for a query's terms: manifest string-stats
     * pruning to the file union, then the row-level In filter (parquet
     * pushdown inside the survivors). */
   def postingsFor(spark: SparkSession, cat: GraftCatalog, ns: String,
                   table: String, terms: Seq[String]): DataFrame =
-    cat.readTableWhereStringAny(spark, ns, s"${table}_postings", "term",
-        terms)
+    cat.readPruned(spark, ns, s"${table}_postings", termsIn(terms))
       .filter(col("term").isInCollection(terms))
 
   /** Corpus statistics as ONE row: the sum of the committed deltas. */

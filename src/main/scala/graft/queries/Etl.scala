@@ -190,12 +190,11 @@ object Etl {
     val (ot, lt) = bucketFixture(s, d)
     val joined = s.table(ot).hint("merge")
       .join(s.table(lt), col("o_orderkey") === col("l_orderkey"))
-    val joinShuffles = {
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try joined.queryExecution.executedPlan
-        .collect { case e: ShuffleExchangeLike => e }.size
-      finally s.conf.set("spark.sql.adaptive.enabled", "true")
-    }
+    val joinShuffles =
+      graft.GraftSession.withConfs(s, "spark.sql.adaptive.enabled" -> "false") {
+        joined.queryExecution.executedPlan
+          .collect { case e: ShuffleExchangeLike => e }.size
+      }
     joined.groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_items"), round(sum(col("l_quantity")), 2).as("sum_qty"))
       .withColumn("colocated", lit(joinShuffles == 0))
@@ -220,13 +219,13 @@ object Etl {
     val part = s.read.parquet(base.resolve("part").toString)
     val day = part.agg(min(col("event_date"))).head().getDate(0)
     val q = part.filter(col("event_date") === lit(day))
-    val pruned = {
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try q.queryExecution.executedPlan.collect {
-        case f: FileSourceScanExec => f
-      }.forall(f => f.partitionFilters.nonEmpty && f.selectedPartitions.partitionCount == 1)
-      finally s.conf.set("spark.sql.adaptive.enabled", "true")
-    }
+    val pruned =
+      graft.GraftSession.withConfs(s, "spark.sql.adaptive.enabled" -> "false") {
+        q.queryExecution.executedPlan.collect {
+          case f: FileSourceScanExec => f
+        }.forall(f => f.partitionFilters.nonEmpty &&
+          f.selectedPartitions.partitionCount == 1)
+      }
     q.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
       .withColumn("pruned", lit(pruned))
@@ -333,10 +332,13 @@ object Etl {
       col("l_partkey") >= pxLo && col("l_partkey") <= pxHi
     val expected = li.filter(rowPred).count()
     val rows = Seq("linear", "zorder", "hilbert").map { name =>
-      val keptX = cat.filesForScan("layout", name, "l_orderkey", oxLo, oxHi)
-        .map(_.path).toSet
-      val keptY = cat.filesForScan("layout", name, "l_partkey", pxLo, pxHi)
-        .map(_.path).toSet
+      val meta = cat.loadTable("layout", name)
+      def kept(column: String, lo: Double, hi: Double): Set[String] =
+        cat.planFiles(meta, None,
+          Seq(graft.catalog.Partitioning.between(meta.schema, column, lo, hi)))
+          .map(_.path).toSet
+      val keptX = kept("l_orderkey", oxLo, oxHi)
+      val keptY = kept("l_partkey", pxLo, pxHi)
       val keptBoth = (keptX intersect keptY).toSeq.sorted
       val got = s.read.schema(li.schema).parquet(keptBoth: _*)
         .filter(rowPred).count()

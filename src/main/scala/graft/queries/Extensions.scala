@@ -1147,19 +1147,11 @@ object Extensions {
     * the SNAPSHOTS (not hardcoded defaults) afterwards, so an embedded
     * caller running with AQE off — or a non-default broadcast threshold —
     * gets its session back unchanged. */
-  private[queries] def withSpjConfs[T](s: SparkSession)(body: => T): T = {
-    val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> s.conf.getOption(k))
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+  private[queries] def withSpjConfs[T](s: SparkSession)(body: => T): T =
+    graft.GraftSession.withConfs(s,
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   /** q_dedup_pipeline: the FULL industrial dedup pipeline in one declared
     * query — tokenize → banded MinHash (4 bands × 4 hashes) → LSH bucket
@@ -1847,7 +1839,7 @@ object Extensions {
     * recycle), which makes the ordering vacuous: the catalog read folds
     * ALL equality tombstones as one broadcast anti-join on the key,
     * beside the position path ([[graft.catalog.GraftCatalog
-    * .readTableWhereAnyLive]]'s `appendOnlyKey` declaration; deletes on
+    * .readPrunedLive]]'s `appendOnlyKey` declaration; deletes on
     * any other key still refuse). The probe is the DEPLOYMENT shape
     * (the round-12 verdict item: this row previously spanned the full
     * cell range as a fixture choice): [[graft.operators.IvfPq.search]]

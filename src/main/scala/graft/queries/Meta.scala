@@ -3,7 +3,7 @@ package graft.queries
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, sources}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.Tables.QFn
@@ -728,23 +728,23 @@ object Meta {
       classOf[graft.catalog.GraftSparkCatalog].getName)
     s.conf.set(s"spark.sql.catalog.$cname.warehouse", cat.warehouse)
     try {
-      import graft.catalog.GraftPruningScanBuilder
+      import graft.catalog.GraftPruningScanBuilder.filesScanned
+      // each probe reads its kept-file count off its own executed plan
+      val cand = files.size
       // probe 1: a SOURCE-column date range prunes to one year's buckets
-      GraftPruningScanBuilder.lastPrune = None
-      val rangeN = s.sql(
+      val rangeQ = s.sql(
         s"""SELECT count(*) FROM $cname.nyc.li_part
            |WHERE l_shipdate >= DATE'1997-01-01'
-           |  AND l_shipdate < DATE'1997-07-01'""".stripMargin).as[Long].head()
-      val rangePrunes = GraftPruningScanBuilder.lastPrune.exists {
-        case (cand, kept) => kept < cand && kept > 0 } && rangeN > 0
+           |  AND l_shipdate < DATE'1997-07-01'""".stripMargin)
+      val rangeN = rangeQ.collect().head.getLong(0)
+      val rangeKept = filesScanned(rangeQ)
+      val rangePrunes = rangeKept < cand && rangeKept > 0 && rangeN > 0
       // probe 2: a point lookup on the bucketed key scans one bucket per year
-      GraftPruningScanBuilder.lastPrune = None
       val key = li.select("l_suppkey").head().getLong(0)
-      val pointN = s.sql(
+      val pointQ = s.sql(
         s"SELECT count(*) FROM $cname.nyc.li_part WHERE l_suppkey = $key")
-        .as[Long].head()
-      val bucketPrunes = GraftPruningScanBuilder.lastPrune.exists {
-        case (cand, kept) => kept <= cand / 2 } &&
+      val pointN = pointQ.collect().head.getLong(0)
+      val bucketPrunes = filesScanned(pointQ) <= cand / 2 &&
         pointN == li.where($"l_suppkey" === key).count()
       // the oracle-checked result: aggregate over the PRUNED read path,
       // invariants as literal columns (DuckDB supplies `true`)
@@ -808,7 +808,6 @@ object Meta {
 
   private def metaSpecEvolution: QFn = (s, d) => {
     import s.implicits._
-    import org.apache.spark.sql.sources
     // l_shipdate is a TIMESTAMP spanning 1995..2001 (TESTDATA.md)
     def t(v: String) = java.sql.Timestamp.valueOf(v + " 00:00:00")
     val cut = t("1998-01-01")
@@ -836,7 +835,7 @@ object Meta {
     // one source-column predicate prunes BOTH eras, each through its own
     // spec: only 1995 files (spec 1, year granularity) can survive
     val f95: sources.Filter = sources.LessThan("l_shipdate", t("1996-01-01"))
-    val kept95 = cat.prunedFiles("nyc", "li_evo", Seq(f95))
+    val kept95 = cat.planFiles(cat.loadTable("nyc", "li_evo"), None, Seq(f95))
     val prunesBoth = kept95.nonEmpty && kept95.size < allFiles.size &&
       kept95.forall(_.specId.contains(1))
     // a predicate inside era B prunes at MONTH grain — finer than any
@@ -844,7 +843,7 @@ object Meta {
     val fMonth: sources.Filter = sources.And(
       sources.GreaterThanOrEqual("l_shipdate", t("1999-03-01")),
       sources.LessThan("l_shipdate", t("1999-04-01")))
-    val keptM = cat.prunedFiles("nyc", "li_evo", Seq(fMonth))
+    val keptM = cat.planFiles(cat.loadTable("nyc", "li_evo"), None, Seq(fMonth))
     val monthGrain = keptM.nonEmpty && keptM.forall(_.specId.contains(2)) &&
       keptM.forall(_.partition.exists(_.get("l_shipdate_month")
         .exists(m => m == "1999-03" || m == "1999-02" || m == "1999-04")))
@@ -863,7 +862,7 @@ object Meta {
     val extra = base.resolve("flat")
     eraB.limit(10).coalesce(1).write.parquet(extra.toString)
     cat.registerFiles("nyc", "li_evo", Seq(extra))
-    val keptAfter = cat.prunedFiles("nyc", "li_evo", Seq(f95))
+    val keptAfter = cat.planFiles(cat.loadTable("nyc", "li_evo"), None, Seq(f95))
     val flatKept = nowUnpartitioned &&
       keptAfter.filter(_.partition.nonEmpty).forall(_.specId.contains(1)) &&
       // partition pruning ALONE must keep the tuple-less flat file — only
@@ -1066,16 +1065,11 @@ object Meta {
          |GROUP BY o.o_orderpriority""".stripMargin)
     def shuffles(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.executedPlan.collect { case e: ShuffleExchangeLike => e }.size
-    def scoped[T](spj: Boolean)(body: => T): T = {
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", spj.toString)
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try body finally {
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
-        s.conf.set("spark.sql.adaptive.enabled", "true")
-        s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      }
-    }
+    def scoped[T](spj: Boolean)(body: => T): T =
+      graft.GraftSession.withConfs(s,
+        "spark.sql.sources.v2.bucketing.enabled" -> spj.toString,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
     val (spjRows, spjShuffles) = scoped(spj = true) {
       (q.orderBy("o_orderpriority").collect().toSeq, shuffles(q)) }
     val (ctlRows, ctlShuffles) = scoped(spj = false) {
@@ -1749,12 +1743,17 @@ object Meta {
     val mid = (mm.getLong(0) + mm.getLong(1)) / 2
     val probe = li.filter(col("l_orderkey") <= mid)
       .agg(max("l_orderkey")).head().getLong(0)
-    val total = cat.files("nyc", t).size.toLong
-    val rangeKept = cat.filesForScan("nyc", t, "l_orderkey",
-      probe.toDouble, probe.toDouble).size.toLong
-    val bloomKept = cat.filesForScanEquals(s, "nyc", t, "l_orderkey", probe)
+    val meta = cat.loadTable("nyc", t)
+    val total = meta.filesAsOf(None).size.toLong
+    // a closed range (not `=`) is the stats-only baseline: the planner's
+    // bloom layer tests point predicates only
+    val rangeKept = cat.planFiles(meta, None, Seq(sources.And(
+      sources.GreaterThanOrEqual("l_orderkey", probe),
+      sources.LessThanOrEqual("l_orderkey", probe)))).size.toLong
+    val point = (c: String, v: Any) => Seq(sources.EqualTo(c, v))
+    val bloomKept = cat.planFiles(meta, None, point("l_orderkey", probe))
       .size.toLong
-    val pruned = cat.readTableWhereEquals(s, "nyc", t, "l_orderkey", probe)
+    val pruned = cat.readPruned(s, "nyc", t, point("l_orderkey", probe))
       .filter(col("l_orderkey") === probe).count()
     val full = cat.readTable(s, "nyc", t)
       .filter(col("l_orderkey") === probe).count()
@@ -1762,10 +1761,9 @@ object Meta {
     // md5-60 bloom; string footer ranges may or may not prune on their
     // own (lexicographic order over digit strings), so the pin is
     // against TOTAL, not the range-kept count
-    val keptStr = cat.filesForScanEqualsString(s, "nyc", t, "okey_str",
-      probe.toString).size.toLong
-    val prunedStr = cat.readTableWhereEqualsString(s, "nyc", t, "okey_str",
-        probe.toString)
+    val keptStr = cat.planFiles(meta, None,
+      point("okey_str", probe.toString)).size.toLong
+    val prunedStr = cat.readPruned(s, "nyc", t, point("okey_str", probe.toString))
       .filter(col("okey_str") === probe.toString).count()
     Seq((total, rangeKept, bloomKept < rangeKept, pruned, full,
         pruned == full && pruned > 0,
@@ -1793,8 +1791,11 @@ object Meta {
     cat.createTable("nyc", "li_split", li.schema)
     cat.registerFiles("nyc", "li_split", parts)
     val total = cat.files("nyc", "li_split").size.toLong
-    val kept = cat.filesForScan("nyc", "li_split", "l_orderkey", 1, mid / 2).size.toLong
-    val prunedCount = cat.readTableWhere(s, "nyc", "li_split", "l_orderkey", 1, mid / 2)
+    val lowHalf = Seq(graft.catalog.Partitioning.between(li.schema,
+      "l_orderkey", 1, mid / 2))
+    val kept = cat.planFiles(cat.loadTable("nyc", "li_split"), None,
+      lowHalf).size.toLong
+    val prunedCount = cat.readPruned(s, "nyc", "li_split", lowHalf)
       .filter(col("l_orderkey") <= mid / 2).count()
     val fullCount = cat.readTable(s, "nyc", "li_split")
       .filter(col("l_orderkey") <= mid / 2).count()
@@ -1810,10 +1811,11 @@ object Meta {
     cat.createTable("nyc", "li_split_str", lis.schema)
     cat.registerFiles("nyc", "li_split_str", sparts)
     val strTotal = cat.files("nyc", "li_split_str").size.toLong
-    val strKept = cat.filesForScanString(
-      "nyc", "li_split_str", "l_returnflag", "A", "B").size.toLong
-    val strPruned = cat.readTableWhereString(
-        s, "nyc", "li_split_str", "l_returnflag", "A", "B")
+    val flagAB = Seq(sources.And(sources.GreaterThanOrEqual("l_returnflag", "A"),
+      sources.LessThanOrEqual("l_returnflag", "B")))
+    val strKept = cat.planFiles(cat.loadTable("nyc", "li_split_str"), None,
+      flagAB).size.toLong
+    val strPruned = cat.readPruned(s, "nyc", "li_split_str", flagAB)
       .filter(col("l_returnflag").between("A", "B")).count()
     val strFull = cat.readTable(s, "nyc", "li_split_str")
       .filter(col("l_returnflag").between("A", "B")).count()

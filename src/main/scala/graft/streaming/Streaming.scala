@@ -120,16 +120,12 @@ object Streaming {
     * table and the run is EXACT-ROWS oracle-checked (like
     * st_dedup_rocksdb), not merely rows>0. */
   def stWatermarkRocks: QFn = (s, d) => {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try stWatermarkWith("st_watermark_rocks_sink")(s, d)
-    finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None    => s.conf.unset(key)
-    }
+    graft.GraftSession.withConfs(s, RocksProvider)(
+      stWatermarkWith("st_watermark_rocks_sink")(s, d))
   }
+
+  private val RocksProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** st_dedup: dropDuplicatesWithinWatermark on event ids — duplicates in
     * later micro-batches (within the watermark) are suppressed. */
@@ -161,15 +157,8 @@ object Streaming {
     * exactly this stream; results must be identical to [[stDedup]], which
     * the oracle (fixed expected rows) and StreamingSpec both check. */
   def stDedupRocks: QFn = (s, d) => {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try stDedupWith("st_dedup_rocks_sink")(s, d)
-    finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None    => s.conf.unset(key)
-    }
+    graft.GraftSession.withConfs(s, RocksProvider)(
+      stDedupWith("st_dedup_rocks_sink")(s, d))
   }
 
   /** st_sessionize: custom keyed state via flatMapGroupsWithState — the

@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** GraftSession must encode the tuned envelope (BASELINE.md). */
-class GraftSessionSpec extends AnyFunSuite {
+class GraftSessionSpec extends SparkSpec {
   test("builder applies the reference envelope and our extensions") {
     // inspect the builder's config without starting a second SparkContext
     val spark = SparkSpec.session // shared session stays untouched
@@ -38,5 +37,27 @@ class GraftSessionSpec extends AnyFunSuite {
     a.range(3).createOrReplaceTempView("only_in_a")
     assert(a.catalog.tableExists("only_in_a"))
     assert(!b.catalog.tableExists("only_in_a"))
+  }
+
+  test("scoped confs put back the caller's values, not Spark's defaults") {
+    val s = SparkSpec.session.newSession()
+    val keys = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.sources.v2.bucketing.enabled")
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "12345")
+    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    def current = keys.map(k => k -> s.conf.getOption(k))
+    val before = current
+    GraftSession.withConfs(s, "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      assert(s.conf.get("spark.sql.autoBroadcastJoinThreshold") === "-1")
+    }
+    assert(current === before)
+    // the declared queries that scope confs around a plan probe
+    graft.queries.Meta.queries("meta_spj")(s, sfDir).collect()
+    assert(current === before, "meta_spj changed the caller's confs")
+    graft.queries.Etl.queries("etl_bucket_join")(s, sfDir).collect()
+    assert(current === before, "etl_bucket_join changed the caller's confs")
   }
 }

@@ -3,6 +3,7 @@ package graft.catalog
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources
 
 import graft.SparkSpec
 
@@ -11,6 +12,8 @@ import graft.SparkSpec
   * sidecar build, conservative fallbacks, and pruning on the layout
   * range stats are blind to. */
 class BloomIndexSpec extends SparkSpec {
+
+  private def point(c: String, v: Any) = Seq(sources.EqualTo(c, v))
 
   test("canonicalKey: authority preserved, local scheme stripped, percent-encoding decoded, raw fallback") {
     // local file URIs in every spelling collapse to the plain path
@@ -78,19 +81,20 @@ class BloomIndexSpec extends SparkSpec {
     cat.createNamespace("b")
     scatteredTable(cat, "b", "t", withBlooms = true)
     val probe = 399L // interior id, residue 3
-    assert(cat.filesForScan(cat.loadTable("b", "t").filesAsOf(None),
-      "id", probe.toDouble, probe.toDouble).size === 4,
+    val meta = cat.loadTable("b", "t")
+    assert(cat.planFiles(meta, None,
+      Seq(Partitioning.between(meta.schema, "id", probe.toDouble, probe.toDouble))).size === 4,
       "fixture broken: range stats were supposed to be blind here")
-    val kept = cat.filesForScanEquals(spark, "b", "t", "id", probe)
+    val kept = cat.planFiles(meta, None, point("id", probe))
     assert(kept.size < 4, s"bloom kept ${kept.size}/4 files — no pruning")
     assert(kept.exists(_.path.contains("/r3/")),
       "the file actually holding the id must survive")
-    val rows = cat.readTableWhereEquals(spark, "b", "t", "id", probe)
+    val rows = cat.readPruned(spark, "b", "t", point("id", probe))
       .filter(col("id") === probe).collect()
     assert(rows.map(_.getString(1)).toSeq === Seq("v399"))
     // an id that is in NO file: every bloom may reject it (exactness
     // comes from the row filter either way)
-    val none = cat.readTableWhereEquals(spark, "b", "t", "id", 12345L)
+    val none = cat.readPruned(spark, "b", "t", point("id", 12345L))
       .filter(col("id") === 12345L).count()
     assert(none === 0L)
   }
@@ -130,10 +134,11 @@ class BloomIndexSpec extends SparkSpec {
           BloomIndex.hash64(s"uuid-$i")),
         s"false negative: uuid-$i absent from its holder's bloom")
     }
-    val kept = cat.filesForScanEqualsString(spark, "b", "t", "sid", "uuid-37")
+    val kept = cat.planFiles(cat.loadTable("b", "t"), None,
+      point("sid", "uuid-37"))
     assert(kept.exists(_.path.contains("/r1/")), "the holder file was pruned")
     assert(kept.size < 4, s"string bloom kept ${kept.size}/4 — no pruning")
-    val rows = cat.readTableWhereEqualsString(spark, "b", "t", "sid", "uuid-37")
+    val rows = cat.readPruned(spark, "b", "t", point("sid", "uuid-37"))
       .filter(col("sid") === "uuid-37").collect()
     assert(rows.map(_.getLong(0)).toSeq === Seq(37L))
   }
@@ -159,12 +164,13 @@ class BloomIndexSpec extends SparkSpec {
     cat.createTable("b", "t", df.schema)
     cat.registerFilesWithBlooms(spark, "b", "t",
       (0 until 4).map(r => base.resolve(s"part $r")), Seq("id"))
-    val kept = cat.filesForScanEquals(spark, "b", "t", "id", 399L)
+    val kept = cat.planFiles(cat.loadTable("b", "t"), None,
+      point("id", 399L))
     assert(kept.size < 4, s"bloom kept ${kept.size}/4 files under an " +
       "encodable path — the sidecar keys never matched")
     assert(kept.exists(_.path.contains("/part 3/")),
       "the file actually holding the id must survive")
-    assert(cat.readTableWhereEquals(spark, "b", "t", "id", 399L)
+    assert(cat.readPruned(spark, "b", "t", point("id", 399L))
       .filter(col("id") === 399L).count() === 1L)
   }
 
@@ -184,7 +190,7 @@ class BloomIndexSpec extends SparkSpec {
     Seq(("/data/f1.parquet", "id", zeros.length * 8, 0, zeros))
       .toDF("file", "column", "m", "k", "bits").coalesce(1).write.parquet(sc)
     val f1 = DataFileMeta("/data/f1.parquet", 1L, 1L, bloomPath = Some(sc))
-    assert(BloomIndex.kept(spark, Seq(f1), "id", 42L) === Seq(f1))
+    assert(BloomIndex.keptAny(Seq(f1), Seq("id" -> Seq(42L))) === Seq(f1))
     // a geometry mismatch (declared m != carried bits) fails loudly
     // instead of probing the wrong positions
     val bad = dir.resolve("sidecar_bad").toString
@@ -192,7 +198,7 @@ class BloomIndexSpec extends SparkSpec {
       .toDF("file", "column", "m", "k", "bits").coalesce(1).write.parquet(bad)
     val f2 = DataFileMeta("/data/f2.parquet", 1L, 1L, bloomPath = Some(bad))
     val e = intercept[IllegalArgumentException] {
-      BloomIndex.kept(spark, Seq(f2), "id", 42L)
+      BloomIndex.keptAny(Seq(f2), Seq("id" -> Seq(42L)))
     }
     assert(e.getMessage.contains("declares m=4096"))
   }
@@ -214,16 +220,17 @@ class BloomIndexSpec extends SparkSpec {
       Seq(dir.resolve("x")), Seq("id"))
     // a probe only in the bloom-less half: all 4 legacy files kept
     // (conservative), the bloomed file pruned by its bloom
-    val kept = cat.filesForScanEquals(spark, "b", "mixed", "id", 399L)
+    val kept = cat.planFiles(cat.loadTable("b", "mixed"), None,
+      point("id", 399L))
     assert(kept.count(_.bloomPath.isEmpty) === 4)
     assert(kept.count(_.bloomPath.nonEmpty) === 0,
       "the bloomed commit's file holds only 800/801 — must be pruned")
     // a column with no bloom rows falls back to keep-everything
-    val keptPayload = BloomIndex.kept(spark,
-      cat.loadTable("b", "mixed").filesAsOf(None), "payload", 1L)
+    val keptPayload = BloomIndex.keptAny(
+      cat.loadTable("b", "mixed").filesAsOf(None), Seq("payload" -> Seq(1L)))
     assert(keptPayload.size === 5)
     // reads stay exact across the mixed commits
-    assert(cat.readTableWhereEquals(spark, "b", "mixed", "id", 800L)
+    assert(cat.readPruned(spark, "b", "mixed", point("id", 800L))
       .filter(col("id") === 800L).count() === 1L)
   }
 }

@@ -3,6 +3,7 @@ package graft.catalog
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
+import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
 
 /** Catalog semantics per the reference (FIXTURES.md §2): create → append →
@@ -10,6 +11,17 @@ import org.apache.spark.sql.types._
   * empty-folder skip; per-folder error isolation.
   */
 class GraftCatalogSpec extends SparkSpec {
+
+  private def idRange(cat: GraftCatalog, lo: Double, hi: Double) = {
+    val meta = cat.loadTable("nyc", "t")
+    cat.planFiles(meta, None,
+      Seq(Partitioning.between(meta.schema, "id", lo, hi)))
+  }
+  private def nameBetween(lo: String, hi: String) =
+    Seq(sources.And(sources.GreaterThanOrEqual("name", lo),
+      sources.LessThanOrEqual("name", hi)))
+  private def nameRange(cat: GraftCatalog, lo: String, hi: String) =
+    cat.planFiles(cat.loadTable("nyc", "ts"), None, nameBetween(lo, hi))
 
   private def freshDirs() = {
     val base = Files.createTempDirectory(Paths.get("/root/repo/target"), "cat_spec")
@@ -194,15 +206,16 @@ class GraftCatalogSpec extends SparkSpec {
     val cat = new GraftCatalog(wh.toString)
     cat.importFolders(spark, data.toString)
 
-    val hit = cat.filesForScan("nyc", "t", "id", 12, 15)
+    val hit = idRange(cat, 12, 15)
     assert(hit.size === 1 && hit.head.path.endsWith("f2.parquet"))
-    assert(cat.readTableWhere(spark, "nyc", "t", "id", 12, 15).count() === 2) // file rows
-    assert(cat.filesForScan("nyc", "t", "id", 0, 100).size === 3)
-    assert(cat.filesForScan("nyc", "t", "id", 500, 600).isEmpty)
+    assert(cat.readPruned(spark, "nyc", "t",
+      Seq(Partitioning.between(cat.loadTable("nyc", "t").schema, "id", 12, 15))).count() === 2) // file rows
+    assert(idRange(cat, 0, 100).size === 3)
+    assert(idRange(cat, 500, 600).isEmpty)
     // a file registered without stats is never skipped
     cat.append("nyc", "t", Seq(DataFileMeta(
       tdir.resolve("f1.parquet").toString, 1L, 3L)))
-    assert(cat.filesForScan("nyc", "t", "id", 500, 600).size === 1)
+    assert(idRange(cat, 500, 600).size === 1)
   }
 
   test("truncated string footer bounds enable file skipping") {
@@ -223,14 +236,13 @@ class GraftCatalogSpec extends SparkSpec {
     val cat = new GraftCatalog(wh.toString)
     cat.importFolders(spark, data.toString)
     // predicate on the low half prunes the zebra/zulu file
-    val hit = cat.filesForScanString("nyc", "ts", "name", "a", "m")
+    val hit = nameRange(cat, "a", "m")
     assert(hit.size === 1 && hit.head.path.endsWith("s1.parquet"))
     // the truncated max is still a valid upper bound: a lower bound equal
     // to the 16-char prefix (true values extend past it) keeps the file
-    assert(cat.filesForScanString(
-      "nyc", "ts", "name", "zulu-" + "y" * 11, "zz").size === 1)
-    assert(cat.filesForScanString("nyc", "ts", "name", "a", "zzzz").size === 2)
-    assert(cat.readTableWhereString(spark, "nyc", "ts", "name", "a", "m")
+    assert(nameRange(cat, "zulu-" + "y" * 11, "zz").size === 1)
+    assert(nameRange(cat, "a", "zzzz").size === 2)
+    assert(cat.readPruned(spark, "nyc", "ts", nameBetween("a", "m"))
       .count() === 3)
     // bounds themselves are truncated to 16 chars
     val rg = cat.files("nyc", "ts").flatMap(_.strRanges).flatMap(_.get("name"))
@@ -238,7 +250,7 @@ class GraftCatalogSpec extends SparkSpec {
     // a file registered without string stats is never skipped
     cat.append("nyc", "ts", Seq(DataFileMeta(
       tdir.resolve("s1.parquet").toString, 1L, 3L)))
-    assert(cat.filesForScanString("nyc", "ts", "name", "qq", "qr").size === 1)
+    assert(nameRange(cat, "qq", "qr").size === 1)
   }
 
   test("string bound truncation laws hold on generated strings") {

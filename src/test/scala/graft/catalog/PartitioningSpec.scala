@@ -12,6 +12,9 @@ import org.apache.spark.sql.types._
   * side), inclusive-projection pruning, and the partitioned write/read
   * round trip through both the programmatic and the SQL catalog paths. */
 class PartitioningSpec extends SparkSpec {
+
+  private def plan(cat: GraftCatalog, t: String, filters: Seq[sources.Filter]) =
+    cat.planFiles(cat.loadTable("nyc", t), None, filters)
   import spark.implicits._
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
@@ -105,7 +108,7 @@ class PartitioningSpec extends SparkSpec {
       sources.EqualTo("ts", ts("2024-01-16 12:00:00"))))
   }
 
-  test("partitioned write records tuples; prunedFiles projects predicates") {
+  test("partitioned write records tuples; planFiles projects predicates") {
     val base = Files.createTempDirectory(Paths.get("/root/repo/target"), "partcat")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     val days = Seq("2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04")
@@ -121,15 +124,15 @@ class PartitioningSpec extends SparkSpec {
       t.contains("ts_day") && t.contains("id_bucket"))))
     assert(files.map(_.partition.get("ts_day")).distinct.sorted === days)
     // day equality keeps only that day's buckets
-    val oneDay = cat.prunedFiles("nyc", "ev",
+    val oneDay = plan(cat, "ev",
       Seq(sources.EqualTo("ts", ts("2024-01-02 05:00:00"))))
     assert(oneDay.nonEmpty &&
       oneDay.forall(_.partition.get("ts_day") == "2024-01-02"))
     // a range over two days keeps exactly those two days: the inclusive
     // projection of `< 01-04 00:00` keeps the boundary day (rows inside
     // the 01-04 partition COULD fall below the cut), then the footer
-    // min/max stats veto it — partition + stats compose in prunedFiles
-    val twoDays = cat.prunedFiles("nyc", "ev", Seq(
+    // min/max stats veto it — partition + stats compose in planFiles
+    val twoDays = plan(cat, "ev", Seq(
       sources.GreaterThanOrEqual("ts", ts("2024-01-02 00:00:00")),
       sources.LessThan("ts", ts("2024-01-04 00:00:00"))))
     assert(twoDays.map(_.partition.get("ts_day")).distinct.sorted ===
@@ -146,7 +149,7 @@ class PartitioningSpec extends SparkSpec {
       "footer stats must veto the boundary partition's files")
     // bucket equality keeps one bucket per day
     val bucketOf7 = Partitioning.canonical("bucket[4]", LongType, 7L).get
-    val onlyId7 = cat.prunedFiles("nyc", "ev", Seq(sources.EqualTo("id", 7L)))
+    val onlyId7 = plan(cat, "ev", Seq(sources.EqualTo("id", 7L)))
     assert(onlyId7.nonEmpty &&
       onlyId7.forall(_.partition.get("id_bucket") == bucketOf7))
     // reading the pruned file list returns exactly the matching rows
@@ -176,13 +179,13 @@ class PartitioningSpec extends SparkSpec {
     assert(s2.forall(_.partition.exists(_.contains("id_bucket"))))
     // a ts predicate prunes era-1 files by day; era-2 files pass partition
     // pruning (their spec has no ts field) and are vetoed by footer stats
-    val janOnly = cat.prunedFiles("nyc", "evo",
+    val janOnly = plan(cat, "evo",
       Seq(sources.EqualTo("ts", ts("2024-01-01 03:00:00"))))
     assert(janOnly.nonEmpty && janOnly.forall(_.specId.contains(1)))
     // an id predicate prunes era-2 files by bucket; era-1 kept (no id field
     // in spec 1, id stats overlap) — per-file spec resolution at work
     val bucketOf3 = Partitioning.canonical("bucket[4]", LongType, 3L).get
-    val id3 = cat.prunedFiles("nyc", "evo", Seq(sources.EqualTo("id", 3L)))
+    val id3 = plan(cat, "evo", Seq(sources.EqualTo("id", 3L)))
     assert(id3.filter(_.specId.contains(2))
       .forall(_.partition.get("id_bucket") == bucketOf3))
     assert(id3.count(_.specId.contains(2)) < s2.size)
@@ -230,30 +233,26 @@ class PartitioningSpec extends SparkSpec {
       assert(files.forall(_.partition.isDefined))
       // a source-column predicate prunes files at plan time (hidden
       // partitioning: the query never names ts_day)
-      GraftPruningScanBuilder.lastPrune = None
-      val day2 = spark.sql(
+      val day2Q = spark.sql(
         s"SELECT count(*) FROM $c.nyc.ev " +
           "WHERE ts >= TIMESTAMP'2024-01-02 00:00:00' " +
           "AND ts < TIMESTAMP'2024-01-03 00:00:00'")
-        .as[Long].head()
-      assert(day2 === 20)
-      val (cand, kept) = GraftPruningScanBuilder.lastPrune.get
-      assert(cand === files.size && kept < cand,
-        s"expected pruning, got $kept/$cand")
+      assert(day2Q.collect().head.getLong(0) === 20)
+      val kept = GraftPruningScanBuilder.filesScanned(day2Q)
+      assert(kept < files.size, s"expected pruning, got $kept/${files.size}")
       assert(kept === files.count(_.partition.get("ts_day") == "2024-01-02"))
       // bucket pruning on a point lookup
-      GraftPruningScanBuilder.lastPrune = None
-      assert(spark.sql(s"SELECT count(*) FROM $c.nyc.ev WHERE id = 25")
-        .as[Long].head() === 1)
-      val (c2, k2) = GraftPruningScanBuilder.lastPrune.get
-      assert(k2 < c2, s"bucket pruning expected, got $k2/$c2")
+      val id25Q = spark.sql(s"SELECT count(*) FROM $c.nyc.ev WHERE id = 25")
+      assert(id25Q.collect().head.getLong(0) === 1)
+      val k2 = GraftPruningScanBuilder.filesScanned(id25Q)
+      assert(k2 < files.size, s"bucket pruning expected, got $k2/${files.size}")
       // partition pruning survives a SOURCE-column rename (stable ids).
       // The SQL read path refuses rename drift by design (materialize
       // first), so the rename-stability of pruning is asserted through
       // the catalog API; renaming BACK clears the drift (id->name mapping
       // matches the writing schema again) and SQL serves as before.
       spark.sql(s"ALTER TABLE $c.nyc.ev RENAME COLUMN ts TO event_ts")
-      val renamedPrune = cat.prunedFiles("nyc", "ev",
+      val renamedPrune = plan(cat, "ev",
         Seq(sources.LessThan("event_ts", ts("2024-01-02 00:00:00"))))
       assert(renamedPrune.nonEmpty && renamedPrune.size < files.size,
         s"pruning after rename expected, got ${renamedPrune.size}/${files.size}")
@@ -297,7 +296,7 @@ class PartitioningSpec extends SparkSpec {
     val after = cat.loadTable("nyc", "opt").filesAsOf(None)
     assert(after.forall(_.partition.exists(_.contains("ts_month"))),
       "materialization must re-record partition tuples")
-    assert(cat.prunedFiles("nyc", "opt",
+    assert(plan(cat, "opt",
       Seq(sources.EqualTo("ts", ts("2024-02-01 01:00:00"))))
       .forall(_.partition.get("ts_month") == "2024-02"))
     assert(cat.readTable(spark, "nyc", "opt").count() === 40)
@@ -317,17 +316,17 @@ class PartitioningSpec extends SparkSpec {
     val all = cat.loadTable("nyc", "flat").filesAsOf(None)
     assert(all.size === 2)
     // numeric bounds
-    assert(cat.prunedFiles("nyc", "flat",
+    assert(plan(cat, "flat",
       Seq(sources.GreaterThan("id", 500L))).size === 1)
-    assert(cat.prunedFiles("nyc", "flat",
+    assert(plan(cat, "flat",
       Seq(sources.EqualTo("id", 50L))).size === 1)
     // string bounds (truncated, conservative)
-    assert(cat.prunedFiles("nyc", "flat",
+    assert(plan(cat, "flat",
       Seq(sources.StringStartsWith("k", "z"))).size === 1)
-    assert(cat.prunedFiles("nyc", "flat",
+    assert(plan(cat, "flat",
       Seq(sources.EqualTo("k", "k42"))).size === 1)
     // unknown column / shape: no pruning
-    assert(cat.prunedFiles("nyc", "flat",
+    assert(plan(cat, "flat",
       Seq(sources.EqualTo("missing", 1))).size === 2)
   }
 }

@@ -3,12 +3,19 @@ package graft.etl
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
-import graft.catalog.GraftCatalog
+import graft.catalog.{GraftCatalog, Partitioning}
 import org.apache.spark.sql.functions._
 
 /** Maintenance.optimize: compaction, MoR-debt payoff, clustering, and
   * time travel across the maintenance commit. */
 class MaintenanceSpec extends SparkSpec {
+
+  /** Files the scan planner keeps for `lo <= column <= hi` on nyc.t. */
+  private def kept(cat: GraftCatalog, column: String, lo: Double, hi: Double) = {
+    val meta = cat.loadTable("nyc", "t")
+    cat.planFiles(meta, None,
+      Seq(Partitioning.between(meta.schema, column, lo, hi)))
+  }
   import spark.implicits._
 
   private def setup(): GraftCatalog = {
@@ -55,9 +62,9 @@ class MaintenanceSpec extends SparkSpec {
     val files = cat.files("nyc", "t")
     assert(files.size >= 3)
     // a narrow id predicate must keep fewer files than exist
-    val kept = cat.filesForScan("nyc", "t", "id", 1, 64)
-    assert(kept.size < files.size)
-    assert(cat.readTableWhere(spark, "nyc", "t", "id", 1, 64)
+    assert(kept(cat, "id", 1, 64).size < files.size)
+    assert(cat.readPruned(spark, "nyc", "t", Seq(Partitioning.between(
+        cat.loadTable("nyc", "t").schema, "id", 1, 64)))
       .filter(col("id") <= 64).count() === 64)
   }
 
@@ -67,8 +74,8 @@ class MaintenanceSpec extends SparkSpec {
     Maintenance.optimize(spark, cat, "nyc", "t",
       targetFileBytes = bytes / 8, clusterBy = Seq("id", "grp"))
     val total = cat.files("nyc", "t").size
-    val keptId = cat.filesForScan("nyc", "t", "id", 1, 100).size
-    val keptGrp = cat.filesForScan("nyc", "t", "grp", 0, 20).size
+    val keptId = kept(cat, "id", 1, 100).size
+    val keptGrp = kept(cat, "grp", 0, 20).size
     assert(total >= 6)
     assert(keptId < total)
     assert(keptGrp < total)
@@ -113,8 +120,8 @@ class MaintenanceSpec extends SparkSpec {
       targetFileBytes = bytes / 8, clusterBy = Seq("id", "grp"), curve = "hilbert")
     val total = cat.files("nyc", "t").size
     assert(total >= 6)
-    assert(cat.filesForScan("nyc", "t", "id", 1, 100).size < total)
-    assert(cat.filesForScan("nyc", "t", "grp", 0, 20).size < total)
+    assert(kept(cat, "id", 1, 100).size < total)
+    assert(kept(cat, "grp", 0, 20).size < total)
     // the rewrite is lossless
     assert(cat.readTable(spark, "nyc", "t").count() === 512)
   }

@@ -6,6 +6,7 @@ import graft.{SparkSpec, Tables}
 import graft.catalog.GraftCatalog
 import graft.operators.{IvfPq, ProductQuantizer}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources
 
 /** The ANN-index delete/compaction lifecycle behind q_vec_knn_deleted and
   * etl_vec_index_compact: position-delete tombstones are honored by the
@@ -52,20 +53,22 @@ class VectorMaintenanceSpec extends SparkSpec {
     assert(probed.count() === expected)
   }
 
-  test("readTableWhereLive refuses equality-delete debt (ordered semantics)") {
+  test("readPrunedLive refuses equality-delete debt (ordered semantics)") {
     val cat = freshCat()
     IvfPq.buildIndex(spark, cat, "vec", "emb", emb)
     Merge.deleteWhereMor(spark, cat, "vec", "emb_ivfpq_codes",
       col("vec_id") === 1L, Seq("vec_id"))
     val e = intercept[IllegalArgumentException] {
-      cat.readTableWhereLive(spark, "vec", "emb_ivfpq_codes", "cell", 1, 1)
+      cat.readPrunedLive(spark, "vec", "emb_ivfpq_codes",
+        Seq(sources.EqualTo("cell", 1L)))
     }
     assert(e.getMessage.contains("equality-delete"))
     // after materialization the pruned live read works again
     Merge.materialize(spark, cat, "vec", "emb_ivfpq_codes")
     val k = IvfPq.loadCells(spark, cat, "vec", "emb").size
-    assert(cat.readTableWhereLive(spark, "vec", "emb_ivfpq_codes",
-      "cell", 1, k).filter(col("vec_id") === 1L).count() === 0)
+    assert(cat.readPrunedLive(spark, "vec", "emb_ivfpq_codes",
+      Seq(sources.And(sources.GreaterThanOrEqual("cell", 1L),
+        sources.LessThanOrEqual("cell", k.toLong)))).filter(col("vec_id") === 1L).count() === 0)
   }
 
   test("append-only declaration folds id-keyed equality deletes into the pruned probe") {

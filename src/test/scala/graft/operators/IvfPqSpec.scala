@@ -290,8 +290,8 @@ class IvfPqSpec extends SparkSpec {
     // inverted-list fetch is file-level, which is the whole point of the
     // repartitionByRange(cell) layout
     (1L to k.toLong).foreach { c =>
-      val kept = cat.filesForScan("vec", "emb_ivfpq_codes", "cell",
-        c.toDouble, c.toDouble)
+      val kept = cat.planFiles(cat.loadTable("vec", "emb_ivfpq_codes"),
+        None, Seq(org.apache.spark.sql.sources.EqualTo("cell", c)))
       assert(kept.size < total, s"cell $c kept all $total files")
       assert(kept.nonEmpty || cat.readTable(spark, "vec", "emb_ivfpq_codes")
         .filter(col("cell") === c).isEmpty)
