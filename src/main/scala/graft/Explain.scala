@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: prints the formatted physical plan for one or all
   * declared queries. Usage:
   *   runMain graft.Explain <sfDir> [queryName ...]
@@ -13,11 +11,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    val spark = GraftSession.builder("local[4]", 4)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

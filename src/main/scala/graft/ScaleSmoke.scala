@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 10× scaling smoke for the graph/dedup operators (BASELINE.md scaling
@@ -56,11 +55,7 @@ object ScaleSmoke {
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "10").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.InternalRow
@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native codegen'd dot product over `array<float>` (SURVEY.md §2.K K4).
@@ -26,6 +27,11 @@ import org.apache.spark.sql.types._
   * goes null), or any null element yields null. This bit-for-bit parity is
   * what lets [[graft.plans.DotProductRewrite]] substitute this expression
   * for the fold as a pure optimization.
+  *
+  * The native expressions in this file are the only implementation the
+  * operators call. Their composable forms live in the test sources
+  * (`graft.functions.VectorReference`), where the specs pin each native
+  * form against its composable reference.
   */
 case class DotProductF(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -100,8 +106,7 @@ case class DotProductF(left: Expression, right: Expression)
   * index-ordered `sqrt(Σc²)`, and strict `<` keeps the FIRST (lowest)
   * cell on exact ties — `array_position(array_min)` semantics. The
   * 1-based cell id matches the IVF family throughout. A zero-norm
-  * embedding fails loudly with the same message as the fallback's
-  * `raise_error` guard. */
+  * embedding fails loudly. */
 case class NearestCellF(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -141,7 +146,6 @@ case class NearestCellF(left: Expression, right: Expression)
       // 0/garbage would silently assign a wrong cell (the row lands in
       // an arbitrary inverted list and the right probes never find it),
       // so fail the encode scan loudly, like the zero-norm guard below
-      // and like the composable fallback's exists(isnull) branch
       if (v.isNullAt(p)) throw new IllegalArgumentException(
         "null-element embedding cannot be cell-assigned (vec_id row " +
           "would be silently mis-indexed); drop or re-embed it first")
@@ -630,4 +634,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => NGramsGenerator(children(0), children(1))))
     ext.injectOptimizerRule(_ => graft.plans.DotProductRewrite)
   }
+}
+
+/** Column helpers for the native expressions shared by several operators.
+  * Like every native function they resolve only in a session carrying
+  * [[GraftExtensions]]; anywhere else analysis fails with Spark's own
+  * `UNRESOLVED_ROUTINE` error naming the function. */
+object VectorFunctions {
+  /** `graft_dot(a, b)` over two `array<float>` columns ([[DotProductF]]). */
+  def graftDot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 }

@@ -5,7 +5,8 @@ import java.nio.file.Paths
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, sources}
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{DataFileMeta, GraftCatalog, TableMeta}
+import graft.catalog.{DataFileMeta, GraftCatalog, Partitioning, TableMeta}
+import graft.functions.VectorFunctions.graftDot
 
 /** IVF+PQ: the combined coarse-quantizer + product-quantization index
   * (Jégou et al., "Product Quantization for Nearest Neighbor Search",
@@ -174,7 +175,7 @@ object IvfPq {
         val centSeq: Seq[Seq[Float]] = cents.iterator.map(_.toSeq).toSeq
         val assign = new Array[Int](n)
         df.select(col("idx"),
-            (cellOf(spark, centSeq, col("vec")) - 1L).cast("int").as("cell"))
+            (cellOf(centSeq, col("vec")) - 1L).cast("int").as("cell"))
           .collect()
           .foreach(r => assign(r.getInt(0)) = r.getInt(1))
         cents = meanStep(sv, assign, cents, k, dim)
@@ -240,101 +241,27 @@ object IvfPq {
     dt / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Nearest-cell assignment as a codegen'd per-row expression: argmin
-    * cosine distance to the k×dim centroid literal, ties → lowest cell
-    * (1-based, `array_position` semantics — matching the IVF query
-    * variants' cell ids). A ZERO-NORM embedding has no cosine direction
-    * — every distance would be NaN and `array_position` would emit
-    * cell 0, outside the 1..k range any probe can ever reach, silently
-    * dropping the row from all searches — so it fails the encode scan
-    * loudly instead. A NULL ELEMENT is the same trap one level down:
-    * scored as 0/garbage the row lands in an arbitrary cell (silently
-    * mis-indexed), and a null-poisoned fold would emit a null cell
-    * (silently unsearchable) — both paths fail loudly instead.
-    *
-    * `s` is the OWNING session of the frame being encoded — resolution
-    * must check functionExists on it, not on `SparkSession.active`,
-    * which can be a DIFFERENT session in foreachBatch/newSession setups
-    * (the round-12 advice note: active-session gating could pick the
-    * native function where it doesn't resolve, or silently fall back to
-    * the minutes-slow interpreted path where it does). Same threading
-    * as [[dotCol]]. */
-  def cellOf(s: SparkSession, cents: Seq[Seq[Float]], emb: Column): Column = {
-    // the native expression when the session carries GraftExtensions —
-    // higher-order functions never enter whole-stage codegen, so the
-    // composable fallback below evaluates k×dim interpreted lambdas per
-    // row (minutes per encode scan at the √N-sized k on sf1); both
-    // paths are bit-identical (the dotCol precedent), asserted by the
-    // observed-pin oracles
-    if (s.catalog.functionExists("graft_nearest_cell"))
-      return call_function("graft_nearest_cell", typedLit(cents), emb)
-    val qn = aggregate(transform(emb, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (a, v) => a + v)
-    val dists = transform(typedLit(cents), c =>
-      lit(1.0) - aggregate(zip_with(emb, c,
-          (x, y) => x.cast("double") * y.cast("double")),
-        lit(0.0), (acc, v) => acc + v) /
-        (sqrt(qn) *
-         sqrt(aggregate(transform(c, x => x.cast("double") * x.cast("double")),
-           lit(0.0), (a, v) => a + v))))
-    when(exists(emb, x => x.isNull), raise_error(concat(
-        lit("null-element embedding cannot be cell-assigned (vec_id row " +
-          "would be silently mis-indexed); drop or re-embed it first"))))
-      .when(qn === lit(0.0), raise_error(concat(
-        lit("zero-norm embedding cannot be cell-assigned (vec_id row " +
-          "would become unsearchable); drop or re-embed it first"))))
-      .otherwise(array_position(dists, array_min(dists)))
-  }
+  /** Nearest-cell assignment as a codegen'd per-row expression
+    * ([[graft.functions.NearestCellF]]): argmin cosine distance to the
+    * k×dim centroid literal, ties → lowest cell (1-based,
+    * `array_position` semantics — matching the IVF query variants' cell
+    * ids). A ZERO-NORM embedding has no cosine direction (every distance
+    * would be NaN and the row would land outside the 1..k range any
+    * probe can reach), and a NULL ELEMENT would be scored as garbage and
+    * silently mis-indexed, so both fail the encode scan loudly. */
+  def cellOf(cents: Seq[Seq[Float]], emb: Column): Column =
+    call_function("graft_nearest_cell", typedLit(cents), emb)
 
   /** Per-ROW probe-cell ranking: the top-`n` cell ids by (cosine DESC,
     * cell ASC) as an `array<bigint>` column — the batch analog of the
-    * driver-side [[probeCells]], the [[graft.operators.IvfPq
-    * .augmentTop1]] hot loop. Dispatches to the native codegen'd
-    * [[graft.functions.ProbeCellsF]] on a session carrying
-    * GraftExtensions (the [[cellOf]] pattern: `s` is the OWNING session
-    * of the frame, never `SparkSession.active`); the composable
-    * fallback below pays k×dim interpreted lambdas per row — the tax
-    * the native path exists to remove at the √N-sized k. Ordering and
-    * guards are identical on both paths: sims fold left-to-right in
+    * driver-side [[probeCells]], the [[augmentTop1]] hot loop, as the
+    * native [[graft.functions.ProbeCellsF]]. Sims fold left-to-right in
     * double precision, all-ties degrade to cell-ascending, and
     * null-element / zero-norm embeddings fail loudly (a batch row that
     * silently probed arbitrary cells would silently get wrong
     * neighbors). */
-  def rankedCells(s: SparkSession, cents: Seq[Seq[Float]], emb: Column,
-                  n: Int): Column = {
-    if (s.catalog.functionExists("graft_probe_cells"))
-      return call_function("graft_probe_cells", typedLit(cents), emb,
-        lit(n))
-    def centNorm(c: Seq[Float]): Double =
-      math.sqrt(c.map(x => x.toDouble * x.toDouble).sum)
-    val dot = dotCol(s) _
-    val centsLit = typedLit(cents)
-    val normsLit = typedLit(cents.map(centNorm))
-    val qn = dot(emb, emb)
-    // constant-size expression: the per-cell cosine folds inside one
-    // zip_with lambda — an unrolled k-branch array would grow the
-    // expression tree (and its analysis cost, paid per micro-batch)
-    // linearly in the √N-sized k
-    val simStructArr = zip_with(centsLit,
-      zip_with(normsLit, sequence(lit(1L), lit(cents.size.toLong)),
-        (nm, i) => struct(nm.as("n"), i.as("i"))),
-      (c, ni) => struct(
-        (dot(emb, c) / (sqrt(qn) * ni("n"))).as("sim"),
-        ni("i").as("cell")))
-    val ranked = array_sort(simStructArr, (l, r) =>
-      when(l("sim") > r("sim"), -1).when(l("sim") < r("sim"), 1)
-        .otherwise(when(l("cell") < r("cell"), -1)
-          .when(l("cell") > r("cell"), 1).otherwise(0)).cast("int"))
-    when(exists(emb, x => x.isNull), raise_error(concat(
-        lit("null-element embedding cannot be cell-ranked (batch row " +
-          "would silently probe arbitrary cells); drop or re-embed it " +
-          "first"))))
-      .when(qn === lit(0.0), raise_error(concat(
-        lit("zero-norm embedding cannot be cell-ranked (batch row " +
-          "would silently probe arbitrary cells); drop or re-embed it " +
-          "first"))))
-      .otherwise(transform(slice(ranked, 1, n), c => c("cell")))
-  }
+  def rankedCells(cents: Seq[Seq[Float]], emb: Column, n: Int): Column =
+    call_function("graft_probe_cells", typedLit(cents), emb, lit(n))
 
   /** Rank cells by probe affinity driver-side (k centroids are a
     * parameter, not data) and return the cell ids to scan — the
@@ -379,7 +306,7 @@ object IvfPq {
   private def assignCells(cents: Seq[Seq[Float]], emb: DataFrame): DataFrame = {
     val meta = emb.columns.filter(c => c != "vec_id" && c != "embedding")
     emb.select(Seq(col("vec_id"),
-        cellOf(emb.sparkSession, cents, col("embedding")).as("cell"),
+        cellOf(cents, col("embedding")).as("cell"),
         col("embedding")) ++ meta.toIndexedSeq.map(col): _*)
       .localCheckpoint(true)
   }
@@ -391,8 +318,8 @@ object IvfPq {
     val meta = assigned.columns
       .filter(c => c != "vec_id" && c != "embedding" && c != "cell")
     assigned.select(Seq(col("vec_id"), col("cell"),
-        ProductQuantizer.packedCodes(assigned.sparkSession, model,
-          col("embedding")).as("codes")) ++ meta.toIndexedSeq.map(col): _*)
+        ProductQuantizer.packedCodes(model, col("embedding")).as("codes")) ++
+        meta.toIndexedSeq.map(col): _*)
       .localCheckpoint(true)
       .repartitionByRange(k, col("cell"))
       .sortWithinPartitions("cell", "vec_id")
@@ -673,16 +600,6 @@ object IvfPq {
     ProductQuantizer.Model(cbooks.head.head.size * ProductQuantizer.M, cbooks)
   }
 
-  /** Float-array dot product: the native codegen'd `graft_dot`
-    * expression when the session has graft.functions.GraftExtensions,
-    * else the semantically-identical zip_with fold (same left-to-right
-    * double accumulation — results don't depend on which path runs). */
-  private def dotCol(s: SparkSession)(a: Column, b: Column): Column =
-    if (s.catalog.functionExists("graft_dot")) call_function("graft_dot", a, b)
-    else aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
   /** Batch retrieval augmentation over a committed index: attach to EVERY
     * row of `batch` its nearest indexed vector — the per-row form of
     * [[search]] (one query = driver-side probeCells; a whole batch =
@@ -722,12 +639,6 @@ object IvfPq {
                   table: String, emb: DataFrame, batch: DataFrame,
                   widen: Double = 1.0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // EVERY expression below analyzes under the session owning the
-    // batch frame (the whole result chain descends from it via the
-    // joins), so dispatch checks THAT registry — the cellOf/dotCol
-    // threading rule; in foreachBatch/newSession setups the catalog
-    // session `s` and the micro-batch's session can differ
-    val dot = dotCol(batch.sparkSession) _
     val cents = loadCells(s, cat, ns, table)
     val model = loadModel(s, cat, ns, table)
     // probe breadth: the index's own policy fraction, widened
@@ -737,7 +648,7 @@ object IvfPq {
       math.ceil(probeCount(cents.size) * widen).toInt)
     val ranked = batch
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        rankedCells(batch.sparkSession, cents, col("embedding"), probeN)
+        rankedCells(cents, col("embedding"), probeN)
           .as("cells"))
       // materialize ONCE, BEFORE the explode (lineage severed at batch
       // size — one embedding per row, not nProbe duplicated copies):
@@ -764,7 +675,7 @@ object IvfPq {
             (x, y) => x.cast("double") * y),
           lit(0.0), (acc, x) => acc + x)))
     val queries = ranked.select(col("query_id"),
-      lutCol.as("lut"), sqrt(dot(col("qe"), col("qe"))).as("qnorm"))
+      lutCol.as("lut"), sqrt(graftDot(col("qe"), col("qe"))).as("qnorm"))
     val byCell = ranked.select(col("query_id"),
       explode(col("cells")).as("cell"))
     // manifest-prune the index read to the UNION of cells any batch row
@@ -818,7 +729,7 @@ object IvfPq {
     }.reduce(_ + _)
     val scored = byCell
       .join(cat.readPrunedLive(s, ns, s"${table}_ivfpq_codes",
-          Seq(sources.In("cell", probedUnion.toArray[Any])),
+          Seq(cellIn(probedUnion)),
           appendOnlyKey = Some("vec_id"))
         .select(col("vec_id").as("neighbor_id"), col("cell"),
           col("codes")), Seq("cell"))
@@ -892,9 +803,9 @@ object IvfPq {
       .join(broadcast(ranked.select(col("query_id"), col("qe"))),
         Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("qe"), col("ce")) /
-          (sqrt(dot(col("qe"), col("qe"))) *
-            sqrt(dot(col("ce"), col("ce")))), 4).as("cos_sim"))
+        round(graftDot(col("qe"), col("ce")) /
+          (sqrt(graftDot(col("qe"), col("qe"))) *
+            sqrt(graftDot(col("ce"), col("ce")))), 4).as("cos_sim"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
       .select("query_id", "neighbor_id", "cos_sim")
@@ -1043,7 +954,8 @@ object IvfPq {
       "searchEq needs at least one conjunct; use search() for " +
         "unfiltered probes")
     val cents = loadCells(s, cat, ns, table)
-    val files = cat.loadTable(ns, s"${table}_ivfpq_codes").filesAsOf(None)
+    val codesMeta = cat.loadTable(ns, s"${table}_ivfpq_codes")
+    val files = codesMeta.filesAsOf(None)
     val nRows = files.map(_.rowCount).sum
     val sel = eqFilters.map { case (c, _) => 1.0 / columnNdv(files, c) }
       .product *
@@ -1058,7 +970,7 @@ object IvfPq {
           col(c) >= lit(lo) && col(c) <= lit(hi)
         }).reduce(_ && _)
     searchProbed(s, cat, ns, table, emb, probeId, probeVec, k,
-      Some(metaFilter), cents, probeN, rerankK, filesHint = Some(files))
+      Some(metaFilter), cents, probeN, rerankK, codesHint = Some(codesMeta))
   }
 
   /** The last search's SHORTLIST frame (the codes-scan → PQ-score →
@@ -1105,7 +1017,7 @@ object IvfPq {
                            probeVec: Seq[Float], k: Int,
                            metaFilter: Option[Column], cents: Seq[Seq[Float]],
                            probeN: Int, rerankK: Int,
-                           filesHint: Option[Seq[DataFileMeta]] = None)
+                           codesHint: Option[TableMeta] = None)
       : DataFrame = {
     val model = loadModel(s, cat, ns, table)
     val probed = probeCells(cents, probeVec, probeN)
@@ -1113,17 +1025,17 @@ object IvfPq {
       if (rerankK > 0) rerankK
       else {
         // the adaptive default: probed-cell occupancy from the manifest
-        // (metadata only — the same per-file stats the pruning reads;
-        // searchEq threads its already-loaded file list through so a
-        // filtered search parses the metadata ONCE, not per stage)
-        val files = filesHint.getOrElse(
-          cat.loadTable(ns, s"${table}_ivfpq_codes").filesAsOf(None))
-        val probedRows = files.filter { f =>
-          f.colRanges.flatMap(_.get("cell")) match {
-            case Some(rg) => probed.exists(c => rg.max >= c && rg.min <= c)
-            case None     => true // stats-less files count — conservative
-          }
-        }.map(_.rowCount).sum
+        // (metadata only — the scan planner's stats rule on the probe's
+        // own cell filter, so stats-less files count; searchEq threads
+        // its already-loaded metadata through so a filtered search parses
+        // it ONCE, not per stage)
+        val meta = codesHint.getOrElse(
+          cat.loadTable(ns, s"${table}_ivfpq_codes"))
+        val files = meta.filesAsOf(None)
+        val probedIn = cellIn(probed)
+        val probedRows = files
+          .filter(Partitioning.keepByStats(_, meta.schema, probedIn))
+          .map(_.rowCount).sum
         val expected = probed.size * files.map(_.rowCount).sum.toDouble /
           math.max(1, cents.size)
         adaptiveRerankK(ProductQuantizer.shortlistK, probedRows, expected)
@@ -1136,17 +1048,16 @@ object IvfPq {
       // returned (post-filtering a top-k can starve it to < k rows)
       .where(metaFilter.getOrElse(lit(true)))
       .withColumn("approx",
-        ProductQuantizer.approxCosine(s, model, probeVec, col("codes")))
+        ProductQuantizer.approxCosine(model, probeVec, col("codes")))
       .orderBy(desc("approx"), asc("vec_id"))
       .limit(rerank)
       .select("vec_id", "cell")
-    val dot = dotCol(s) _
     val probe = typedLit(probeVec)
     def rank(src: DataFrame): DataFrame = src
       .select(col("vec_id"), col("cell"),
-        round(dot(col("embedding"), probe) /
-          (sqrt(dot(col("embedding"), col("embedding"))) *
-           sqrt(dot(probe, probe))), 4).as("cos_sim"))
+        round(graftDot(col("embedding"), probe) /
+          (sqrt(graftDot(col("embedding"), col("embedding"))) *
+           sqrt(graftDot(probe, probe))), 4).as("cos_sim"))
       .orderBy(desc("cos_sim"), asc("vec_id")).limit(k)
     lastShortlist.set(shortlist)
     val rT = rawTable(table)
@@ -1206,8 +1117,13 @@ object IvfPq {
   private def rawFetch(spark: SparkSession, cat: GraftCatalog, ns: String,
                        rawT: String, cells: Seq[Long], ids: Seq[Long]): DataFrame =
     cat.readPruned(spark, ns, rawT, Seq(sources.And(
-      sources.In("cell", cells.toArray[Any]),
-      sources.In("vec_id", ids.toArray[Any]))))
+      cellIn(cells), sources.In("vec_id", ids.toArray[Any]))))
+
+  /** The scan-planner filter selecting cells: `cell` is BIGINT (the
+    * [[graft.functions.NearestCellF]] output), so the Long ids are
+    * literals of the column's own type and the stats layer tests them. */
+  private def cellIn(cells: Seq[Long]): sources.Filter =
+    sources.In("cell", cells.toArray[Any])
 
   /** The probe-side inverted-list fetch: ONE manifest-pruned read of
     * the codes table over the union of probed cells ([[GraftCatalog
@@ -1224,7 +1140,7 @@ object IvfPq {
   def probedCodes(spark: SparkSession, cat: GraftCatalog, ns: String,
                   table: String, cells: Seq[Long]): DataFrame =
     cat.readPrunedLive(spark, ns, s"${table}_ivfpq_codes",
-        Seq(sources.In("cell", cells.toArray[Any])),
+        Seq(cellIn(cells)),
         // codes tables are append-only on vec_id BY CONSTRUCTION (ids
         // never recycle), so id-keyed equality tombstones — the shape
         // right-to-be-forgotten events actually arrive in — fold into

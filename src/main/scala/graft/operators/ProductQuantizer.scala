@@ -109,63 +109,29 @@ object ProductQuantizer {
   }
 
   /** Encode an embedding column to the packed 64-bit code word:
-    * subspace m's 4-bit code occupies bits [4m, 4m+4).
-    *
-    * `s` is the OWNING session of the frame being encoded (the
-    * [[graft.operators.IvfPq.cellOf]] threading rule): when it carries
-    * GraftExtensions the encode runs as the native [[graft.functions
-    * .PqEncodeF]] — one tight M×K×sub double loop per row. The
-    * composable fallback below is statically unrolled over the M
-    * subspaces, but each subspace's argmin evaluates K
-    * zip_with/aggregate lambda closures in the INTERPRETER (HOFs never
-    * enter whole-stage codegen) — the index-build tax the native path
-    * removes. Both paths are bit-identical (same L2 fold order, ties to
-    * the lowest code — PqEncodeSpec pins per-row word equality), so
-    * every committed index and oracle is unchanged. */
-  def packedCodes(s: SparkSession, model: Model, emb: Column): Column = {
-    val cbLit = typedLit(model.cbooks)
-    if (s.catalog.functionExists("graft_pq_encode"))
-      return call_function("graft_pq_encode", cbLit, emb)
-    (0 until M).map { m =>
-      val sv = slice(emb, m * model.sub + 1, model.sub)
-      val dists = transform(element_at(cbLit, m + 1), c =>
-        aggregate(zip_with(sv, c,
-            (x, y) => ((x.cast("double") - y.cast("double")) *
-              (x.cast("double") - y.cast("double")))),
-          lit(0.0), (acc, v) => acc + v))
-      // array_position is 1-based and returns the FIRST (lowest) match
-      shiftleft((array_position(dists, array_min(dists)) - 1).cast("long"), 4 * m)
-    }.reduce(_ + _)
-  }
+    * subspace m's 4-bit code occupies bits [4m, 4m+4), as the native
+    * [[graft.functions.PqEncodeF]] — one tight M×K×sub double loop per
+    * row (L2 folds left-to-right, ties to the lowest code). PqEncodeSpec
+    * pins its words against the composable per-subspace argmin chain. */
+  def packedCodes(model: Model, emb: Column): Column =
+    call_function("graft_pq_encode", typedLit(model.cbooks), emb)
 
   /** Asymmetric-distance scoring of a packed-codes column against a
     * probe vector: the per-(subspace, centroid) probe dot products and
     * centroid norms form driver-side lookup tables, so the per-row
     * approximate cosine is M shift-mask-lookup terms — never a
-    * dim-float dot product, and never a touch of the raw vectors.
-    *
-    * `s` is the OWNING session of the codes frame (the [[graft.operators
-    * .IvfPq.cellOf]] threading rule): when it carries GraftExtensions the
-    * scoring runs as the native [[graft.functions.PqScoreF]] — ONE
-    * 16-iteration primitive-array loop per row instead of the 100+-node
-    * nested-`element_at` tree below. Both paths are bit-identical
-    * (same fold order, same operation tree — PqScoreSpec asserts
-    * per-row Double equality), so every PQ-family oracle is unchanged. */
-  def approxCosine(s: SparkSession, model: Model, probe: Seq[Float],
-                   codes: Column): Column = {
+    * dim-float dot product, and never a touch of the raw vectors. The
+    * scoring runs as the native [[graft.functions.PqScoreF]], ONE
+    * 16-iteration primitive-array loop per row; PqScoreSpec pins its
+    * doubles bit-for-bit against the composable nested-`element_at`
+    * chain. */
+  def approxCosine(model: Model, probe: Seq[Float], codes: Column): Column = {
     val lut = model.cbooks.zipWithIndex.map { case (cb, m) =>
       cb.map(c => dotd(subvec(probe, m, model.sub), c)) }
     val cn2 = model.cbooks.map(_.map(c => dotd(c, c)))
     val qnorm = math.sqrt(dotd(probe, probe))
-    val lutLit = typedLit(lut)
-    val cn2Lit = typedLit(cn2)
-    if (s.catalog.functionExists("graft_pq_score"))
-      return call_function("graft_pq_score", codes, lutLit, cn2Lit, lit(qnorm))
-    def codeSum(tbl: Column): Column = (0 until M).map { m =>
-      val code = shiftright(codes, 4 * m).bitwiseAND(lit(15L)).cast("int")
-      element_at(element_at(tbl, m + 1), code + lit(1))
-    }.reduce(_ + _)
-    codeSum(lutLit) / (lit(qnorm) * sqrt(codeSum(cn2Lit)))
+    call_function("graft_pq_score", codes, typedLit(lut), typedLit(cn2),
+      lit(qnorm))
   }
 
   /** The deterministic training sample: the 100 smallest vec_ids. ONE
@@ -194,7 +160,7 @@ object ProductQuantizer {
     import spark.implicits._
     val model = train(sampleRows(emb).map(_._2).toSeq)
     val codes = emb.select(col("vec_id"),
-      packedCodes(emb.sparkSession, model, col("embedding")).as("codes"))
+      packedCodes(model, col("embedding")).as("codes"))
     val stamp = graft.catalog.Stamp.next()
     def commit(t: String, df: DataFrame): TableMeta = {
       val dir = Paths.get(cat.warehouse, ns, t, "data", s"pq-$stamp")

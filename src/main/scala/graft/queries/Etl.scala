@@ -3,12 +3,13 @@ package graft.queries
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import graft.Tables.QFn
 import graft.etl.{Compact, Sanitize}
+import graft.functions.VectorFunctions.graftDot
 
 /** ETL declared queries (SURVEY.md §2.B / §2.9). The uint64 fixtures are
   * synthesized in-flight (Spark can't write unsigned parquet, so the
@@ -445,7 +446,7 @@ object Etl {
     val model = ProductQuantizer.loadModel(s, cat, "vec", "emb")
     val committed = cat.readTable(s, "vec", "emb_pq_codes")
     val fresh = emb.select(col("vec_id"),
-      ProductQuantizer.packedCodes(s, model, col("embedding")).as("fresh"))
+      ProductQuantizer.packedCodes(model, col("embedding")).as("fresh"))
     val codesCheck = committed.join(fresh, "vec_id").agg(
       count(lit(1)).as("n_vectors"),
       lit(8L).as("code_bytes"),
@@ -852,15 +853,12 @@ object Etl {
     // the stale max occupancy (over the clone — byte-identical state)
     // and the brute-force ground-truth top-10 (one corpus scan)
     val occStale = maxOccupancy(cat)
-    val dotc = (a: Column, b: Column) =>
-      aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-        lit(0.0), (acc, x) => acc + x)
     val probeLit = typedLit(probeVec)
     val brute = all.filter(col("vec_id") =!= probeId)
       .select(col("vec_id"),
-        (dotc(col("embedding"), probeLit) /
-          (sqrt(dotc(col("embedding"), col("embedding"))) *
-           sqrt(dotc(probeLit, probeLit)))).as("cs"))
+        (graftDot(col("embedding"), probeLit) /
+          (sqrt(graftDot(col("embedding"), col("embedding"))) *
+           sqrt(graftDot(probeLit, probeLit)))).as("cs"))
       .orderBy(desc("cs"), asc("vec_id")).limit(10)
       .collect().map(_.getLong(0)).toSet
     def recallOf(rows: Seq[org.apache.spark.sql.Row]): Long =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.Tables.QFn
+import graft.functions.VectorFunctions.graftDot
 
 /** Training-data-pipeline extension operators (SURVEY.md §2.J/§2.K):
   * exact + near deduplication (MinHash-LSH, SimHash, n-gram Jaccard,
@@ -560,7 +561,7 @@ object Extensions {
     val dense = Tables.embeddings(s, d)
       .filter(col("vec_id") =!= probeId)
       .select(col("vec_id").as("doc_id"),
-        round(cosineTo(s)(col("embedding"), typedLit(probeVec)), 4).as("cos_sim"))
+        round(cosineTo(col("embedding"), typedLit(probeVec)), 4).as("cos_sim"))
       .orderBy(desc("cos_sim"), asc("doc_id")).limit(10)
       // bounded-frame global window: ranks the 10 post-limit rows only
       // (see [[bm25SparseLeg]]'s round-17 audit note)
@@ -1412,24 +1413,11 @@ object Extensions {
 
   // ------------------------------------------------------ vector similarity
 
-  /** Float-array dot product: the native codegen'd `graft_dot` expression
-    * when the session has [[graft.functions.GraftExtensions]] (all our
-    * entry points do), else the semantically-identical zip_with fold —
-    * same left-to-right double accumulation, so results and oracle hashes
-    * are independent of which path runs. */
-  private def dotF(s: SparkSession)(a: Column, b: Column): Column =
-    if (s.catalog.functionExists("graft_dot")) call_function("graft_dot", a, b)
-    else aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
   /** Cosine similarity between `v` and the driver-side probe literal, in
     * double precision, folding in list order (bit-compatible with the
     * DuckDB parallel-unnest oracle). */
-  private def cosineTo(s: SparkSession)(v: Column, probe: Column): Column = {
-    val dot = dotF(s) _
-    dot(v, probe) / (sqrt(dot(v, v)) * sqrt(dot(probe, probe)))
-  }
+  private def cosineTo(v: Column, probe: Column): Column =
+    graftDot(v, probe) / (sqrt(graftDot(v, v)) * sqrt(graftDot(probe, probe)))
 
   /** The probe is the embedding of the smallest vec_id — a query parameter
     * (ONE collected row serving both the id and the vector; a second driver
@@ -1461,7 +1449,7 @@ object Extensions {
   private def qVecCosine: QFn = (s, d) =>
     Tables.embeddings(s, d)
       .select(col("vec_id"),
-        round(cosineTo(s)(col("embedding"), probeLit(s, d)), 4).as("cos_sim"))
+        round(cosineTo(col("embedding"), probeLit(s, d)), 4).as("cos_sim"))
       .orderBy("vec_id")
 
   /** Brute-force top-k cosine — the exact baseline every ANN variant is
@@ -1471,7 +1459,7 @@ object Extensions {
     val probe = typedLit(probeVec)
     Tables.embeddings(s, d)
       .filter(col("vec_id") =!= probeId)
-      .select(col("vec_id"), round(cosineTo(s)(col("embedding"), probe), 4).as("cos_sim"))
+      .select(col("vec_id"), round(cosineTo(col("embedding"), probe), 4).as("cos_sim"))
       .orderBy(desc("cos_sim"), asc("vec_id"))
       .limit(10)
   }
@@ -1525,7 +1513,7 @@ object Extensions {
     val ivf = assignCells(s, emb, cents)
       .filter(col("cell").isin(topCells: _*) && col("vec_id") =!= probeId)
       .select(col("vec_id"), col("cell"),
-        round(cosineTo(s)(col("embedding"), probe), 4).as("cos_sim"))
+        round(cosineTo(col("embedding"), probe), 4).as("cos_sim"))
       .orderBy(desc("cos_sim"), asc("vec_id"))
       .limit(10)
     val exact = qVecKnn(s, d).select(col("vec_id").as("exact_id"))
@@ -1557,7 +1545,7 @@ object Extensions {
   private def assignCells(s: SparkSession, emb: DataFrame,
                           cs: Seq[Seq[Float]]): DataFrame = {
     val dists = transform(typedLit(cs),
-      c => lit(1.0) - cosineTo(s)(col("embedding"), c))
+      c => lit(1.0) - cosineTo(col("embedding"), c))
     emb.select(col("vec_id"), col("embedding"))
       .withColumn("cell", array_position(dists, array_min(dists)))
   }
@@ -1665,7 +1653,7 @@ object Extensions {
 
   private def qVecKnnKmeans: QFn = (s, d) => {
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val cos = cosineTo(s) _
+    val cos = cosineTo _
     // ONE memoized training serves this query and q_embed_neardup_cells;
     // the probe IS the smallest vec_id, i.e. the first seed
     val (seeds, cents) = trainedCellsFor(s, d)
@@ -1728,13 +1716,13 @@ object Extensions {
     val (probeId, probeVec) = sample.head
     val model = ProductQuantizer.train(sample.map(_._2).toSeq)
     emb.filter(col("vec_id") =!= probeId)
-      .withColumn("codes", ProductQuantizer.packedCodes(s, model, col("embedding")))
+      .withColumn("codes", ProductQuantizer.packedCodes(model, col("embedding")))
       .withColumn("approx",
-        ProductQuantizer.approxCosine(s, model, probeVec, col("codes")))
+        ProductQuantizer.approxCosine(model, probeVec, col("codes")))
       .orderBy(desc("approx"), asc("vec_id"))
       .limit(ProductQuantizer.shortlistK)
       .select(col("vec_id"),
-        round(cosineTo(s)(col("embedding"), typedLit(probeVec)), 4).as("cos_sim"))
+        round(cosineTo(col("embedding"), typedLit(probeVec)), 4).as("cos_sim"))
       .orderBy(desc("cos_sim"), asc("vec_id")).limit(10)
   }
 
@@ -1773,13 +1761,13 @@ object Extensions {
     val shortlist = cat.readTable(s, "vec", "emb_pq_codes")
       .filter(col("vec_id") =!= probeId)
       .withColumn("approx",
-        ProductQuantizer.approxCosine(s, model, probeVec, col("codes")))
+        ProductQuantizer.approxCosine(model, probeVec, col("codes")))
       .orderBy(desc("approx"), asc("vec_id"))
       .limit(ProductQuantizer.shortlistK)
       .select("vec_id")
     emb.join(broadcast(shortlist), "vec_id")
       .select(col("vec_id"),
-        round(cosineTo(s)(col("embedding"), typedLit(probeVec)), 4).as("cos_sim"))
+        round(cosineTo(col("embedding"), typedLit(probeVec)), 4).as("cos_sim"))
       .orderBy(desc("cos_sim"), asc("vec_id")).limit(10)
   }
 
@@ -1818,13 +1806,13 @@ object Extensions {
     val shortlist = cat.readTable(s, "vec", "emb_pq_codes")
       .filter(col("vec_id") =!= probeId)
       .withColumn("approx",
-        ProductQuantizer.approxCosine(s, model, probeVec, col("codes")))
+        ProductQuantizer.approxCosine(model, probeVec, col("codes")))
       .orderBy(desc("approx"), asc("vec_id"))
       .limit(ProductQuantizer.shortlistK)
       .select("vec_id")
     emb.join(broadcast(shortlist), "vec_id")
       .select(col("vec_id"),
-        round(cosineTo(s)(col("embedding"), typedLit(probeVec)), 4).as("cos_sim"))
+        round(cosineTo(col("embedding"), typedLit(probeVec)), 4).as("cos_sim"))
       .orderBy(desc("cos_sim"), asc("vec_id")).limit(10)
   }
 
@@ -2021,7 +2009,6 @@ object Extensions {
   private def qVecKnnAugment: QFn = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     import graft.operators.IvfPq
-    val dot = dotF(s) _
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val cat = ivfPqIndexFor(s, d)
     val batch = emb.filter(pmod(col("vec_id"), lit(10)) === 7)
@@ -2044,9 +2031,9 @@ object Extensions {
     val brute = emb.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("pq"))
       .select(col("pq"), col("vec_id"),
-        round(dot(col("embedding"), col("pe")) /
-          (sqrt(dot(col("embedding"), col("embedding"))) *
-           sqrt(dot(col("pe"), col("pe")))), 4).as("bcos"))
+        round(graftDot(col("embedding"), col("pe")) /
+          (sqrt(graftDot(col("embedding"), col("embedding"))) *
+           sqrt(graftDot(col("pe"), col("pe")))), 4).as("bcos"))
       .withColumn("rk", row_number().over(wb)).filter(col("rk") === 1)
       .select(col("pq"), col("vec_id").as("brute_n1"))
     val matches = top1.join(brute, col("query_id") === col("pq"))
@@ -2139,17 +2126,16 @@ object Extensions {
     * (the dominant cost of all-pairs scoring at scale). Numerically
     * identical: same fold order, same double ops as the oracle. */
   private def qEmbedNeardup: QFn = (s, d) => {
-    val dot = dotF(s) _
     val withNorm = Tables.embeddings(s, d)
       .select(col("label"), col("vec_id"), col("embedding"),
-        sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
+        sqrt(graftDot(col("embedding"), col("embedding"))).as("nrm"))
     val a = withNorm.select(col("label"), col("vec_id").as("v1"),
       col("embedding").as("e1"), col("nrm").as("n1"))
     val b = withNorm.select(col("label").as("label2"), col("vec_id").as("v2"),
       col("embedding").as("e2"), col("nrm").as("n2"))
     a.join(b, col("label") === col("label2") && col("v1") < col("v2"))
       .select(col("label"),
-        round(dot(col("e1"), col("e2")) / (col("n1") * col("n2")), 4).as("cos_sim"))
+        round(graftDot(col("e1"), col("e2")) / (col("n1") * col("n2")), 4).as("cos_sim"))
       .groupBy("label")
       .agg(count(lit(1)).as("n_pairs"),
         sum(when(col("cos_sim") >= 0.8, 1L).otherwise(0L)).as("n_similar"))
@@ -2179,17 +2165,16 @@ object Extensions {
     * replay ⇒ sf0.01-gated via tools/sf01_skip.txt, the
     * q_dedup_cluster precedent). */
   private def qDedupSemantic: QFn = (s, d) => {
-    val dot = dotF(s) _
     val emb = Tables.embeddings(s, d)
     val withNorm = emb.select(col("label"), col("vec_id"), col("embedding"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
+      sqrt(graftDot(col("embedding"), col("embedding"))).as("nrm"))
     val a = withNorm.select(col("label"), col("vec_id").as("v1"),
       col("embedding").as("e1"), col("nrm").as("n1"))
     val b = withNorm.select(col("label").as("label2"), col("vec_id").as("v2"),
       col("embedding").as("e2"), col("nrm").as("n2"))
     val edges = a.join(b, col("label") === col("label2") && col("v1") < col("v2"))
       .select(col("v1"), col("v2"),
-        round(dot(col("e1"), col("e2")) / (col("n1") * col("n2")), 4).as("cos"))
+        round(graftDot(col("e1"), col("e2")) / (col("n1") * col("n2")), 4).as("cos"))
       .filter(col("cos") >= 0.25)
       .select("v1", "v2")
     graft.operators.ConnectedComponents.label(emb.select("vec_id"), edges)
@@ -2218,10 +2203,9 @@ object Extensions {
     * even at sf1. */
   private def qVecKnnJoin: QFn = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val dot = dotF(s) _
     val withNorm = Tables.embeddings(s, d)
       .select(col("label"), col("vec_id"), col("embedding"),
-        sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
+        sqrt(graftDot(col("embedding"), col("embedding"))).as("nrm"))
     val batch = withNorm.filter(pmod(col("vec_id"), lit(10)) === 7)
       .select(col("label"), col("vec_id").as("query_id"),
         col("embedding").as("qe"), col("nrm").as("qn"))
@@ -2232,7 +2216,7 @@ object Extensions {
       .orderBy(desc("cos_sim"), asc("neighbor_id"))
     batch.join(corpus, col("label") === col("clabel"))
       .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 4)
+        round(graftDot(col("qe"), col("ce")) / (col("qn") * col("cn")), 4)
           .as("cos_sim"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 3)
@@ -2253,21 +2237,20 @@ object Extensions {
     * which upgrades the learned-cell path from a code comment to its
     * own green CORRECTNESS row. */
   private def qDedupSemanticCells: QFn = (s, d) => {
-    val dot = dotF(s) _
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding")).cache()
     try {
       val cents = trainedCellsFor(s, d)._2
       val withNorm = assignCells(s, emb, cents)
         .select(col("cell"), col("vec_id"), col("embedding"),
-          sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
+          sqrt(graftDot(col("embedding"), col("embedding"))).as("nrm"))
       val a = withNorm.select(col("cell"), col("vec_id").as("v1"),
         col("embedding").as("e1"), col("nrm").as("n1"))
       val b = withNorm.select(col("cell").as("cell2"), col("vec_id").as("v2"),
         col("embedding").as("e2"), col("nrm").as("n2"))
       val edges = a.join(b, col("cell") === col("cell2") && col("v1") < col("v2"))
         .select(col("v1"), col("v2"),
-          round(dot(col("e1"), col("e2")) / (col("n1") * col("n2")), 4).as("cos"))
+          round(graftDot(col("e1"), col("e2")) / (col("n1") * col("n2")), 4).as("cos"))
         .filter(col("cos") >= 0.25)
         .select("v1", "v2")
       graft.operators.ConnectedComponents.label(emb.select("vec_id"), edges)
@@ -2291,14 +2274,13 @@ object Extensions {
     * broadcasts; the corpus pays one scan). */
   private def qVecKnnJoinCells: QFn = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val dot = dotF(s) _
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding")).cache()
     try {
       val cents = trainedCellsFor(s, d)._2
       val assigned = assignCells(s, emb, cents)
         .select(col("cell"), col("vec_id"), col("embedding"),
-          sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
+          sqrt(graftDot(col("embedding"), col("embedding"))).as("nrm"))
       val batch = assigned.filter(pmod(col("vec_id"), lit(10)) === 7)
         .select(col("cell"), col("vec_id").as("query_id"),
           col("embedding").as("qe"), col("nrm").as("qn"))
@@ -2309,7 +2291,7 @@ object Extensions {
         .orderBy(desc("cos_sim"), asc("neighbor_id"))
       val top3 = batch.join(corpus, col("cell") === col("ccell"))
         .select(col("query_id"), col("neighbor_id"),
-          round(dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 4)
+          round(graftDot(col("qe"), col("ce")) / (col("qn") * col("cn")), 4)
             .as("cos_sim"))
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 3)
@@ -2327,7 +2309,7 @@ object Extensions {
         .orderBy(desc("bcos"), asc("neighbor_id"))
       val bruteTop1 = corpus.crossJoin(broadcast(probes))
         .select(col("pq"), col("neighbor_id"),
-          round(dot(col("pe"), col("ce")) / (col("pn") * col("cn")), 4)
+          round(graftDot(col("pe"), col("ce")) / (col("pn") * col("cn")), 4)
             .as("bcos"))
         .withColumn("rk", row_number().over(wb)).filter(col("rk") === 1)
         .select(col("pq"), col("neighbor_id").as("brute_n1"))
@@ -2358,7 +2340,6 @@ object Extensions {
     * sizes. The label-blocked [[qEmbedNeardup]] remains the
     * SQL-replayed variant covering nonzero similarity counts. */
   private def qEmbedNeardupCells: QFn = (s, d) => {
-    val dot = dotF(s) _
     // assignment + the pair join reuse the scan 3x (a, b, sizes); the
     // training itself is the memoized shared fixture (trainedCellsFor)
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding")).cache()
@@ -2366,14 +2347,14 @@ object Extensions {
     val cents = trainedCellsFor(s, d)._2
     val withNorm = assignCells(s, emb, cents)
       .select(col("cell"), col("vec_id"), col("embedding"),
-        sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
+        sqrt(graftDot(col("embedding"), col("embedding"))).as("nrm"))
     val a = withNorm.select(col("cell"), col("vec_id").as("v1"),
       col("embedding").as("e1"), col("nrm").as("n1"))
     val b = withNorm.select(col("cell").as("cell2"), col("vec_id").as("v2"),
       col("embedding").as("e2"), col("nrm").as("n2"))
     val perCell = a.join(b, col("cell") === col("cell2") && col("v1") < col("v2"))
       .select(col("cell"),
-        round(dot(col("e1"), col("e2")) / (col("n1") * col("n2")), 4).as("cos_sim"))
+        round(graftDot(col("e1"), col("e2")) / (col("n1") * col("n2")), 4).as("cos_sim"))
       .groupBy("cell")
       .agg(count(lit(1)).as("n_pairs"),
         sum(when(col("cos_sim") >= 0.8, 1L).otherwise(0L)).as("n_similar"))
@@ -2407,7 +2388,6 @@ object Extensions {
     * near |dot| < 1e-13) — never observed; the dots are O(1)-magnitude
     * sums of 64 terms. */
   private def qEmbedNeardupLsh: QFn = (s, d) => {
-    val dot = dotF(s) _
     val bits = 16
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
@@ -2420,11 +2400,11 @@ object Extensions {
     }
     val planes = (0 until bits).map(b => (0 until dim).map(i => pm(b, i)))
     val sigCol = planes.zipWithIndex.foldLeft(lit(0L)) { case (acc, (p, b)) =>
-      acc + when(dot(col("embedding"), typedLit(p)) >= 0, lit(1L << b))
+      acc + when(graftDot(col("embedding"), typedLit(p)) >= 0, lit(1L << b))
         .otherwise(lit(0L))
     }
     val sigs = emb.select(col("vec_id"), sigCol.as("sig"), col("embedding"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
+      sqrt(graftDot(col("embedding"), col("embedding"))).as("nrm"))
     val hist = sigs.groupBy("sig").agg(count(lit(1)).as("n_vecs"))
     val a = sigs.select(col("sig"), col("vec_id").as("v1"),
       col("embedding").as("e1"), col("nrm").as("n1"))
@@ -2432,7 +2412,7 @@ object Extensions {
       col("embedding").as("e2"), col("nrm").as("n2"))
     val perSig = a.join(b, col("sig") === col("sig2") && col("v1") < col("v2"))
       .select(col("sig"),
-        round(dot(col("e1"), col("e2")) / (col("n1") * col("n2")), 4).as("cos_sim"))
+        round(graftDot(col("e1"), col("e2")) / (col("n1") * col("n2")), 4).as("cos_sim"))
       .groupBy("sig")
       .agg(count(lit(1)).as("n_pairs"),
         sum(when(col("cos_sim") >= 0.8, 1L).otherwise(0L)).as("n_similar"))
@@ -2585,17 +2565,16 @@ object Extensions {
     * oracle at every SF — the replay is |corpus|×|benchmark|, linear in
     * the corpus, so unlike the all-pairs family it needs no sf0.1 skip. */
   private def qDecontaminateSemantic: QFn = (s, d) => {
-    val dot = dotF(s) _
     val withNorm = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"),
-        sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
+        sqrt(graftDot(col("embedding"), col("embedding"))).as("nrm"))
     val bench = withNorm.filter(col("vec_id") % 97 === 0)
       .select(col("vec_id").as("bid"), col("embedding").as("be"),
         col("nrm").as("bn"))
     withNorm.filter(col("vec_id") % 97 =!= 0)
       .crossJoin(broadcast(bench))
       .select(col("vec_id"),
-        round(dot(col("embedding"), col("be")) / (col("nrm") * col("bn")), 4)
+        round(graftDot(col("embedding"), col("be")) / (col("nrm") * col("bn")), 4)
           .as("cos"))
       .filter(col("cos") >= 0.25)
       .groupBy("vec_id")

@@ -2,7 +2,6 @@ package graft.catalog
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The SECOND PROCESS of the cross-JVM commit-race proof
@@ -18,9 +17,10 @@ import org.apache.spark.sql.functions._
   *
   * Modes (args):
   *  - `append-codes <wh> <ns> <table> <idStart> <n>` — starts its own
-  *    local SparkSession, loads the committed cells/books model, and
-  *    runs one [[graft.operators.IvfPq.appendCodes]] of `n` synthetic
-  *    vectors. Prints `OK` on success; `REFUSED <class>` and exit 3 on
+  *    local session from [[graft.GraftSession.builder]] (so the native
+  *    vector expressions resolve), loads the committed cells/books
+  *    model, and runs one [[graft.operators.IvfPq.appendCodes]] of `n`
+  *    synthetic vectors. Prints `OK` on success; `REFUSED <class>` and exit 3 on
   *    a concurrency refusal (the strict-rebuild race's correct outcome).
   *  - `storm <wh> <ns> <table> <n> <parquetFile>` — NO Spark: `n` plain
   *    metadata-only append commits of the given file, each retried
@@ -40,10 +40,7 @@ object CrossJvmWorker {
       // content-fingerprint replay tag exists to heal.
       if (mode == "append-codes-torn")
         graft.operators.IvfPq.appendTornSeam = () => Runtime.getRuntime.halt(137)
-      val spark = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.sql.session.timeZone", "UTC")
+      val spark = graft.GraftSession.builder("local[2]", 2)
         .config("spark.ui.enabled", "false")
         .appName("graft-crossjvm-appender")
         .getOrCreate()
@@ -73,10 +70,7 @@ object CrossJvmWorker {
 
     case "sync-changelog" =>
       val Array(_, wh, ns, table) = args
-      val spark = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.sql.session.timeZone", "UTC")
+      val spark = graft.GraftSession.builder("local[2]", 2)
         .config("spark.ui.enabled", "false")
         .appName("graft-crossjvm-syncer")
         .getOrCreate()

@@ -167,9 +167,7 @@ class VectorMaintenanceSpec extends SparkSpec {
     // anti-join (the resurrect-through-the-filter composition bug)
     assert(!got.exists { case (v, _) => v % 13 == 5 && v != pid })
     // recall vs the exact FILTERED-minus-DELETED brute force
-    val dot = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-        lit(0.0), (acc, x) => acc + x)
+    val dot = graft.functions.VectorReference.dot _
     val probe = typedLit(pvec)
     val exact = full
       .filter(col("label") === plabel && col("vec_id") =!= pid &&
@@ -201,9 +199,7 @@ class VectorMaintenanceSpec extends SparkSpec {
     assert(!got.exists { case (v, _) => v % 13 == 5 && v != probeId })
     // recall vs the exact deleted brute force: the pruned probe gates
     // the family floor (the full-range read it replaced matched 10/10)
-    val dot = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-        lit(0.0), (acc, x) => acc + x)
+    val dot = graft.functions.VectorReference.dot _
     val probe = typedLit(probeVec)
     val exact = emb
       .filter(col("vec_id") =!= probeId && pmod(col("vec_id"), lit(13)) =!= 5)
@@ -422,9 +418,7 @@ class VectorMaintenanceSpec extends SparkSpec {
     val (probeId, probeVec) = ProductQuantizer.sampleRows(emb).head
     assert(!got.exists { case (v, _) => v % 13 == 5 && v != probeId })
     // exact brute force minus the deleted set, computed independently
-    val dot = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-        lit(0.0), (acc, x) => acc + x)
+    val dot = graft.functions.VectorReference.dot _
     val probe = typedLit(probeVec)
     val expected = emb
       .filter(col("vec_id") =!= probeId && pmod(col("vec_id"), lit(13)) =!= 5)

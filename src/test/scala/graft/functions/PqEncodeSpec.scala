@@ -18,22 +18,11 @@ class PqEncodeSpec extends SparkSpec {
 
   test("native encode equals the per-subspace argmin chain word-for-word") {
     val m = model
-    // the composable chain packedCodes falls back to without the
-    // extension — reconstructed verbatim so the equality pins the
-    // exact arithmetic contract
-    val cbLit = typedLit(m.cbooks)
-    val chain = (0 until ProductQuantizer.M).map { sm =>
-      val sv = slice(col("embedding"), sm * m.sub + 1, m.sub)
-      val dists = transform(element_at(cbLit, sm + 1), c =>
-        aggregate(zip_with(sv, c,
-            (x, y) => ((x.cast("double") - y.cast("double")) *
-              (x.cast("double") - y.cast("double")))),
-          lit(0.0), (acc, v) => acc + v))
-      shiftleft((array_position(dists, array_min(dists)) - 1).cast("long"),
-        4 * sm)
-    }.reduce(_ + _)
+    // the composable reference pins the exact arithmetic contract
+    val chain = VectorReference.pqEncode(m, col("embedding"))
     val rows = emb.select(
-        call_function("graft_pq_encode", cbLit, col("embedding")).as("native"),
+        call_function("graft_pq_encode", typedLit(m.cbooks), col("embedding"))
+          .as("native"),
         chain.as("chain"))
       .collect()
     assert(rows.nonEmpty)
@@ -41,14 +30,14 @@ class PqEncodeSpec extends SparkSpec {
   }
 
   test("packedCodes dispatches to the native expression on an extensions session") {
-    assert(ProductQuantizer.packedCodes(spark, model, col("embedding"))
+    assert(ProductQuantizer.packedCodes(model, col("embedding"))
       .toString.contains("graft_pq_encode"))
   }
 
   test("codegen and interpreted evaluation agree") {
     val m = model
     val df = emb.limit(64).select(col("vec_id"),
-      ProductQuantizer.packedCodes(spark, m, col("embedding")).as("codes"))
+      ProductQuantizer.packedCodes(m, col("embedding")).as("codes"))
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     val interp = try df.orderBy("vec_id").as[(Long, Long)].collect().toSeq
     finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
@@ -59,12 +48,12 @@ class PqEncodeSpec extends SparkSpec {
   test("a null embedding yields null; a null ELEMENT fails loudly") {
     val m = model
     val nulls = Seq((1L, Option.empty[Seq[Float]])).toDF("vec_id", "embedding")
-    assert(nulls.select(ProductQuantizer.packedCodes(spark, m, col("embedding")))
+    assert(nulls.select(ProductQuantizer.packedCodes(m, col("embedding")))
       .head().isNullAt(0))
     val nullElem = Seq(Tuple1(
         (Seq(Some(1.0f), None) ++ Seq.fill(62)(Some(0.1f))): Seq[Option[Float]]))
       .toDF("embedding")
-      .select(ProductQuantizer.packedCodes(spark, m, col("embedding")))
+      .select(ProductQuantizer.packedCodes(m, col("embedding")))
     val ex = intercept[Exception](nullElem.collect())
     val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
       .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse(""))
@@ -74,7 +63,7 @@ class PqEncodeSpec extends SparkSpec {
   test("a mismatched embedding width fails loudly, never truncates") {
     val m = model
     val bad = Seq(Tuple1(Seq.fill(32)(0.5f))).toDF("embedding")
-      .select(ProductQuantizer.packedCodes(spark, m, col("embedding")))
+      .select(ProductQuantizer.packedCodes(m, col("embedding")))
     val ex = intercept[Exception](bad.collect())
     val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
       .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse(""))

@@ -5,8 +5,8 @@ import graft.operators.ProductQuantizer
 import org.apache.spark.sql.functions._
 
 /** graft_pq_score: the native flat-LUT scoring loop must agree
-  * bit-for-bit with the composable nested-element_at chain it replaces
-  * ([[ProductQuantizer.approxCosine]]'s fallback), across codegen and
+  * bit-for-bit with the composable nested-element_at chain
+  * ([[VectorReference.pqScore]]), across codegen and
   * interpreted evaluation — the PQ-family oracles ride on shortlist
   * ORDER, so even 1-ulp drift would be a correctness change, not a
   * perf change. */
@@ -31,18 +31,11 @@ class PqScoreSpec extends SparkSpec {
       cb.map(c => dotd(probe.slice(m * model.sub, (m + 1) * model.sub), c)) }
     val cn2 = model.cbooks.map(_.map(c => dotd(c, c)))
     val qnorm = math.sqrt(dotd(probe, probe))
-    // the composable chain approxCosine falls back to without the
-    // extension — reconstructed verbatim so the equality below pins the
-    // exact arithmetic contract, not an approximation band
-    def codeSum(tbl: org.apache.spark.sql.Column) =
-      (0 until ProductQuantizer.M).map { m =>
-        val code = shiftright(col("codes"), 4 * m).bitwiseAND(lit(15L)).cast("int")
-        element_at(element_at(tbl, m + 1), code + lit(1))
-      }.reduce(_ + _)
-    val chain = codeSum(typedLit(lut)) /
-      (lit(qnorm) * sqrt(codeSum(typedLit(cn2))))
+    // the composable reference pins the exact arithmetic contract, not
+    // an approximation band
+    val chain = VectorReference.pqScore(model, probe, col("codes"))
     val rows = emb
-      .withColumn("codes", ProductQuantizer.packedCodes(spark, model, col("embedding")))
+      .withColumn("codes", ProductQuantizer.packedCodes(model, col("embedding")))
       .select(
         call_function("graft_pq_score", col("codes"),
           typedLit(lut), typedLit(cn2), lit(qnorm)).as("native"),
@@ -57,16 +50,16 @@ class PqScoreSpec extends SparkSpec {
 
   test("approxCosine dispatches to the native expression on a session with extensions") {
     val (model, probe) = fixture
-    val scored = ProductQuantizer.approxCosine(spark, model, probe, col("codes"))
+    val scored = ProductQuantizer.approxCosine(model, probe, col("codes"))
     assert(scored.toString.contains("graft_pq_score"))
   }
 
   test("codegen and interpreted evaluation agree") {
     val (model, probe) = fixture
     val df = emb.limit(64)
-      .withColumn("codes", ProductQuantizer.packedCodes(spark, model, col("embedding")))
+      .withColumn("codes", ProductQuantizer.packedCodes(model, col("embedding")))
       .select(col("vec_id"),
-        ProductQuantizer.approxCosine(spark, model, probe, col("codes"))
+        ProductQuantizer.approxCosine(model, probe, col("codes"))
           .as("score"))
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     val interp = try df.orderBy("vec_id").as[(Long, Double)].collect().toSeq
@@ -80,7 +73,7 @@ class PqScoreSpec extends SparkSpec {
     val df = Seq((1L, Option.empty[Long]), (2L, Some(0L)))
       .toDF("vec_id", "codes")
     val rows = df.select(
-        ProductQuantizer.approxCosine(spark, model, probe, col("codes")))
+        ProductQuantizer.approxCosine(model, probe, col("codes")))
       .collect()
     assert(rows(0).isNullAt(0))
     assert(!rows(1).isNullAt(0))
@@ -91,7 +84,7 @@ class PqScoreSpec extends SparkSpec {
     // spark.range's id is non-nullable LongType — the child whose
     // genCode isNull is the literal `false`, not a variable
     val rows = spark.range(0, 32)
-      .select(ProductQuantizer.approxCosine(spark, model, probe, col("id"))
+      .select(ProductQuantizer.approxCosine(model, probe, col("id"))
         .as("score"))
       .collect()
     assert(rows.length === 32)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** graft_probe_cells: the native per-row cell ranking must agree
   * EXACTLY — same cells, same order — with the composable
-  * zip_with/array_sort/slice form it replaces in augmentTop1, and with
+  * zip_with/array_sort/slice form ([[VectorReference.probeCells]]), and with
   * the driver-side probeCells protocol; the augmentation oracles ride
   * on which cells each batch row probes. */
 class ProbeCellsSpec extends SparkSpec {
@@ -25,28 +25,12 @@ class ProbeCellsSpec extends SparkSpec {
   test("native ranking equals the composable zip_with/array_sort form exactly") {
     val cs = cents
     val n = 3
-    // the composable chain rankedCells falls back to without the
-    // extension — reconstructed verbatim (guards elided: fixture
-    // embeddings are non-null, nonzero)
-    def centNorm(c: Seq[Float]): Double =
-      math.sqrt(c.map(x => x.toDouble * x.toDouble).sum)
+    // the composable reference (guards elided: fixture embeddings are
+    // non-null, nonzero)
     val e = col("embedding")
-    val dotE = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      call_function("graft_dot", a, b)
-    val simStructArr = zip_with(typedLit(cs),
-      zip_with(typedLit(cs.map(centNorm)),
-        sequence(lit(1L), lit(cs.size.toLong)),
-        (nm, i) => struct(nm.as("n"), i.as("i"))),
-      (c, ni) => struct(
-        (dotE(e, c) / (sqrt(dotE(e, e)) * ni("n"))).as("sim"),
-        ni("i").as("cell")))
-    val chain = transform(slice(array_sort(simStructArr, (l, r) =>
-      when(l("sim") > r("sim"), -1).when(l("sim") < r("sim"), 1)
-        .otherwise(when(l("cell") < r("cell"), -1)
-          .when(l("cell") > r("cell"), 1).otherwise(0)).cast("int")),
-      1, n), c => c("cell"))
+    val chain = VectorReference.probeCells(cs, e, n)
     val rows = emb.select(
-        IvfPq.rankedCells(spark, cs, e, n).as("native"),
+        IvfPq.rankedCells(cs, e, n).as("native"),
         chain.as("chain"))
       .collect()
     assert(rows.nonEmpty)
@@ -62,7 +46,7 @@ class ProbeCellsSpec extends SparkSpec {
       .select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
     val fromCol = emb.orderBy("vec_id").limit(16)
-      .select(col("vec_id"), IvfPq.rankedCells(spark, cs, col("embedding"), n)
+      .select(col("vec_id"), IvfPq.rankedCells(cs, col("embedding"), n)
         .as("cells"))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toMap
     sample.foreach { case (id, v) =>
@@ -72,14 +56,14 @@ class ProbeCellsSpec extends SparkSpec {
   }
 
   test("rankedCells dispatches to the native expression on an extensions session") {
-    assert(IvfPq.rankedCells(spark, cents, col("embedding"), 2)
+    assert(IvfPq.rankedCells(cents, col("embedding"), 2)
       .toString.contains("graft_probe_cells"))
   }
 
   test("a probe count above k clamps to k") {
     val cs = cents
     val r = emb.limit(1)
-      .select(IvfPq.rankedCells(spark, cs, col("embedding"), 99).as("c"))
+      .select(IvfPq.rankedCells(cs, col("embedding"), 99).as("c"))
       .head().getSeq[Long](0)
     assert(r.size === cs.size)
     assert(r.sorted === (1L to cs.size.toLong))
@@ -95,10 +79,10 @@ class ProbeCellsSpec extends SparkSpec {
     val nullElem = Seq(Tuple1(Seq(Some(1.0f), None, Some(2.0f), Some(0.5f),
         Some(1.0f), Some(2.0f), Some(0.5f), Some(1.0f)).padTo(64, Some(0.1f))))
       .toDF("embedding")
-      .select(IvfPq.rankedCells(spark, cs, col("embedding"), 2))
+      .select(IvfPq.rankedCells(cs, col("embedding"), 2))
     assert(msgOf(nullElem).contains("null-element"))
     val zero = Seq(Tuple1(Seq.fill(64)(0.0f))).toDF("embedding")
-      .select(IvfPq.rankedCells(spark, cs, col("embedding"), 2))
+      .select(IvfPq.rankedCells(cs, col("embedding"), 2))
     assert(msgOf(zero).contains("zero-norm"))
   }
 
@@ -108,7 +92,7 @@ class ProbeCellsSpec extends SparkSpec {
       array((0 until 64).map(i => (col("id") + lit(i + 1)).cast("float")): _*)
         .as("embedding"))
     val rows = nonNull
-      .select(IvfPq.rankedCells(spark, cs, col("embedding"), 2).as("c"))
+      .select(IvfPq.rankedCells(cs, col("embedding"), 2).as("c"))
       .collect()
     assert(rows.length === 4)
     assert(rows.forall(_.getSeq[Long](0).size === 2))

@@ -17,9 +17,7 @@ class VectorExpressionsSpec extends SparkSpec {
 
   test("graft_dot equals the zip_with/aggregate fold bit-for-bit") {
     val df = vecs.toDF("id", "a", "b")
-    val fold = aggregate(
-      zip_with(col("a"), col("b"), (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
+    val fold = VectorReference.dot(col("a"), col("b"))
     val rows = df.select(call_function("graft_dot", col("a"), col("b")).as("native"),
         fold.as("fold")).collect()
     rows.foreach(r => assert(r.getDouble(0) === r.getDouble(1)))

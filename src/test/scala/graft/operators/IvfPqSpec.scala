@@ -83,7 +83,7 @@ class IvfPqSpec extends SparkSpec {
     assert(codes.filter(col("cell") < 1 || col("cell") > k).count() === 0)
     // the stored cell column IS the assignment expression's output
     val mismatch = codes.join(emb, "vec_id")
-      .filter(IvfPq.cellOf(spark, cents, col("embedding")) =!= col("cell"))
+      .filter(IvfPq.cellOf(cents, col("embedding")) =!= col("cell"))
       .count()
     assert(mismatch === 0)
   }
@@ -98,53 +98,60 @@ class IvfPqSpec extends SparkSpec {
     val degenerate = Seq((99999L, Seq.fill(dim)(0.0f)))
       .toDF("vec_id", "embedding")
     val e = intercept[Exception] {
-      degenerate.select(IvfPq.cellOf(spark, cents, col("embedding"))).collect()
+      degenerate.select(IvfPq.cellOf(cents, col("embedding"))).collect()
     }
     assert(e.getMessage.contains("zero-norm"),
       s"expected the zero-norm guard to fire, got: ${e.getMessage}")
   }
 
-  test("null-element embeddings fail the encode scan loudly — both paths") {
+  /** A frame holding one embedding with a null ELEMENT (not a null
+    * array), plus k trained centroids. */
+  private def poisonedFrame(session: org.apache.spark.sql.SparkSession)
+      : (org.apache.spark.sql.DataFrame, Seq[Seq[Float]]) = {
     val k = IvfPq.cellsFor(emb.count())
     val sample = ProductQuantizer
       .sampleRows(emb, IvfPq.coarseSampleSize(k)).map(_._2).toSeq
     val cents = IvfPq.trainCoarse(sample, k)
     val dim = sample.head.size
-    // a null ELEMENT (not a null array): scored as 0/garbage it would be
-    // silently assigned a wrong cell — mis-indexed forever, unlike the
-    // null-ARRAY case, which nulls out visibly
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val poisoned = spark.createDataFrame(
+    val poisoned = session.createDataFrame(
       java.util.Arrays.asList(Row(99998L,
         Seq.tabulate(dim)(i => if (i == 3) null else Float.box(0.5f)))),
       StructType(Seq(StructField("vec_id", LongType),
         StructField("embedding", ArrayType(FloatType, containsNull = true)))))
-    // native codegen'd path (the session carries GraftExtensions)
+    (poisoned, cents)
+  }
+
+  test("null-element embeddings fail the encode scan loudly") {
+    // a null ELEMENT (not a null array): scored as 0/garbage it would be
+    // silently assigned a wrong cell — mis-indexed forever, unlike the
+    // null-ARRAY case, which nulls out visibly
+    val (poisoned, cents) = poisonedFrame(spark)
     assert(spark.catalog.functionExists("graft_nearest_cell"),
       "spec session must carry the native expression for this test")
     val eNative = intercept[Exception] {
-      poisoned.select(IvfPq.cellOf(spark, cents, col("embedding"))).collect()
+      poisoned.select(IvfPq.cellOf(cents, col("embedding"))).collect()
     }
     assert(eNative.getMessage.contains("null-element"),
       s"native path: expected the null-element guard, got: ${eNative.getMessage}")
-    // composable HOF fallback (a session WITHOUT the native function)
-    // must fail identically — same trap, same loud message. newSession
-    // inherits the extensions (static conf), so drop the function from
-    // ITS registry only; the shared spec session keeps it.
+  }
+
+  test("cellOf in a session without graft_nearest_cell fails at analysis, before any job") {
+    // newSession inherits the extensions (static conf), so drop the
+    // function from ITS registry only; the shared spec session keeps it
     val bare = spark.newSession()
     bare.sessionState.functionRegistry.dropFunction(
       org.apache.spark.sql.catalyst.FunctionIdentifier("graft_nearest_cell"))
     assert(!bare.catalog.functionExists("graft_nearest_cell"))
-    // the session-threading fix: resolution follows the OWNING session,
-    // never SparkSession.active — cellOf(bare, ...) must take the
-    // fallback even while the active session still carries the native
-    // expression
-    val eFallback = intercept[Exception] {
-      poisoned.select(IvfPq.cellOf(bare, cents, col("embedding"))).collect()
+    val (poisoned, cents) = poisonedFrame(bare)
+    // select analyzes eagerly: the error comes from building the frame,
+    // with no action called, so no Spark job can have run
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      poisoned.select(IvfPq.cellOf(cents, col("embedding")))
     }
-    assert(eFallback.getMessage.contains("null-element"),
-      s"fallback path: expected the null-element guard, got: ${eFallback.getMessage}")
+    assert(e.getCondition === "UNRESOLVED_ROUTINE", e.getMessage)
+    assert(e.getMessage.contains("graft_nearest_cell"), e.getMessage)
     assert(spark.catalog.functionExists("graft_nearest_cell"))
   }
 
@@ -242,9 +249,11 @@ class IvfPqSpec extends SparkSpec {
     // the clump concentrates: probed cells carry far more rows than the
     // balanced N/k expectation, so the adaptive policy must deepen
     val probed = IvfPq.probeCells(cents, probeVec)
-    val files = cat.loadTable("vec", "emb_ivfpq_codes").filesAsOf(None)
-    val probedRows = files.filter(_.colRanges.flatMap(_.get("cell")).exists(
-      rg => probed.exists(c => rg.max >= c && rg.min <= c)))
+    val codesMeta = cat.loadTable("vec", "emb_ivfpq_codes")
+    val files = codesMeta.filesAsOf(None)
+    val probedRows = files.filter(graft.catalog.Partitioning.keepByStats(_,
+        codesMeta.schema, org.apache.spark.sql.sources.In("cell",
+          probed.toArray[Any])))
       .map(_.rowCount).sum
     val expected = probed.size * files.map(_.rowCount).sum.toDouble / cents.size
     assert(probedRows > 2.0 * expected,
@@ -252,9 +261,7 @@ class IvfPqSpec extends SparkSpec {
     assert(IvfPq.adaptiveRerankK(ProductQuantizer.shortlistK, probedRows,
       expected) > ProductQuantizer.shortlistK)
     // recall with the ADAPTIVE default vs the exact brute force
-    val dotc = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-        lit(0.0), (acc, x) => acc + x)
+    val dotc = graft.functions.VectorReference.dot _
     val probeLit = typedLit(probeVec)
     val brute = all.filter(col("vec_id") =!= probeId)
       .select(col("vec_id"), (dotc(col("embedding"), probeLit) /

@@ -26,7 +26,7 @@ class ProductQuantizerSpec extends SparkSpec {
     val model = ProductQuantizer.train(
       ProductQuantizer.sampleRows(emb).map(_._2).toSeq)
     val codes = emb.select(
-      ProductQuantizer.packedCodes(spark, model, col("embedding")).as("codes"))
+      ProductQuantizer.packedCodes(model, col("embedding")).as("codes"))
     // every nibble decodes to a valid centroid index, and the word uses
     // no bits beyond 4*M = 64 (i.e. the long never goes negative only
     // via the top nibble — all 16 nibbles in range covers it)
@@ -52,7 +52,7 @@ class ProductQuantizerSpec extends SparkSpec {
     // committed codes equal a fresh encode under the rehydrated model
     val committed = cat.readTable(spark, "vec", "emb_pq_codes")
     val fresh = emb.select(col("vec_id"),
-      ProductQuantizer.packedCodes(spark, loaded, col("embedding")).as("fresh"))
+      ProductQuantizer.packedCodes(loaded, col("embedding")).as("fresh"))
     val mismatches = committed.join(fresh, "vec_id")
       .filter(col("codes") =!= col("fresh")).count()
     assert(mismatches === 0)
@@ -74,9 +74,9 @@ class ProductQuantizerSpec extends SparkSpec {
       ProductQuantizer.sampleRows(emb).map(_._2).toSeq)
     val probe = ProductQuantizer.sampleRows(emb).head._2
     val scored = emb
-      .withColumn("codes", ProductQuantizer.packedCodes(spark, model, col("embedding")))
+      .withColumn("codes", ProductQuantizer.packedCodes(model, col("embedding")))
       .withColumn("approx",
-        ProductQuantizer.approxCosine(spark, model, probe, col("codes")))
+        ProductQuantizer.approxCosine(model, probe, col("codes")))
     // scores are finite cosine-ish values
     assert(scored.filter(col("approx").isNull ||
       abs(col("approx")) > 1.5).count() === 0)
