@@ -25,18 +25,20 @@ object Bench {
   /** Seconds one run of `fn` took, or None when it threw: a query that
     * fails is reported as failed, never timed and summed as if it ran.
     * The noop sink materializes every output column — count() would let
-    * Catalyst prune the projection and under-measure the real work. */
+    * Catalyst prune the projection and under-measure the real work. The
+    * run's scratch is deleted after the clock stops. */
   private[graft] def timeOnce(spark: SparkSession, sfDir: String, fn: QFn,
-                              name: String): Option[Double] = {
-    val t0 = System.nanoTime()
-    try {
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      Some((System.nanoTime() - t0) / 1e9)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] $name FAILED: $e")
-      None
+                              name: String): Option[Double] =
+    queries.Fixtures.run(spark) {
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: $e")
+        None
+      }
     }
-  }
 
   /** Best-of-`maxRuns` timing (see main): at least two runs, the third
     * only while the runs so far stayed under `budget` seconds. None as

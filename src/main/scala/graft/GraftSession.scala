@@ -59,4 +59,25 @@ object GraftSession {
       case (k, None)    => spark.conf.unset(k)
     }
   }
+
+  /** Run `body` with a [[graft.catalog.GraftSparkCatalog]] over
+    * `warehouse` registered on `spark`'s session, passing it the catalog's
+    * name; `options` are further catalog options (`rowlevel.mode` ->
+    * `merge-on-read`). The registration is scoped by [[withConfs]].
+    *
+    * Spark caches a catalog instance by name for the session's lifetime
+    * and never re-reads its options, so the name is derived from the
+    * warehouse's absolute path and the options: the same inputs reuse the
+    * cached instance, different options get a fresh one. */
+  def withCatalog[T](spark: SparkSession, warehouse: String,
+                     options: (String, String)*)(body: String => T): T = {
+    val wh = java.nio.file.Paths.get(warehouse).toAbsolutePath.toString
+    val id = (wh +: options.sorted.map { case (k, v) => s"$k=$v" }).mkString("\u0000")
+    val cname = "graft_" + java.util.UUID.nameUUIDFromBytes(id.getBytes("UTF-8"))
+      .toString.replace("-", "").take(16)
+    val key = s"spark.sql.catalog.$cname"
+    withConfs(spark, Seq(key -> classOf[graft.catalog.GraftSparkCatalog].getName,
+      s"$key.warehouse" -> wh) ++ options.map { case (k, v) => s"$key.$k" -> v }: _*)(
+      body(cname))
+  }
 }

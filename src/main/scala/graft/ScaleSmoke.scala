@@ -72,8 +72,7 @@ object ScaleSmoke {
     val fresh = sys.env.get("SPARK_GRAFT_SCALE_FRESH").contains("1")
     val srcTag = (if (fresh) "fresh_" else "") +
       sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-    val scaledDir = Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target"))
-      .resolve(s"scale${mult}x_$srcTag")
+    val scaledDir = graft.queries.Fixtures.root.resolve(s"scale${mult}x_$srcTag")
     // the document-tier corpora (scaled docs + the streaming screen)
     // only build/run when the run targets them — a vectors-only ×1000
     // run must not pay a 500k-doc corpus build it never reads
@@ -195,7 +194,7 @@ object ScaleSmoke {
       var best = Double.MaxValue
       var rounds = 0
       var mb = 0.0
-      for (_ <- 1 to 2) {
+      for (_ <- 1 to 2) graft.queries.Fixtures.run(spark) {
         drainedShuffleMb() // discard bytes from any previous work
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, dir)
@@ -208,9 +207,10 @@ object ScaleSmoke {
     }
 
     // warm up the JVM on the base corpus before any timed run
-    if (docTier)
+    if (docTier) graft.queries.Fixtures.run(spark) {
       SparkEntry.queries(allTargets.head)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
+    }
 
     // st_neardup_screen: the streaming ingester's PER-BATCH cost as the
     // committed index grows ×MULT with the batch held FIXED — the L40
@@ -268,7 +268,7 @@ object ScaleSmoke {
         val (sigs, toks) = indexFor(docs, tag)
         var best = Double.MaxValue
         var mb = 0.0
-        for (_ <- 1 to 2) {
+        for (_ <- 1 to 2) graft.queries.Fixtures.run(spark) {
           drainedShuffleMb()
           val t0 = System.nanoTime()
           graft.streaming.Streaming.neardupScreen(batch,

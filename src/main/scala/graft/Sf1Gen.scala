@@ -207,7 +207,8 @@ object Sf1Gen {
   }
 
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("/root/repo/target/sf1")
+    val out = args.headOption.getOrElse(
+      graft.queries.Fixtures.root.resolve("sf1").toString)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val spark = SparkSession.builder()

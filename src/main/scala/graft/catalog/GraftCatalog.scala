@@ -728,10 +728,8 @@ class GraftCatalog(val warehouse: String) {
     // Spark's default INT96 is deprecated AND carries no parquet min/max
     // statistics, which would blind timestamp file-skipping — Iceberg
     // writers standardized on micros for the same reason.
-    val tsKey = "spark.sql.parquet.outputTimestampType"
-    val prevTs = spark.conf.get(tsKey)
-    spark.conf.set(tsKey, "TIMESTAMP_MICROS")
-    try {
+    graft.GraftSession.withConfs(spark,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
       val withParts = df.select(df.columns.map(col).toIndexedSeq ++ partCols: _*)
       val shaped =
         if (cluster)
@@ -739,7 +737,7 @@ class GraftCatalog(val warehouse: String) {
         else withParts
       shaped.write.partitionBy(meta.spec.map(gp + _.name): _*)
         .parquet(staging.toString)
-    } finally spark.conf.set(tsKey, prevTs)
+    }
     val stated = statFiles(findParquet(staging))
     val withTuples = stated.map { fm =>
       val rel = staging.relativize(Paths.get(fm.path))
@@ -1410,25 +1408,12 @@ class GraftCatalog(val warehouse: String) {
     // row must carry its (file, pos) tuple for the anti-join to bind to
     val needPos = withPos ||
       snaps.exists(sn => sn.isPositionDelete && sn.deletes.nonEmpty)
-    val schema0 =
-      if (!needPos) meta.schema
-      else StructType(meta.schema.fields ++ Seq(
-        org.apache.spark.sql.types.StructField(GraftCatalog.PosFileCol,
-          org.apache.spark.sql.types.StringType, nullable = true),
-        org.apache.spark.sql.types.StructField(GraftCatalog.PosIdxCol,
-          org.apache.spark.sql.types.LongType, nullable = true)))
-    val empty = () => spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema0)
+    val empty = () => scanFiles(spark, meta, Nil, keepPos = needPos)
     val merged = if (!snaps.exists(_.deletes.nonEmpty)) {
       // fast path (no merge-on-read debt): one multi-file scan per schema
       // version the live files were written under (almost always exactly
       // one), each projected to the current schema by field id
-      val groups = snaps.flatMap(sn => sn.addedFiles.map(f => sn.schemaVer -> f.path))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (v, fs) => v -> fs.map(_._2) }
-      if (groups.isEmpty) empty()
-      else groups.map { case (v, fs) => scanAt(spark, meta, v, fs, keepPos = needPos) }
-        .reduce(_ unionByName _)
+      scanFiles(spark, meta, snaps, keepPos = needPos)
     } else {
       // Merge-on-read: fold the snapshot log. Within one snapshot the
       // deletes apply to the ACCUMULATED earlier state first, then that
@@ -1735,13 +1720,7 @@ class GraftCatalog(val warehouse: String) {
     val nonAppend = range.filterNot(_.operation == "append")
     require(nonAppend.isEmpty,
       s"incremental read over non-append snapshots: ${nonAppend.map(sn => s"${sn.id}(${sn.operation})").mkString(", ")}")
-    val groups = range.flatMap(sn => sn.addedFiles.map(f => sn.schemaVer -> f.path))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (v, fs) => v -> fs.map(_._2) }
-    if (groups.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
-    else groups.map { case (v, fs) => scanAt(spark, meta, v, fs) }
-      .reduce(_ unionByName _)
+    scanFiles(spark, meta, range)
   }
 
   /** Row-level CDC CHANGELOG for snapshots in `(fromExclusive,
@@ -2272,23 +2251,31 @@ class GraftCatalog(val warehouse: String) {
     * schema version each file was written under (see [[scanAt]]). */
   private def readKeptFiles(spark: SparkSession, meta: TableMeta,
                             asOf: Option[Long], keep: Set[String],
-                            keepPos: Boolean = false): DataFrame = {
-    val groups = meta.stateAsOf(asOf)
-      .flatMap(sn => sn.addedFiles.map(f => sn.schemaVer -> f.path))
+                            keepPos: Boolean = false): DataFrame =
+    scanFiles(spark, meta, meta.stateAsOf(asOf), keepPos, keep)
+
+  /** The files `snaps` added (those `keep` accepts), as one multi-file
+    * [[scanAt]] per schema version they were written under, unioned in
+    * version order — or an empty frame of the current schema, plus the
+    * position columns when `keepPos`. */
+  private def scanFiles(spark: SparkSession, meta: TableMeta,
+                        snaps: Seq[SnapshotMeta], keepPos: Boolean = false,
+                        keep: String => Boolean = _ => true): DataFrame = {
+    val groups = snaps.flatMap(sn => sn.addedFiles.map(f => sn.schemaVer -> f.path))
       .filter { case (_, p) => keep(p) }
       .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (v, fs) => v -> fs.map(_._2) }
-    val emptySchema =
-      if (!keepPos) meta.schema
-      else StructType(meta.schema.fields ++ Seq(
+    if (groups.nonEmpty)
+      groups.map { case (v, fs) => scanAt(spark, meta, v, fs.map(_._2), keepPos) }
+        .reduce(_ unionByName _)
+    else {
+      val pos = Seq(
         org.apache.spark.sql.types.StructField(GraftCatalog.PosFileCol,
           org.apache.spark.sql.types.StringType, nullable = true),
         org.apache.spark.sql.types.StructField(GraftCatalog.PosIdxCol,
-          org.apache.spark.sql.types.LongType, nullable = true)))
-    if (groups.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
-    else groups.map { case (v, fs) => scanAt(spark, meta, v, fs, keepPos = keepPos) }
-      .reduce(_ unionByName _)
+          org.apache.spark.sql.types.LongType, nullable = true))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        if (keepPos) StructType(meta.schema.fields ++ pos) else meta.schema)
+    }
   }
 
   /** Walk `<dataDir>/<table>/` folders and register each as a table by

@@ -31,8 +31,8 @@ object UnsignedFixture {
     * differential oracle. */
   val FixtureVersion = 2
 
-  val FixturePath: String = sys.props.getOrElse("graft.tmp", "/root/repo/target") +
-    s"/uint64_fixture/uint64_v$FixtureVersion.parquet"
+  val FixturePath: String = graft.queries.Fixtures.root
+    .resolve(s"uint64_fixture/uint64_v$FixtureVersion.parquet").toString
 
   val Rows = 10000
 

@@ -360,29 +360,17 @@ object Extensions {
   /** One committed inverted text index per (JVM, sfDir) — the build
     * (one tokenize scan + range-clustered postings commit) is a
     * deterministic pure function of the documents table, i.e. a layout
-    * FIXTURE like [[ivfPqIndexFx]]: memoized so repeated runs measure
+    * FIXTURE like ivfPqIndexFx: memoized so repeated runs measure
     * the steady-state pruned PROBE the index exists for. */
-  private val textIndexFx = scala.collection.concurrent.TrieMap
-    .empty[String, graft.catalog.GraftCatalog]
-
-  // synchronized like Meta's fixture memos: TrieMap.getOrElseUpdate may
-  // evaluate the builder in RACING threads (one insert wins, the losers'
-  // multi-second builds + temp warehouses are discarded) — concurrent
-  // first probes from the three index-served queries would each pay it
   private[graft] def textIndexFor(s: SparkSession, d: String)
-      : graft.catalog.GraftCatalog = textIndexFx.synchronized {
-    textIndexFx.getOrElseUpdate(d, {
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(
-          sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-        "textidx")
-      val c = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
-      graft.operators.TextIndex.buildIndex(s, c, "txt", "docs",
-        Tables.spread(s, Tables.documents(s, d))
-          .select(col("doc_id"), col("text")),
-        tokensExpr)
-      c
-    })
+      : graft.catalog.GraftCatalog = Fixtures.memo(("textIndexFx", d)) {
+    val base = Fixtures.scratch(s, "textidx")
+    val c = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
+    graft.operators.TextIndex.buildIndex(s, c, "txt", "docs",
+      Tables.spread(s, Tables.documents(s, d))
+        .select(col("doc_id"), col("text")),
+      tokensExpr)
+    c
   }
 
   /** q_text_bm25_indexed (L72): BM25 through the COMMITTED inverted
@@ -455,18 +443,10 @@ object Extensions {
     * entry, so the SQL and programmatic paths cannot drift. */
   private def qSqlSearchText: QFn = (s, d) => {
     val cat = textIndexFor(s, d)
-    val cname = "gst_" + java.util.UUID.randomUUID.toString.take(8)
-    s.conf.set(s"spark.sql.catalog.$cname",
-      classOf[graft.catalog.GraftSparkCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cname.warehouse", cat.warehouse)
-    val res = try
+    val res = graft.GraftSession.withCatalog(s, cat.warehouse)(cname =>
       s.sql(s"CALL $cname.system.search_text('txt.docs', " +
           s"'${bm25ParamTerms.mkString(" ")}', 10)")
-        .localCheckpoint()
-    finally {
-      s.conf.unset(s"spark.sql.catalog.$cname")
-      s.conf.unset(s"spark.sql.catalog.$cname.warehouse")
-    }
+        .localCheckpoint())
     val scalaPath = graft.operators.TextIndex
       .bm25Candidates(s, cat, "txt", "docs", bm25ParamTerms)
       .select(bm25RankCols(bm25ParamTerms.length): _*)
@@ -488,18 +468,10 @@ object Extensions {
     val cat = ivfPqIndexFor(s, d)
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val (probeId, _) = ProductQuantizer.sampleRows(emb).head
-    val cname = "gsv_" + java.util.UUID.randomUUID.toString.take(8)
-    s.conf.set(s"spark.sql.catalog.$cname",
-      classOf[graft.catalog.GraftSparkCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cname.warehouse", cat.warehouse)
-    try
+    graft.GraftSession.withCatalog(s, cat.warehouse)(cname =>
       s.sql(s"CALL $cname.system.search_vec('vec.emb', $probeId, 10)")
         .localCheckpoint()
-        .orderBy(desc("cos_sim"), asc("vec_id"))
-    finally {
-      s.conf.unset(s"spark.sql.catalog.$cname")
-      s.conf.unset(s"spark.sql.catalog.$cname.warehouse")
-    }
+        .orderBy(desc("cos_sim"), asc("vec_id")))
   }
 
   /** q_hybrid_rrf (L58): reciprocal-rank fusion (Cormack, Clarke &
@@ -1075,42 +1047,21 @@ object Extensions {
     * arriving batch and the anti-join never shuffles either side.
     * Memoized like Meta's spjFixture so bench iterations measure the
     * anti-join, not repeated bucketed writes. */
-  private val dedupSpjFixtures =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
   private def dedupSpjFixture(s: SparkSession, d: String): String =
-    dedupSpjFixtures.synchronized {
-      dedupSpjFixtures.get(d) match {
-        case Some((cname, wh)) =>
-          // conf entries are per-session: re-register for this session
-          s.conf.set(s"spark.sql.catalog.$cname",
-            classOf[graft.catalog.GraftSparkCatalog].getName)
-          s.conf.set(s"spark.sql.catalog.$cname.warehouse", wh)
-          cname
-        case None =>
-          val base = java.nio.file.Files.createTempDirectory(
-            java.nio.file.Paths.get(
-              sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-            "dedup_spj")
-          val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
-          val docs = Tables.documents(s, d)
-            .select(col("doc_id"), md5(col("text")).as("h"))
-          val pivot = docs.agg(floor(max(col("doc_id")) / 2).cast("long"))
-            .head().getLong(0)
-          val hist = docs.filter(col("doc_id") < pivot).select("h").distinct()
-          val batch = docs.filter(col("doc_id") >= pivot)
-          cat.createTable("dd", "hist_b", hist.schema, Seq(("bucket[8]", "h")))
-          cat.createTable("dd", "batch_b", batch.schema, Seq(("bucket[8]", "h")))
-          cat.writePartitioned(s, "dd", "hist_b", hist)
-          cat.writePartitioned(s, "dd", "batch_b", batch)
-          val cname = "gdd_" +
-            base.getFileName.toString.replaceAll("[^a-zA-Z0-9]", "")
-          s.conf.set(s"spark.sql.catalog.$cname",
-            classOf[graft.catalog.GraftSparkCatalog].getName)
-          s.conf.set(s"spark.sql.catalog.$cname.warehouse", cat.warehouse)
-          dedupSpjFixtures(d) = (cname, cat.warehouse)
-          cname
-      }
+    Fixtures.memo(("dedup_spj", d)) {
+      val base = Fixtures.scratch(s, "dedup_spj")
+      val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), md5(col("text")).as("h"))
+      val pivot = docs.agg(floor(max(col("doc_id")) / 2).cast("long"))
+        .head().getLong(0)
+      val hist = docs.filter(col("doc_id") < pivot).select("h").distinct()
+      val batch = docs.filter(col("doc_id") >= pivot)
+      cat.createTable("dd", "hist_b", hist.schema, Seq(("bucket[8]", "h")))
+      cat.createTable("dd", "batch_b", batch.schema, Seq(("bucket[8]", "h")))
+      cat.writePartitioned(s, "dd", "hist_b", hist)
+      cat.writePartitioned(s, "dd", "batch_b", batch)
+      cat.warehouse
     }
 
   /** The storage-partitioned incremental-dedup frame: anti-join the
@@ -1121,14 +1072,14 @@ object Extensions {
     * only data movement of the whole ingestion check is reading the
     * batch's own buckets. */
   private[queries] def dedupIncrementalSpjFrame(s: SparkSession,
-                                               d: String): DataFrame = {
-    val cname = dedupSpjFixture(s, d)
-    s.sql(
-      s"""SELECT min(b.doc_id) AS doc_id, b.h
-         |FROM $cname.dd.batch_b b
-         |LEFT ANTI JOIN $cname.dd.hist_b hi ON b.h = hi.h
-         |GROUP BY b.h""".stripMargin)
-  }
+                                               d: String): DataFrame =
+    graft.GraftSession.withCatalog(s, dedupSpjFixture(s, d)) { cname =>
+      s.sql(
+        s"""SELECT min(b.doc_id) AS doc_id, b.h
+           |FROM $cname.dd.batch_b b
+           |LEFT ANTI JOIN $cname.dd.hist_b hi ON b.h = hi.h
+           |GROUP BY b.h""".stripMargin)
+    }
 
   /** q_dedup_incremental_spj: [[qDedupIncremental]] in its deployment
     * shape — the hash index as a bucket[8] catalog table, the batch
@@ -1596,8 +1547,6 @@ object Extensions {
     * the zorder/bucketed layout fixtures: the model build is one-time
     * INPUT, assignment + probe are what each run should measure. Returns
     * (seeds, centroids); the emb cache lives only for the training scans. */
-  private val trainedCellFx = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[org.apache.spark.sql.Row], Seq[Seq[Float]])]
 
   /** Cell count is SIZE-TARGETED, not fixed: k = max(8, ⌈√N⌉) — the
     * standard IVF list sizing. The two cost terms pull opposite ways:
@@ -1611,7 +1560,7 @@ object Extensions {
     * count() on the already-cached training scan. */
   private def trainedCellsFor(s: SparkSession, d: String)
       : (Seq[org.apache.spark.sql.Row], Seq[Seq[Float]]) =
-    trainedCellFx.getOrElseUpdate(d, {
+    Fixtures.memo(("trainedCellFx", d)) {
       val full = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"))
       // magnitude guard on the exact-training path (the round-11 verdict
@@ -1638,7 +1587,7 @@ object Extensions {
         val seeds = seedCells(emb, k)
         (seeds, trainCells(s, emb, seeds.map(_.getSeq[Float](1).toSeq)))
       } finally emb.unpersist()
-    })
+    }
 
   /** Driver-side cosine between two k-row parameters (centroid vs probe). */
   private def cosScalar(a: Seq[Float], b: Seq[Float]): Double = {
@@ -1747,9 +1696,7 @@ object Extensions {
     * raw store's vec_id blooms instead, the corpus-read-free shape.) */
   private def qVecKnnPqIndexed: QFn = (s, d) => {
     import graft.operators.ProductQuantizer
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "pqidx")
+    val base = Fixtures.scratch(s, "pqidx")
     val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     ProductQuantizer.buildIndex(s, cat, "vec", "emb", emb)
@@ -1791,9 +1738,7 @@ object Extensions {
     * either way). */
   private def qVecKnnDeleted: QFn = (s, d) => {
     import graft.operators.ProductQuantizer
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "pqdel")
+    val base = Fixtures.scratch(s, "pqdel")
     val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     ProductQuantizer.buildIndex(s, cat, "vec", "emb", emb)
@@ -1839,21 +1784,16 @@ object Extensions {
     * SAME pruned probe are both spec-checked in
     * VectorMaintenanceSpec. */
   /** One tombstoned index per (JVM, sfDir): the build + the delete EVENT
-    * are deployment state, not per-query work (the [[ivfPqIndexFx]]
+    * are deployment state, not per-query work (the ivfPqIndexFx
     * reasoning — deployment: the index exists and the opt-out landed;
     * what every query after pays is the LIVE read), so they memoize as a
     * fixture and repeated runs measure the tombstone-folding search. */
-  private val ivfPqDeletedEqFx = scala.collection.concurrent.TrieMap
-    .empty[String, graft.catalog.GraftCatalog]
-
   private def qVecKnnDeletedEq: QFn = (s, d) => {
     import graft.operators.{IvfPq, ProductQuantizer}
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val (probeId, probeVec) = ProductQuantizer.sampleRows(emb).head
-    val cat = ivfPqDeletedEqFx.getOrElseUpdate(d, {
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-        "ivfpqdeleq")
+    val cat = Fixtures.memo(("ivfPqDeletedEqFx", d)) {
+      val base = Fixtures.scratch(s, "ivfpqdeleq")
       val c = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
       IvfPq.buildIndex(s, c, "vec", "emb", emb)
       // the delete event: ids only — no reader positions, no data rewrite
@@ -1861,15 +1801,13 @@ object Extensions {
         pmod(col("vec_id"), lit(13)) === 5 && col("vec_id") =!= probeId,
         Seq("vec_id"))
       c
-    })
+    }
     IvfPq.search(s, cat, "vec", "emb", emb, probeId, probeVec)
   }
 
   /** One tombstoned index WITH metadata per (JVM, sfDir) — the
-    * [[ivfPqDeletedEqFx]] scenario plus the label column riding the
+    * ivfPqDeletedEqFx scenario plus the label column riding the
     * codes table, for the filter × tombstone composition query. */
-  private val ivfPqFilteredDeletedFx = scala.collection.concurrent.TrieMap
-    .empty[String, graft.catalog.GraftCatalog]
 
   /** q_vec_knn_filtered_deleted (L69): the two production predicates a
     * deployed vector search carries SIMULTANEOUSLY — a metadata filter
@@ -1892,10 +1830,8 @@ object Extensions {
       .select("vec_id", "embedding", "label").head()
     val (probeId, probeVec, probeLabel) =
       (p.getLong(0), p.getSeq[Float](1), p.getInt(2))
-    val cat = ivfPqFilteredDeletedFx.getOrElseUpdate(d, {
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-        "ivfpqfdel")
+    val cat = Fixtures.memo(("ivfPqFilteredDeletedFx", d)) {
+      val base = Fixtures.scratch(s, "ivfpqfdel")
       val c = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
       IvfPq.buildIndex(s, c, "vec", "emb",
         Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
@@ -1904,7 +1840,7 @@ object Extensions {
         pmod(col("vec_id"), lit(13)) === 5 && col("vec_id") =!= probeId,
         Seq("vec_id"))
       c
-    })
+    }
     // manifest-derived probe widening (the searchEq policy — see
     // [[qVecKnnFiltered]]); the tombstone anti-join folds into the same
     // pruned scan before the filter, whatever the derived breadth
@@ -1934,11 +1870,9 @@ object Extensions {
     * ONE encode scan + three snapshots) is a deterministic pure function
     * of the embeddings table, i.e. layout FIXTURE, not per-query work:
     * memoized exactly like the zorder/bucketed tables and
-    * [[trainedCellFx]], so repeated runs measure the steady-state SEARCH
+    * trainedCellFx, so repeated runs measure the steady-state SEARCH
     * the index exists for (deployment: the index is built once by the
     * ETL/streaming path and probed by every query after). */
-  private val ivfPqIndexFx = scala.collection.concurrent.TrieMap
-    .empty[String, graft.catalog.GraftCatalog]
 
   /** The memoized index is built from the FULL embeddings row — the
     * label column (and a derived licence `tier`, the second metadata
@@ -1949,25 +1883,19 @@ object Extensions {
     * on the same pruned scan. Unfiltered search prunes the columns
     * away (Catalyst column pruning), so q_vec_knn_ivfpq reads the same
     * bytes either way. */
-  // synchronized for the same reason as [[textIndexFor]]: racing first
-  // probes must not each pay the build
   private def ivfPqIndexFor(s: SparkSession, d: String)
-      : graft.catalog.GraftCatalog = ivfPqIndexFx.synchronized {
-    ivfPqIndexFx.getOrElseUpdate(d, {
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-        "ivfpq")
-      val c = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
-      graft.operators.IvfPq.buildIndex(s, c, "vec", "emb",
-        Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
-          col("label"),
-          // the licence-tier stand-in: a 4-value enum derived from the
-          // id (the fixture has no second categorical column) — what
-          // matters is that it is a SECOND independent predicate column
-          // whose domain the manifest records
-          pmod(col("vec_id"), lit(4)).cast("int").as("tier")))
-      c
-    })
+      : graft.catalog.GraftCatalog = Fixtures.memo(("ivfPqIndexFx", d)) {
+    val base = Fixtures.scratch(s, "ivfpq")
+    val c = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
+    graft.operators.IvfPq.buildIndex(s, c, "vec", "emb",
+      Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
+        col("label"),
+        // the licence-tier stand-in: a 4-value enum derived from the
+        // id (the fixture has no second categorical column) — what
+        // matters is that it is a SECOND independent predicate column
+        // whose domain the manifest records
+        pmod(col("vec_id"), lit(4)).cast("int").as("tier")))
+    c
   }
 
   /** The memoized committed-index catalog for `d` — exposed for the

@@ -21,9 +21,8 @@ object Meta {
   /** Build `<target>/meta_demo-<salt>/data/<table>/<table>.parquet` symlink
     * tree + empty warehouse; returns (dataDir, warehouseDir). Fresh dirs
     * per call keep Verify/Bench runs independent. */
-  private def demoDirs(sfDir: String): (String, String) = {
-    val base = Files.createTempDirectory(
-      Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")), "meta_demo")
+  private def demoDirs(s: SparkSession, sfDir: String): (String, String) = {
+    val base = Fixtures.scratch(s, "meta_demo")
     val data = base.resolve("data")
     val wh = base.resolve("warehouse")
     Files.createDirectories(wh)
@@ -45,23 +44,10 @@ object Meta {
     (data.toString, wh.toString)
   }
 
-  /** Best-effort cleanup of a per-query catalog registration. NOTE
-    * (advisor r3): `conf.unset` removes the config keys but does NOT
-    * evict the plugin instance already cached in the session's
-    * CatalogManager — Spark caches catalog instances by name for the
-    * session's lifetime. Cross-query correctness therefore rests on the
-    * catalog NAMES being salted per run (fresh temp-dir suffix), which
-    * every registrant here maintains; the unset just keeps the conf
-    * surface tidy. */
-  private def unregisterCatalog(s: SparkSession, cname: String): Unit = {
-    s.conf.unset(s"spark.sql.catalog.$cname")
-    s.conf.unset(s"spark.sql.catalog.$cname.warehouse")
-  }
-
   /** meta_import: full importer pipeline (A1-A11) → per-table summary. */
   private def metaImport: QFn = (s, d) => {
     import s.implicits._
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     val out = cat.importFolders(s, data)
     // drop + re-import one table to exercise dropTable(purge) idempotence
@@ -76,7 +62,7 @@ object Meta {
   /** meta_snapshots: two appends → snapshot log (A7, A13). */
   private def metaSnapshots: QFn = (s, d) => {
     import s.implicits._
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     cat.importFolders(s, data)
     cat.importFolders(s, data) // second append on every table
@@ -97,7 +83,7 @@ object Meta {
     * number. */
   private def metaFiles: QFn = (s, d) => {
     import s.implicits._
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     cat.importFolders(s, data)
     cat.listTables("nyc").flatMap { t =>
@@ -116,7 +102,7 @@ object Meta {
     * both states from the raw table and the compare proves `VERSION AS OF`
     * returns the right ROWS, not merely the right counts. */
   private def metaTimeTravel: QFn = (s, d) => {
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     cat.importFolders(s, data)
     cat.importFolders(s, data) // snapshot 2 doubles every table
@@ -136,7 +122,7 @@ object Meta {
 
   /** meta_show_tables: I2/I3 introspection triple. */
   private def metaShowTables: QFn = (s, d) => {
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     cat.importFolders(s, data)
     GraftSql.showTables(s, cat, "nyc").orderBy("tableName")
@@ -176,7 +162,7 @@ object Meta {
   /** meta_show_create: I4 DDL text per table. */
   private def metaShowCreate: QFn = (s, d) => {
     import s.implicits._
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     cat.importFolders(s, data)
     cat.listTables("nyc").map(t => (t, GraftSql.showCreateTable(cat, "nyc", t)))
@@ -187,7 +173,7 @@ object Meta {
   /** meta_describe: DESCRIBE TABLE for every imported table — the BI
     * schema-introspection surface, metadata-only. */
   private def metaDescribe: QFn = (s, d) => {
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     cat.importFolders(s, data)
     cat.listTables("nyc").map { t =>
@@ -203,16 +189,11 @@ object Meta {
     * Exactly how the reference's Thrift server resolves Iceberg tables. */
   private def metaSqlCatalog: QFn = (s, d) => {
     import s.implicits._
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val boot = new GraftCatalog(wh)
     boot.importFolders(s, data)
     boot.importFolders(s, data) // snapshot 2 doubles every table
-    val cname = "g_" + Paths.get(wh).getParent.getFileName.toString
-      .replaceAll("[^a-zA-Z0-9]", "")
-    s.conf.set(s"spark.sql.catalog.$cname",
-      classOf[graft.catalog.GraftSparkCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cname.warehouse", wh)
-    try {
+    graft.GraftSession.withCatalog(s, wh) { cname =>
     // the four read-only probes have no mutation between them: ONE
     // crossJoined action at the same scenario point (round-17, guide
     // §1.2 — was 4 serial jobs); regionBefore stays its own real
@@ -280,7 +261,7 @@ object Meta {
       ("metadata_table_files", fileRows, fileRows == regionAfter))
       .toDF("phase", "n", "invariant_ok")
       .orderBy("phase") // total key: phase strings are unique
-    } finally unregisterCatalog(s, cname) // names salted: see helper note
+    }
   }
 
   /** meta_sql_merge: the row-level DML statement surface — SQL `MERGE
@@ -293,17 +274,12 @@ object Meta {
     * state. Non-oracle: DuckDB sees neither the catalog nor snapshots. */
   private def metaSqlMerge: QFn = (s, d) => {
     import s.implicits._
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val boot = new GraftCatalog(wh)
     boot.importFolders(s, data)
-    val salt = Paths.get(wh).getParent.getFileName.toString
+    val srcView = "merge_src_" + Paths.get(wh).getParent.getFileName.toString
       .replaceAll("[^a-zA-Z0-9]", "")
-    val cname = "gmrg_" + salt
-    val srcView = "merge_src_" + salt
-    s.conf.set(s"spark.sql.catalog.$cname",
-      classOf[graft.catalog.GraftSparkCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cname.warehouse", wh)
-    try {
+    try graft.GraftSession.withCatalog(s, wh) { cname =>
       // the pre-DML count stays a REAL pre-DML action: the
       // time_travel_pre_dml invariant compares a post-DML VERSION AS OF
       // read against this independently-measured baseline
@@ -366,10 +342,7 @@ object Meta {
         .select(col("r.phase").as("phase"), col("r.n").as("n"),
           col("r.invariant_ok").as("invariant_ok"))
         .orderBy("phase") // total key: phase strings are unique
-    } finally {
-      s.catalog.dropTempView(srcView)
-      unregisterCatalog(s, cname) // names salted: see helper note
-    }
+    } finally s.catalog.dropTempView(srcView)
   }
 
   /** meta_sql_merge_mor: the SAME SQL DML statements in MERGE-ON-READ mode
@@ -383,19 +356,14 @@ object Meta {
     * materialization. Non-oracle by design. */
   private def metaSqlMergeMor: QFn = (s, d) => {
     import s.implicits._
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val boot = new GraftCatalog(wh)
     boot.importFolders(s, data)
-    val salt = Paths.get(wh).getParent.getFileName.toString
+    val srcView = "mor_src_" + Paths.get(wh).getParent.getFileName.toString
       .replaceAll("[^a-zA-Z0-9]", "")
-    val cname = "gmor_" + salt
-    val srcView = "mor_src_" + salt
-    s.conf.set(s"spark.sql.catalog.$cname",
-      classOf[graft.catalog.GraftSparkCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cname.warehouse", wh)
-    s.conf.set(s"spark.sql.catalog.$cname.rowlevel.mode", "merge-on-read")
-    s.conf.set(s"spark.sql.catalog.$cname.rowlevel.identity", "r_regionkey")
-    try {
+    try graft.GraftSession.withCatalog(s, wh,
+        "rowlevel.mode" -> "merge-on-read",
+        "rowlevel.identity" -> "r_regionkey") { cname =>
       // pre-DML baseline: a REAL pre-DML action the invariants compare to
       val before = boot.readTable(s, "nyc", "region").count()
       s.sql(s"""SELECT * FROM VALUES (0, 'm0'), (100, 'new100')
@@ -459,12 +427,7 @@ object Meta {
         .select(col("r.phase").as("phase"), col("r.n").as("n"),
           col("r.invariant_ok").as("invariant_ok"))
         .orderBy("phase") // total key: phase strings are unique
-    } finally {
-      s.catalog.dropTempView(srcView)
-      unregisterCatalog(s, cname) // names salted: see helper note
-      s.conf.unset(s"spark.sql.catalog.$cname.rowlevel.mode")
-      s.conf.unset(s"spark.sql.catalog.$cname.rowlevel.identity")
-    }
+    } finally s.catalog.dropTempView(srcView)
   }
 
   /** meta_default_catalog: the reference's default-catalog UX
@@ -475,17 +438,11 @@ object Meta {
     * declared queries — and tables resolve unprefixed. */
   private def metaDefaultCatalog: QFn = (s, d) => {
     import s.implicits._
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val boot = new GraftCatalog(wh)
     boot.importFolders(s, data)
-    val cname = "gdef_" + Paths.get(wh).getParent.getFileName.toString
-      .replaceAll("[^a-zA-Z0-9]", "")
-    s.conf.set(s"spark.sql.catalog.$cname",
-      classOf[graft.catalog.GraftSparkCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cname.warehouse", wh)
-    val prev = s.conf.get("spark.sql.defaultCatalog")
-    s.conf.set("spark.sql.defaultCatalog", cname)
-    try {
+    graft.GraftSession.withCatalog(s, wh) { cname =>
+    graft.GraftSession.withConfs(s, "spark.sql.defaultCatalog" -> cname) {
       val n = s.sql("SELECT count(*) AS n FROM nyc.region").as[Long].head()
       val joined = s.sql(
         """SELECT r.r_name, count(*) AS n_nations
@@ -495,10 +452,7 @@ object Meta {
         ("unprefixed_join_groups", joined, joined == 5))
         .toDF("phase", "n", "invariant_ok")
         .orderBy("phase") // total key: phase strings are unique
-    } finally {
-      s.conf.set("spark.sql.defaultCatalog", prev)
-      unregisterCatalog(s, cname) // names salted: see helper note
-    }
+    }}
   }
 
   /** meta_expire: snapshot expiration — the Iceberg maintenance verb
@@ -509,8 +463,7 @@ object Meta {
     * the earliest retained snapshot is a delta). Non-oracle by design. */
   private def metaExpire: QFn = (s, _) => {
     import s.implicits._
-    val base = Files.createTempDirectory(
-      Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")), "meta_expire")
+    val base = Fixtures.scratch(s, "meta_expire")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     def land(n: Long, dir: String): Path = {
       val d = Paths.get(cat.warehouse, "nyc", "exp_t", "data", dir)
@@ -635,8 +588,7 @@ object Meta {
     * sees neither the catalog nor schema versions. */
   private def metaSchemaEvolution: QFn = (s, _) => {
     import s.implicits._
-    val base = Files.createTempDirectory(
-      Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")), "meta_evolve")
+    val base = Fixtures.scratch(s, "meta_evolve")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     def land(df: DataFrame, dir: String): Path = {
       val p = base.resolve(dir)
@@ -667,12 +619,7 @@ object Meta {
     val reAdd = cat.readTable(s, "nyc", "evo_t").orderBy("id").collect()
     val droppedStaysDead = reAdd.forall(_.isNullAt(3))
     // SQL serving path: refuses the drifted layout, serves after materialize
-    val salt = base.getFileName.toString.replaceAll("[^a-zA-Z0-9]", "")
-    val cname = "gevo_" + salt
-    s.conf.set(s"spark.sql.catalog.$cname",
-      classOf[graft.catalog.GraftSparkCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cname.warehouse", cat.warehouse)
-    try {
+    graft.GraftSession.withCatalog(s, cat.warehouse) { cname =>
       val refused = scala.util.Try(
         s.sql(s"SELECT * FROM $cname.nyc.evo_t").collect()).isFailure
       graft.etl.Maintenance.optimize(s, cat, "nyc", "evo_t")
@@ -695,7 +642,7 @@ object Meta {
         ("sql_alter_table_add", sqlAltered, sqlAltered == 3L))
         .toDF("phase", "n", "invariant_ok")
         .orderBy("phase") // total key: phase strings are unique
-    } finally unregisterCatalog(s, cname) // names salted: see helper note
+    }
   }
 
   /** meta_partitioned: Iceberg-style HIDDEN PARTITIONING end-to-end —
@@ -711,8 +658,7 @@ object Meta {
     * the RAW lineitem; pruning invariants ride along as bool columns. */
   private def metaPartitioned: QFn = (s, d) => {
     import s.implicits._
-    val base = Files.createTempDirectory(
-      Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")), "meta_part")
+    val base = Fixtures.scratch(s, "meta_part")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     val li = graft.Tables.lineitem(s, d)
       .select("l_orderkey", "l_suppkey", "l_shipdate", "l_quantity", "l_returnflag")
@@ -722,12 +668,7 @@ object Meta {
     val files = cat.loadTable("nyc", "li_part").filesAsOf(None)
     val tuplesRecorded = files.nonEmpty && files.forall(_.partition.exists(t =>
       t.contains("l_shipdate_year") && t.contains("l_suppkey_bucket")))
-    val salt = base.getFileName.toString.replaceAll("[^a-zA-Z0-9]", "")
-    val cname = "gpart_" + salt
-    s.conf.set(s"spark.sql.catalog.$cname",
-      classOf[graft.catalog.GraftSparkCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cname.warehouse", cat.warehouse)
-    try {
+    graft.GraftSession.withCatalog(s, cat.warehouse) { cname =>
       import graft.catalog.GraftPruningScanBuilder.filesScanned
       // each probe reads its kept-file count off its own executed plan
       val cand = files.size
@@ -758,7 +699,7 @@ object Meta {
         .withColumn("tuples_recorded", lit(tuplesRecorded))
         .withColumn("range_prunes", lit(rangePrunes))
         .withColumn("bucket_prunes", lit(bucketPrunes))
-    } finally unregisterCatalog(s, cname) // names salted: see helper note
+    }
   }
 
   /** meta_spec_evolution: Iceberg PARTITION SPEC EVOLUTION — the table's
@@ -780,30 +721,23 @@ object Meta {
     * template's METADATA tree — a few KB of versioned JSON whose
     * manifests hold absolute data paths, so the clone reads the
     * template's parquet without copying a single data byte. */
-  private val specEvoTemplates =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Int)]
-
   private def specEvoTemplate(s: SparkSession, d: String,
                               cut: java.sql.Timestamp): (String, Int) =
-    specEvoTemplates.synchronized {
-      specEvoTemplates.getOrElseUpdate(d, {
-        val base = Files.createTempDirectory(
-          Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-          "meta_specevo_tpl")
-        val cat = new GraftCatalog(base.resolve("wh").toString)
-        val li = graft.Tables.lineitem(s, d)
-          .select("l_orderkey", "l_suppkey", "l_shipdate", "l_quantity")
-        // era A lands under spec 1: year(l_shipdate)
-        cat.createTable("nyc", "li_evo", li.schema, Seq(("year", "l_shipdate")))
-        cat.writePartitioned(s, "nyc", "li_evo",
-          li.filter(col("l_shipdate") < lit(cut)))
-        val filesA = cat.files("nyc", "li_evo").size
-        // evolve to spec 2: month(l_shipdate) — finer; no file rewritten
-        cat.evolvePartitionSpec("nyc", "li_evo", Seq(("month", "l_shipdate")))
-        cat.writePartitioned(s, "nyc", "li_evo",
-          li.filter(col("l_shipdate") >= lit(cut)))
-        (cat.warehouse, filesA)
-      })
+    Fixtures.memo(("specEvoTemplates", d)) {
+      val base = Fixtures.scratch(s, "meta_specevo_tpl")
+      val cat = new GraftCatalog(base.resolve("wh").toString)
+      val li = graft.Tables.lineitem(s, d)
+        .select("l_orderkey", "l_suppkey", "l_shipdate", "l_quantity")
+      // era A lands under spec 1: year(l_shipdate)
+      cat.createTable("nyc", "li_evo", li.schema, Seq(("year", "l_shipdate")))
+      cat.writePartitioned(s, "nyc", "li_evo",
+        li.filter(col("l_shipdate") < lit(cut)))
+      val filesA = cat.files("nyc", "li_evo").size
+      // evolve to spec 2: month(l_shipdate) — finer; no file rewritten
+      cat.evolvePartitionSpec("nyc", "li_evo", Seq(("month", "l_shipdate")))
+      cat.writePartitioned(s, "nyc", "li_evo",
+        li.filter(col("l_shipdate") >= lit(cut)))
+      (cat.warehouse, filesA)
     }
 
   private def metaSpecEvolution: QFn = (s, d) => {
@@ -812,8 +746,7 @@ object Meta {
     def t(v: String) = java.sql.Timestamp.valueOf(v + " 00:00:00")
     val cut = t("1998-01-01")
     val (tplWh, filesA) = specEvoTemplate(s, d, cut)
-    val base = Files.createTempDirectory(
-      Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")), "meta_specevo")
+    val base = Fixtures.scratch(s, "meta_specevo")
     val srcMeta = Paths.get(tplWh, "nyc", "li_evo", "metadata")
     val dstMeta = base.resolve("wh").resolve("nyc").resolve("li_evo")
       .resolve("metadata")
@@ -889,7 +822,7 @@ object Meta {
     * cleaned). Divergence refuses fast-forward, like Iceberg's
     * fast_forward ancestor requirement. Non-oracle: catalog semantics. */
   private def metaBranch: QFn = (s, d) => {
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     cat.importFolders(s, data)
     val n0 = cat.readTable(s, "nyc", "region").count()
@@ -963,15 +896,10 @@ object Meta {
     * LocalScan (no job). Non-oracle: catalog semantics. */
   private def metaProcedures: QFn = (s, d) => {
     import s.implicits._
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     cat.importFolders(s, data)
-    val cname = "gcall_" + Paths.get(wh).getParent.getFileName.toString
-      .replaceAll("[^a-zA-Z0-9]", "")
-    s.conf.set(s"spark.sql.catalog.$cname",
-      classOf[graft.catalog.GraftSparkCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cname.warehouse", wh)
-    try {
+    graft.GraftSession.withCatalog(s, wh) { cname =>
       val n0 = cat.readTable(s, "nyc", "region").count()
       // branch lifecycle through CALL
       val fork = s.sql(s"CALL $cname.system.create_branch('nyc.region', 'land')")
@@ -1005,7 +933,7 @@ object Meta {
           ex.getInt(2) == 1 && cat.readTable(s, "nyc", "region").count() == n0))
         .toDF("phase", "n", "invariant_ok")
         .orderBy("phase") // total key: phase strings are unique
-    } finally unregisterCatalog(s, cname) // names salted: see helper note
+    }
   }
 
   /** meta_spj: STORAGE-PARTITIONED JOIN — two catalog tables co-partitioned
@@ -1020,43 +948,25 @@ object Meta {
     * best-of-3, and rebuilding two bucketed table WRITES per iteration was
     * pure fixture tax (5.7 s of meta_spj's r4 cost) — the PROBE (the join
     * under both configs) is what each iteration should measure. */
-  private val spjFixtures =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
   private def spjFixture(s: SparkSession, d: String): String =
-    spjFixtures.synchronized {
-      spjFixtures.get(d) match {
-        case Some((cname, wh)) =>
-          // conf entries are per-session: re-register for this session
-          s.conf.set(s"spark.sql.catalog.$cname",
-            classOf[graft.catalog.GraftSparkCatalog].getName)
-          s.conf.set(s"spark.sql.catalog.$cname.warehouse", wh)
-          cname
-        case None =>
-          val base = Files.createTempDirectory(
-            Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")), "meta_spj")
-          val cat = new GraftCatalog(base.resolve("wh").toString)
-          val orders = graft.Tables.orders(s, d)
-            .select("o_orderkey", "o_custkey", "o_orderpriority")
-          val lineitem = graft.Tables.lineitem(s, d)
-            .select("l_orderkey", "l_quantity", "l_extendedprice")
-          cat.createTable("nyc", "o_b", orders.schema, Seq(("bucket[8]", "o_orderkey")))
-          cat.createTable("nyc", "l_b", lineitem.schema, Seq(("bucket[8]", "l_orderkey")))
-          cat.writePartitioned(s, "nyc", "o_b", orders)
-          cat.writePartitioned(s, "nyc", "l_b", lineitem)
-          val cname = "gspj_" + base.getFileName.toString.replaceAll("[^a-zA-Z0-9]", "")
-          s.conf.set(s"spark.sql.catalog.$cname",
-            classOf[graft.catalog.GraftSparkCatalog].getName)
-          s.conf.set(s"spark.sql.catalog.$cname.warehouse", cat.warehouse)
-          spjFixtures(d) = (cname, cat.warehouse)
-          cname
-      }
+    Fixtures.memo(("spj", d)) {
+      val base = Fixtures.scratch(s, "meta_spj")
+      val cat = new GraftCatalog(base.resolve("wh").toString)
+      val orders = graft.Tables.orders(s, d)
+        .select("o_orderkey", "o_custkey", "o_orderpriority")
+      val lineitem = graft.Tables.lineitem(s, d)
+        .select("l_orderkey", "l_quantity", "l_extendedprice")
+      cat.createTable("nyc", "o_b", orders.schema, Seq(("bucket[8]", "o_orderkey")))
+      cat.createTable("nyc", "l_b", lineitem.schema, Seq(("bucket[8]", "l_orderkey")))
+      cat.writePartitioned(s, "nyc", "o_b", orders)
+      cat.writePartitioned(s, "nyc", "l_b", lineitem)
+      cat.warehouse
     }
 
   private def metaSpj: QFn = (s, d) => {
     import s.implicits._
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val cname = spjFixture(s, d)
+    graft.GraftSession.withCatalog(s, spjFixture(s, d)) { cname =>
     def q = s.sql(
       s"""SELECT o.o_orderpriority, count(*) AS n_items,
          |       round(sum(l.l_quantity), 2) AS sum_qty
@@ -1076,14 +986,13 @@ object Meta {
       (q.orderBy("o_orderpriority").collect().toSeq, shuffles(q)) }
     // the final GROUP BY (non-partition key) keeps one exchange in both
     // shapes; SPJ removes exactly the JOIN's two full-table exchanges.
-    // The catalog stays registered: the fixture is reused across bench
-    // iterations (names are salted, so no collision is possible).
     Seq(("spj_join_shuffle_free", spjShuffles.toLong, spjShuffles == 1),
       ("control_join_shuffles", ctlShuffles.toLong, ctlShuffles == spjShuffles + 2),
       ("results_identical", spjRows.size.toLong,
         spjRows == ctlRows && spjRows.nonEmpty))
       .toDF("phase", "n", "invariant_ok")
       .orderBy("phase") // total key: phase strings are unique
+    }
   }
 
   /** meta_wap: write-audit-publish + linearized rollback — the snapshot
@@ -1096,8 +1005,7 @@ object Meta {
     * linearized). Non-oracle: pure catalog semantics. */
   private def metaWap: QFn = (s, d) => {
     import s.implicits._
-    val base = Files.createTempDirectory(
-      Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")), "meta_wap")
+    val base = Fixtures.scratch(s, "meta_wap")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     def land(df: DataFrame, dir: String): Path = {
       val p = base.resolve(dir); df.coalesce(1).write.parquet(p.toString); p
@@ -1164,7 +1072,7 @@ object Meta {
   /** meta_merge: the DML-equivalent surface — upsert + delete as overwrite
     * snapshots, with time travel back across both (SURVEY.md §7.5). */
   private def metaMerge: QFn = (s, d) => {
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     cat.importFolders(s, data)
     val snapImport = cat.loadTable("nyc", "region").currentSnapshotId
@@ -1205,7 +1113,7 @@ object Meta {
     * materialize() clears the debt without changing results, (d) time travel
     * still reaches the pre-DML state. */
   private def metaMergeMor: QFn = (s, d) => {
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     cat.importFolders(s, data)
     val snapImport = cat.loadTable("nyc", "region").currentSnapshotId
@@ -1280,28 +1188,21 @@ object Meta {
     * that never changes; the probes only ever register these files by
     * reference and the delete/materialize mutations land in each run's
     * own fresh warehouse. */
-  private val posTwinFixtures =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Path]]
-
   private def posTwinFiles(s: SparkSession, d: String): Seq[Path] =
-    posTwinFixtures.synchronized {
-      posTwinFixtures.getOrElseUpdate(d, {
-        val base = Files.createTempDirectory(
-          Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-          "posdata")
-        val region = graft.Tables.region(s, d)
-        region.coalesce(1).write.parquet(base.resolve("copy_a").toString)
-        region.coalesce(1).write.parquet(base.resolve("copy_b").toString)
-        Seq("copy_a", "copy_b").flatMap(n =>
-          graft.catalog.Fs.list(base.resolve(n))
-            .filter(_.toString.endsWith(".parquet")))
-      })
+    Fixtures.memo(("posTwinFixtures", d)) {
+      val base = Fixtures.scratch(s, "posdata")
+      val region = graft.Tables.region(s, d)
+      region.coalesce(1).write.parquet(base.resolve("copy_a").toString)
+      region.coalesce(1).write.parquet(base.resolve("copy_b").toString)
+      Seq("copy_a", "copy_b").flatMap(n =>
+        graft.catalog.Fs.list(base.resolve(n))
+          .filter(_.toString.endsWith(".parquet")))
     }
 
   private def metaMergePos: QFn = (s, d) => {
     import s.implicits._
     import graft.catalog.GraftCatalog.PosFileCol
-    val (_, wh) = demoDirs(d)
+    val (_, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     // two files with IDENTICAL logical content (5 region rows each): the
     // position-delete discrimination test needs value-indistinguishable rows
@@ -1373,7 +1274,7 @@ object Meta {
     * range crossing a non-append (DML) snapshot is refused. */
   private def metaIncremental: QFn = (s, d) => {
     import s.implicits._
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     cat.importFolders(s, data) // snapshot 1 per table
     val files1 = cat.files("nyc", "region").map(f => Paths.get(f.path))
@@ -1430,46 +1331,37 @@ object Meta {
     * clones the warehouse ([[graft.queries.Fixtures.cloneWarehouse]])
     * so the write-once view-healing path stays exercised per table and
     * nothing ever mutates the shared pristine copy. */
-  private val changelogFx =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-
   private def changelogFixture(s: SparkSession, d: String): java.nio.file.Path =
-    changelogFx.synchronized {
-      changelogFx.getOrElseUpdate(d, {
-        import s.implicits._
-        val fxBase = Files.createTempDirectory(
-          Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-          "meta_chg_fx")
-        val cat = new GraftCatalog(fxBase.resolve("wh").toString)
-        cat.createNamespace("nyc")
-        val t = "chg"
-        val region = graft.Tables.region(s, d)
-        region.coalesce(1).write.parquet(fxBase.resolve("r0").toString)
-        cat.createTable("nyc", t, region.schema)
-        cat.registerFiles("nyc", t, Seq(fxBase.resolve("r0")))      // s1
-        graft.etl.Merge.deleteWherePos(s, cat, "nyc", t,
-          col("r_regionkey") === 0)                                  // s2
-        graft.etl.Merge.deleteWhereMor(s, cat, "nyc", t,
-          col("r_regionkey") === 1, Seq("r_regionkey"))              // s3
-        graft.etl.Merge.mergeIntoMor(s, cat, "nyc", t,
-          region.filter(col("r_regionkey") === 2)
-            .withColumn("r_name", concat(col("r_name"), lit("-v2"))),
-          Seq("r_regionkey"))                                        // s4
-        region.limit(0).unionByName(
-            Seq((9, "NEWLAND")).toDF("r_regionkey", "r_name")
-              .select(col("r_regionkey").cast("int"), col("r_name")))
-          .coalesce(1).write.parquet(fxBase.resolve("r5").toString)
-        cat.registerFiles("nyc", t, Seq(fxBase.resolve("r5")))       // s5
-        // pre-materialize the changelog view (write-once) so clones read
-        cat.syncChangelogView(s, "nyc", t)
-        fxBase.resolve("wh")
-      })
+    Fixtures.memo(("changelogFx", d)) {
+      import s.implicits._
+      val fxBase = Fixtures.scratch(s, "meta_chg_fx")
+      val cat = new GraftCatalog(fxBase.resolve("wh").toString)
+      cat.createNamespace("nyc")
+      val t = "chg"
+      val region = graft.Tables.region(s, d)
+      region.coalesce(1).write.parquet(fxBase.resolve("r0").toString)
+      cat.createTable("nyc", t, region.schema)
+      cat.registerFiles("nyc", t, Seq(fxBase.resolve("r0")))      // s1
+      graft.etl.Merge.deleteWherePos(s, cat, "nyc", t,
+        col("r_regionkey") === 0)                                  // s2
+      graft.etl.Merge.deleteWhereMor(s, cat, "nyc", t,
+        col("r_regionkey") === 1, Seq("r_regionkey"))              // s3
+      graft.etl.Merge.mergeIntoMor(s, cat, "nyc", t,
+        region.filter(col("r_regionkey") === 2)
+          .withColumn("r_name", concat(col("r_name"), lit("-v2"))),
+        Seq("r_regionkey"))                                        // s4
+      region.limit(0).unionByName(
+          Seq((9, "NEWLAND")).toDF("r_regionkey", "r_name")
+            .select(col("r_regionkey").cast("int"), col("r_name")))
+        .coalesce(1).write.parquet(fxBase.resolve("r5").toString)
+      cat.registerFiles("nyc", t, Seq(fxBase.resolve("r5")))       // s5
+      // pre-materialize the changelog view (write-once) so clones read
+      cat.syncChangelogView(s, "nyc", t)
+      fxBase.resolve("wh")
     }
 
   private def metaChangelog: QFn = (s, d) => {
-    val base = Files.createTempDirectory(
-      Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "meta_chg")
+    val base = Fixtures.scratch(s, "meta_chg")
     graft.queries.Fixtures.cloneWarehouse(s, changelogFixture(s, d),
       base.resolve("wh"))
     val cat = new GraftCatalog(base.resolve("wh").toString)
@@ -1512,9 +1404,7 @@ object Meta {
     * table, so the oracle is a literal replay). */
   private def metaChangelogSync: QFn = (s, d) => {
     import s.implicits._
-    val base = Files.createTempDirectory(
-      Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "meta_chgs")
+    val base = Fixtures.scratch(s, "meta_chgs")
     graft.queries.Fixtures.cloneWarehouse(s, changelogFixture(s, d),
       base.resolve("wh"))
     val cat = new GraftCatalog(base.resolve("wh").toString)
@@ -1576,33 +1466,24 @@ object Meta {
   /** The pristine 3-append + materialized-view state
     * [[metaChangelogStats]] mutates (expiration prunes the clone's view
     * storage) — one per (JVM, sfDir), cloned per run. */
-  private val changelogStatsFx =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-
   private def metaChangelogStats: QFn = (s, d) => {
     import s.implicits._
     val t = "chst"
-    val fxWh = changelogStatsFx.synchronized {
-      changelogStatsFx.getOrElseUpdate(d, {
-        val fxBase = Files.createTempDirectory(
-          Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-          "meta_chst_fx")
-        val c = new GraftCatalog(fxBase.resolve("wh").toString)
-        c.createNamespace("nyc")
-        val region = graft.Tables.region(s, d)
-        c.createTable("nyc", t, region.schema)
-        (1 to 3).foreach { i =>
-          region.limit(i).coalesce(1)
-            .write.parquet(fxBase.resolve(s"r$i").toString)
-          c.registerFiles("nyc", t, Seq(fxBase.resolve(s"r$i")))
-        }
-        c.syncChangelogView(s, "nyc", t)
-        fxBase.resolve("wh")
-      })
+    val fxWh = Fixtures.memo(("changelogStatsFx", d)) {
+      val fxBase = Fixtures.scratch(s, "meta_chst_fx")
+      val c = new GraftCatalog(fxBase.resolve("wh").toString)
+      c.createNamespace("nyc")
+      val region = graft.Tables.region(s, d)
+      c.createTable("nyc", t, region.schema)
+      (1 to 3).foreach { i =>
+        region.limit(i).coalesce(1)
+          .write.parquet(fxBase.resolve(s"r$i").toString)
+        c.registerFiles("nyc", t, Seq(fxBase.resolve(s"r$i")))
+      }
+      c.syncChangelogView(s, "nyc", t)
+      fxBase.resolve("wh")
     }
-    val base = Files.createTempDirectory(
-      Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "meta_chst")
+    val base = Fixtures.scratch(s, "meta_chst")
     graft.queries.Fixtures.cloneWarehouse(s, fxWh, base.resolve("wh"))
     val wh = base.resolve("wh").toString
     val cat = new GraftCatalog(wh)
@@ -1611,13 +1492,8 @@ object Meta {
     val post = cat.changelogViewStats("nyc", t)
     // the SQL surface: the CALL must report the same row the Scala
     // entry reads
-    val cname = "gchst_" + java.util.UUID.randomUUID.toString.take(8)
-    s.conf.set(s"spark.sql.catalog.$cname",
-      classOf[graft.catalog.GraftSparkCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cname.warehouse", wh)
-    val callRow = try
-      s.sql(s"CALL $cname.system.changelog_stats('nyc.$t')").head()
-    finally unregisterCatalog(s, cname)
+    val callRow = graft.GraftSession.withCatalog(s, wh)(cname =>
+      s.sql(s"CALL $cname.system.changelog_stats('nyc.$t')").head())
     val callMatches =
       callRow.getInt(0) == post.materializedDirs &&
       callRow.getInt(1) == post.prunedDirs &&
@@ -1652,33 +1528,27 @@ object Meta {
     * them per bench iteration was ~2.5 s of pure fixture tax at sf0.1
     * (same reasoning as [[spjFixture]]). Registration and the pruned/full
     * scans stay per-run: they are what the query measures. */
-  private val fileSkipFixtures =
-    scala.collection.concurrent.TrieMap.empty[String, (java.nio.file.Path, Double)]
-
   private def fileSkipFixture(s: SparkSession, d: String): (java.nio.file.Path, Double) =
-    fileSkipFixtures.synchronized {
-      fileSkipFixtures.getOrElseUpdate(d, {
-        val li = graft.Tables.lineitem(s, d)
-        // range midpoint is enough to split into two disjoint-range files (an
-        // exact percentile would sort the whole table just for a demo split)
-        val mm = li.agg(min("l_orderkey"), max("l_orderkey")).head()
-        val mid = (mm.getLong(0) + mm.getLong(1)) / 2.0
-        val base = Files.createTempDirectory(
-          Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")), "meta_skip")
-        // one file per half (coalesce): n_files is part of the oracled
-        // contract, and a multi-partition source would otherwise split
-        // each half into several files at larger SFs
-        li.filter(col("l_orderkey") <= mid).coalesce(1)
-          .write.parquet(base.resolve("lo").toString)
-        li.filter(col("l_orderkey") > mid).coalesce(1)
-          .write.parquet(base.resolve("hi").toString)
-        val lis = li.select("l_orderkey", "l_returnflag")
-        lis.filter(col("l_returnflag") < "N").coalesce(1)
-          .write.parquet(base.resolve("s_lo").toString)
-        lis.filter(col("l_returnflag") >= "N").coalesce(1)
-          .write.parquet(base.resolve("s_hi").toString)
-        (base, mid)
-      })
+    Fixtures.memo(("fileSkipFixtures", d)) {
+      val li = graft.Tables.lineitem(s, d)
+      // range midpoint is enough to split into two disjoint-range files (an
+      // exact percentile would sort the whole table just for a demo split)
+      val mm = li.agg(min("l_orderkey"), max("l_orderkey")).head()
+      val mid = (mm.getLong(0) + mm.getLong(1)) / 2.0
+      val base = Fixtures.scratch(s, "meta_skip")
+      // one file per half (coalesce): n_files is part of the oracled
+      // contract, and a multi-partition source would otherwise split
+      // each half into several files at larger SFs
+      li.filter(col("l_orderkey") <= mid).coalesce(1)
+        .write.parquet(base.resolve("lo").toString)
+      li.filter(col("l_orderkey") > mid).coalesce(1)
+        .write.parquet(base.resolve("hi").toString)
+      val lis = li.select("l_orderkey", "l_returnflag")
+      lis.filter(col("l_returnflag") < "N").coalesce(1)
+        .write.parquet(base.resolve("s_lo").toString)
+      lis.filter(col("l_returnflag") >= "N").coalesce(1)
+        .write.parquet(base.resolve("s_hi").toString)
+      (base, mid)
     }
 
   /** One scattered-id fixture per (JVM, sfDir): 16 files each holding ONE
@@ -1687,28 +1557,21 @@ object Meta {
     * clustered corpus gives its id column. The writes are layout setup
     * (memoized like [[fileSkipFixture]]); registration + the bloom build
     * + the point lookups stay per-run — they are the measured operator. */
-  private val bloomSkipFixtures =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-
   private def bloomSkipFixture(s: SparkSession, d: String): java.nio.file.Path =
-    bloomSkipFixtures.synchronized {
-      bloomSkipFixtures.getOrElseUpdate(d, {
-        // okey_str: the string twin of the id (the UUID-style case) —
-        // blooms must serve ids that are not numbers
-        val li = graft.Tables.lineitem(s, d)
-          .select(col("l_orderkey"), col("l_quantity"),
-            col("l_orderkey").cast("string").as("okey_str"))
-        val base = Files.createTempDirectory(
-          Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-          "meta_bloom")
-        // one file per residue class (coalesce(1)): n_files = 16 is part
-        // of the oracled contract, whatever the SF
-        (0 until 16).foreach { r =>
-          li.filter(pmod(col("l_orderkey"), lit(16)) === r).coalesce(1)
-            .write.parquet(base.resolve(s"r$r").toString)
-        }
-        base
-      })
+    Fixtures.memo(("bloomSkipFixtures", d)) {
+      // okey_str: the string twin of the id (the UUID-style case) —
+      // blooms must serve ids that are not numbers
+      val li = graft.Tables.lineitem(s, d)
+        .select(col("l_orderkey"), col("l_quantity"),
+          col("l_orderkey").cast("string").as("okey_str"))
+      val base = Fixtures.scratch(s, "meta_bloom")
+      // one file per residue class (coalesce(1)): n_files = 16 is part
+      // of the oracled contract, whatever the SF
+      (0 until 16).foreach { r =>
+        li.filter(pmod(col("l_orderkey"), lit(16)) === r).coalesce(1)
+          .write.parquet(base.resolve(s"r$r").toString)
+      }
+      base
     }
 
   /** meta_bloom_skip (L74): point-lookup file skipping where range stats
@@ -1724,7 +1587,7 @@ object Meta {
     * from raw lineitem. */
   private def metaBloomSkip: QFn = (s, d) => {
     import s.implicits._
-    val (_, wh) = demoDirs(d)
+    val (_, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     cat.createNamespace("nyc")
     val li = graft.Tables.lineitem(s, d)
@@ -1775,7 +1638,7 @@ object Meta {
 
   private def metaFileSkip: QFn = (s, d) => {
     import s.implicits._
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     // no importFolders: the skipping invariants run entirely on the two
     // split tables registered below — importing the full demo warehouse
@@ -1979,14 +1842,9 @@ object Meta {
   private def metaE2eServe: QFn = (s, d) => {
     import s.implicits._
     import graft.sql.ThriftServe
-    val (data, wh) = demoDirs(d)
+    val (data, wh) = demoDirs(s, d)
     val cat = new GraftCatalog(wh)
     val imported = cat.importFolders(s, data)
-    val cname = "e2e_" + Paths.get(wh).getParent.getFileName.toString
-      .replaceAll("[^a-zA-Z0-9]", "")
-    s.conf.set(s"spark.sql.catalog.$cname",
-      classOf[graft.catalog.GraftSparkCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cname.warehouse", wh)
     val port = ThriftServe.ensureStarted(s)
     // Isolated Thrift sessions build their SQLConf from the BOOT SparkConf,
     // so a catalog registered at runtime is invisible over the wire (a
@@ -2001,8 +1859,9 @@ object Meta {
     // session's java8-datetime conf is snapshotted around it (see
     // [[graft.sql.ThriftServe.setSingleSession]]'s side-effect note).
     val dtKey = "spark.sql.datetime.java8API.enabled"
-    val savedDt = s.conf.getOption(dtKey)
-    try ThriftServe.withSingleSession(s) {
+    try graft.GraftSession.withCatalog(s, wh) { cname =>
+    graft.GraftSession.withConfs(s, dtKey -> s.conf.get(dtKey)) {
+    ThriftServe.withSingleSession(s) {
       // Superset-shaped dashboard aggregate: catalog join + group-by,
       // once in-process, once over JDBC — rows must match exactly
       val biSql =
@@ -2045,14 +1904,7 @@ object Meta {
         ("show_create_view_rewrite", 1L, ddlOk))
         .toDF("phase", "n", "invariant_ok")
         .orderBy("phase") // total key: phase strings are unique
-    } finally {
-      savedDt match {
-        case Some(v) => s.conf.set(dtKey, v)
-        case None    => s.conf.unset(dtKey)
-      }
-      scala.util.Try(s.sql("DROP VIEW IF EXISTS default.graft_e2e_v"))
-      unregisterCatalog(s, cname) // names salted: see helper note
-    }
+    }}} finally scala.util.Try(s.sql("DROP VIEW IF EXISTS default.graft_e2e_v"))
   }
 
   val queries: Map[String, QFn] = Map(

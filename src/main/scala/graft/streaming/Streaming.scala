@@ -5,7 +5,9 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.GraftSession.withConfs
 import graft.Tables.QFn
+import graft.queries.Fixtures
 
 /** Structured Streaming surface (SURVEY.md §2.H H5/H6). The reference has
   * no streaming runtime — these carry the declared contract's
@@ -23,18 +25,15 @@ object Streaming {
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 00:$minute%02d:00")
 
-  /** Run `body` (a streaming-query start) with few shuffle partitions:
-    * every stateful operator commits one state store PER PARTITION PER
-    * micro-batch, so partition count — not data volume — dominates these
-    * small-state demos (32 partitions measured 2.7× slower than 8 on
-    * st_join). Real deployments size stateful stages by state volume the
-    * same way. The value is pinned into the checkpoint at first start, so
-    * scoping the conf to the start call is safe. */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  /** Streaming-query starts run with few shuffle partitions (4, or 8
+    * for the stream-stream joins): every stateful operator commits one
+    * state store PER PARTITION PER micro-batch, so partition count — not
+    * data volume — dominates these small-state demos (32 partitions
+    * measured 2.7× slower than 8 on st_join). Real deployments size
+    * stateful stages by state volume the same way. The value is pinned
+    * into the checkpoint at first start, so scoping the conf to the
+    * start call is safe. */
+  private val StatePartitions = "spark.sql.shuffle.partitions"
 
   /** One landing-zone fixture per (JVM, sfDir, projection): the
     * file-source streaming queries all tail the events table re-written as
@@ -43,34 +42,26 @@ object Streaming {
     * only — each run still gets its own fresh checkpoint dir, so the
     * source re-discovers every file and the micro-batch sequence is
     * identical to a fresh landing. */
-  private val landings =
-    scala.collection.concurrent.TrieMap.empty[(String, String), java.nio.file.Path]
-
   private def landedEvents(s: SparkSession, d: String,
                            cols: Seq[String]): java.nio.file.Path =
-    landings.synchronized {
-      landings.getOrElseUpdate((d, cols.mkString(",")), {
-        val in = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(
-            sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-          "st_landing").resolve("in")
-        val ev = graft.Tables.events(s, d).select(cols.map(col): _*)
-        // ONE file per drop (coalesce) — the declared scenario is exactly
-        // two "arriving" batches, and with maxFilesPerTrigger=1 each FILE
-        // is a micro-batch: an input big enough to split into several
-        // part files per drop would multiply the batch count, and the
-        // stream-stream joins' batch oracle holds precisely because
-        // cross-drop matches ride the watermark's one-batch update lag —
-        // a THIRD batch legitimately evicts the first's join state (the
-        // sf1 gate caught exactly this: at 1M events each drop split
-        // into multiple parts and the engine correctly dropped what the
-        // 2-batch oracle still counted)
-        ev.filter(col("event_id") % 2 === 0).coalesce(1)
-          .write.parquet(in.resolve("b0").toString)
-        ev.filter(col("event_id") % 2 =!= 0).coalesce(1)
-          .write.parquet(in.resolve("b1").toString)
-        in
-      })
+    Fixtures.memo(("landings", (d, cols.mkString(",")))) {
+      val in = Fixtures.scratch(s, "st_landing").resolve("in")
+      val ev = graft.Tables.events(s, d).select(cols.map(col): _*)
+      // ONE file per drop (coalesce) — the declared scenario is exactly
+      // two "arriving" batches, and with maxFilesPerTrigger=1 each FILE
+      // is a micro-batch: an input big enough to split into several
+      // part files per drop would multiply the batch count, and the
+      // stream-stream joins' batch oracle holds precisely because
+      // cross-drop matches ride the watermark's one-batch update lag —
+      // a THIRD batch legitimately evicts the first's join state (the
+      // sf1 gate caught exactly this: at 1M events each drop split
+      // into multiple parts and the engine correctly dropped what the
+      // 2-batch oracle still counted)
+      ev.filter(col("event_id") % 2 === 0).coalesce(1)
+        .write.parquet(in.resolve("b0").toString)
+      ev.filter(col("event_id") % 2 =!= 0).coalesce(1)
+        .write.parquet(in.resolve("b1").toString)
+      in
     }
 
   /** Per-user open-session state for [[stSessionize]] (top-level so Spark
@@ -98,7 +89,7 @@ object Streaming {
       // RocksDB twin can be hash-checked against a VALUES oracle
       .select(col("window.start").cast("timestamp_ntz").as("w_start"),
         col("k"), col("count").as("n"))
-    val q = withStatePartitions(s, 4)(counts.writeStream
+    val q = withConfs(s, StatePartitions -> "4")(counts.writeStream
       .format("memory").queryName(sink).outputMode("append").start())
     try {
       input.addData((ts(1), "a"), (ts(2), "a"), (ts(11), "b")) // watermark → 00:06
@@ -120,7 +111,7 @@ object Streaming {
     * table and the run is EXACT-ROWS oracle-checked (like
     * st_dedup_rocksdb), not merely rows>0. */
   def stWatermarkRocks: QFn = (s, d) => {
-    graft.GraftSession.withConfs(s, RocksProvider)(
+    withConfs(s, RocksProvider)(
       stWatermarkWith("st_watermark_rocks_sink")(s, d))
   }
 
@@ -138,7 +129,7 @@ object Streaming {
     val deduped = input.toDF().toDF("ts", "event_id", "payload")
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("event_id")
-    val q = withStatePartitions(s, 4)(deduped.writeStream
+    val q = withConfs(s, StatePartitions -> "4")(deduped.writeStream
       .format("memory").queryName(sink).outputMode("append").start())
     try {
       input.addData((ts(1), 1L, "first"), (ts(2), 2L, "first"))
@@ -157,7 +148,7 @@ object Streaming {
     * exactly this stream; results must be identical to [[stDedup]], which
     * the oracle (fixed expected rows) and StreamingSpec both check. */
   def stDedupRocks: QFn = (s, d) => {
-    graft.GraftSession.withConfs(s, RocksProvider)(
+    withConfs(s, RocksProvider)(
       stDedupWith("st_dedup_rocks_sink")(s, d))
   }
 
@@ -196,7 +187,7 @@ object Streaming {
           }
       }
       .toDF("user", "n_events", "s_start", "s_end")
-    val q = withStatePartitions(s, 4)(sessions.writeStream
+    val q = withConfs(s, StatePartitions -> "4")(sessions.writeStream
       .format("memory").queryName("st_sessionize_sink").outputMode("append").start())
     try {
       input.addData((ts(1), "u1"), (ts(3), "u1"), (ts(2), "u2"))
@@ -224,9 +215,7 @@ object Streaming {
     * batches. */
   def stFileSource: QFn = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "st_files")
+    val base = Fixtures.scratch(s, "st_files")
     val ev = graft.Tables.events(s, d).select("event_id", "event_type", "value")
     // two separate landings, as if written by an upstream producer
     val in = landedEvents(s, d, Seq("event_id", "event_type", "value"))
@@ -255,9 +244,7 @@ object Streaming {
     * commit succeeded but before the checkpoint recorded it). */
   def stCatalogSink: QFn = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "st_sink")
+    val base = Fixtures.scratch(s, "st_sink")
     val ev = graft.Tables.events(s, d).select("event_id", "event_type", "value")
     val in = landedEvents(s, d, Seq("event_id", "event_type", "value"))
     val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
@@ -311,15 +298,13 @@ object Streaming {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "st_dedup_cat")
+    val base = Fixtures.scratch(s, "st_dedup_cat")
     val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
     val input = MemoryStream[(Long, String)]
     val hashed = input.toDF().toDF("doc_id", "text")
       .select(col("doc_id"), col("text"), md5(col("text")).as("h"))
     cat.createTable("stream", "docs_dedup", hashed.schema)
-    val q = withStatePartitions(s, 4)(hashed.writeStream
+    val q = withConfs(s, StatePartitions -> "4")(hashed.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val ss = batch.sparkSession
         val hist = cat.readTable(ss, "stream", "docs_dedup")
@@ -406,9 +391,7 @@ object Streaming {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "st_neardup_cat")
+    val base = Fixtures.scratch(s, "st_neardup_cat")
     val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
     val input = MemoryStream[(Long, String)]
     val hashed = input.toDF().toDF("doc_id", "text")
@@ -420,7 +403,7 @@ object Streaming {
     cat.createTable("stream", "docs_neardup_sigs",
       docBandRows(docTokenSets(proto)).schema)
     cat.createTable("stream", "docs_neardup_toks", docTokenSets(proto).schema)
-    val q = withStatePartitions(s, 4)(hashed.writeStream
+    val q = withConfs(s, StatePartitions -> "4")(hashed.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val ss = batch.sparkSession
         val hist = cat.readTable(ss, "stream", "docs_neardup")
@@ -494,7 +477,7 @@ object Streaming {
   /** The PRISTINE pre-stream state of [[stVecIndexMaintain]] — the
     * trained-once model tables (cells/books commits) plus the landing
     * drops — built once per (JVM, sfDir) and CLONED per run
-    * ([[graft.queries.Fixtures.cloneWarehouse]]; the stream's appends
+    * ([[Fixtures.cloneWarehouse]]; the stream's appends
     * mutate the clone). The trained halves and the probe row ride along
     * as driver objects. The measured work — three micro-batch
     * tokenize-free encode+append commits and the probe — is unchanged. */
@@ -503,20 +486,14 @@ object Streaming {
                                    cents: Seq[Seq[Float]],
                                    model: graft.operators.ProductQuantizer.Model,
                                    probeId: Long, probeVec: Seq[Float])
-  private val vecMaintainFx = scala.collection.concurrent.TrieMap
-    .empty[String, VecMaintainFx]
 
   def stVecIndexMaintain: QFn = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
     import graft.operators.{IvfPq, ProductQuantizer}
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "st_ivfpq")
+    val base = Fixtures.scratch(s, "st_ivfpq")
     val emb = graft.Tables.embeddings(s, d).select("vec_id", "embedding")
-    val fx = vecMaintainFx.getOrElseUpdate(d, {
-      val fxBase = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-        "st_ivfpq_fx")
+    val fx = Fixtures.memo(("vecMaintainFx", d)) {
+      val fxBase = Fixtures.scratch(s, "st_ivfpq_fx")
       val c = new graft.catalog.GraftCatalog(fxBase.resolve("wh").toString)
       // landing zone: the corpus "arrives" as three one-file producer
       // drops (coalesced so maxFilesPerTrigger=1 gives exactly 3
@@ -529,8 +506,8 @@ object Streaming {
       val (cents, model) = IvfPq.initIndex(s, c, "vec", "emb", emb)
       val (pid, pvec) = ProductQuantizer.sampleRows(emb).head
       VecMaintainFx(fxBase.resolve("wh"), inDir, cents, model, pid, pvec)
-    })
-    graft.queries.Fixtures.cloneWarehouse(s, fx.wh, base.resolve("wh"))
+    }
+    Fixtures.cloneWarehouse(s, fx.wh, base.resolve("wh"))
     val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
     val in = fx.in
     val (cents, model) = (fx.cents, fx.model)
@@ -539,7 +516,7 @@ object Streaming {
       .option("recursiveFileLookup", "true")
       .option("maxFilesPerTrigger", "1")
       .parquet(in.toString)
-    val q = withStatePartitions(s, 4)(stream.writeStream
+    val q = withConfs(s, StatePartitions -> "4")(stream.writeStream
       // IDEMPOTENT on checkpoint replay: foreachBatch is at-least-once,
       // and a blind appendCodes would double-append a replayed batch's
       // vectors into the committed index forever — each batch commits
@@ -580,40 +557,33 @@ object Streaming {
     * the top-10. In-query require: the summed stats deltas equal a
     * direct corpus aggregate (N and Σlen exact across 3 snapshots). */
   /** Landing drops for [[stTextIndexMaintain]], one per (JVM, sfDir) —
-    * the [[landings]] convention (input only; the catalog itself starts
+    * the landings convention (input only; the catalog itself starts
     * EMPTY per run, so the measured tokenize+append micro-batches are
     * unchanged). The direct corpus aggregate the stats gate compares
     * against is recomputed inside every measured run (round-16 verdict:
     * memoizing that result crossed the measurement boundary). */
-  private val textMaintainFx = scala.collection.concurrent.TrieMap
-    .empty[String, java.nio.file.Path]
-
   def stTextIndexMaintain: QFn = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
     import graft.operators.TextIndex
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "st_textidx")
+    val base = Fixtures.scratch(s, "st_textidx")
     val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
     val tok = graft.queries.Extensions.tokensExpr
     val docs = graft.Tables.documents(s, d).select("doc_id", "text")
-    val in = textMaintainFx.getOrElseUpdate(d, {
-      val fxBase = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-        "st_textidx_fx")
+    val in = Fixtures.memo(("textMaintainFx", d)) {
+      val fxBase = Fixtures.scratch(s, "st_textidx_fx")
       val inDir = fxBase.resolve("in")
       (0 until 3).foreach { i =>
         docs.filter(pmod(col("doc_id"), lit(3)) === i).coalesce(1)
           .write.parquet(inDir.resolve(s"b$i").toString)
       }
       inDir
-    })
+    }
     // the stats gate's declared comparison computation — a direct corpus
     // aggregate — charged to every measured run
     val expect = docs.select(expr(s"size($tok)").as("len"))
       .agg(count(lit(1)), sum(col("len"))).collect()(0)
     val (expectDocs, expectLen) = (expect.getLong(0), expect.getLong(1))
-    val q = withStatePartitions(s, 4)(s.readStream
+    val q = withConfs(s, StatePartitions -> "4")(s.readStream
       .schema(docs.schema)
       .option("recursiveFileLookup", "true")
       .option("maxFilesPerTrigger", "1")
@@ -657,29 +627,22 @@ object Streaming {
     * contamination in the candidates breaks `neighbors_from_corpus`.
     * Recall vs the brute exact top-1 is pinned in StreamingSpec. */
   /** One committed-index + landing fixture per (JVM, sfDir) for
-    * [[stVecAugment]] — the [[landings]] / vecRebuildFx convention: the
+    * [[stVecAugment]] — the landings / vecRebuildFx convention: the
     * scenario's corpus is "indexed ONCE up front" and the stream only
     * READS the index (augmentTop1 commits nothing), so rebuilding the
     * catalog per bench iteration was fixture tax, not streaming work.
     * The landing drops are INPUT only; each run keeps its own fresh
     * checkpoint + output dirs, so the micro-batch sequence and the
     * augmented rows are identical to a fresh fixture. */
-  private val augmentFx = scala.collection.concurrent.TrieMap
-    .empty[String, (graft.catalog.GraftCatalog, java.nio.file.Path)]
-
   def stVecAugment: QFn = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
     import graft.operators.IvfPq
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "st_augment")
+    val base = Fixtures.scratch(s, "st_augment")
     val emb = graft.Tables.embeddings(s, d).select("vec_id", "embedding")
     val corpus = emb.filter(pmod(col("vec_id"), lit(10)) =!= 7)
     val batchSide = emb.filter(pmod(col("vec_id"), lit(10)) === 7)
-    val (cat, in) = augmentFx.getOrElseUpdate(d, {
-      val fxBase = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-        "st_augment_fx")
+    val (cat, in) = Fixtures.memo(("augmentFx", d)) {
+      val fxBase = Fixtures.scratch(s, "st_augment_fx")
       val c = new graft.catalog.GraftCatalog(fxBase.resolve("wh").toString)
       val (cents, model) = IvfPq.initIndex(s, c, "vec", "emb", corpus)
       IvfPq.appendCodes(s, c, "vec", "emb", cents, model, corpus)
@@ -689,9 +652,9 @@ object Streaming {
           .write.parquet(inDir.resolve(s"b$i").toString)
       }
       (c, inDir)
-    })
+    }
     val out = base.resolve("aug")
-    val q = withStatePartitions(s, 4)(s.readStream
+    val q = withConfs(s, StatePartitions -> "4")(s.readStream
       .schema(emb.schema)
       .option("recursiveFileLookup", "true")
       .option("maxFilesPerTrigger", "1")
@@ -743,9 +706,7 @@ object Streaming {
     * has no streaming semantics. */
   def stCatalogSource: QFn = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "st_source")
+    val base = Fixtures.scratch(s, "st_source")
     val ev = graft.Tables.events(s, d).select("event_id", "event_type", "value")
     val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
     def land(df: DataFrame, dir: String) = {
@@ -815,38 +776,28 @@ object Streaming {
     * MEASURED region keeps both drains, the wave-2 commits (which the
     * scenario requires to land while the consumer is down), their view
     * sync, and every gate. */
-  private val stChangelogFx = scala.collection.concurrent.TrieMap
-    .empty[String, java.nio.file.Path]
-
   def stChangelog: QFn = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "st_chg")
+    val base = Fixtures.scratch(s, "st_chg")
     val region = graft.Tables.region(s, d)
     def land(df: DataFrame, dir: String) = {
       val p = base.resolve(dir); df.coalesce(1).write.parquet(p.toString); p
     }
-    val fxWh = stChangelogFx.synchronized {
-      stChangelogFx.getOrElseUpdate(d, {
-        val fxBase = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(
-            sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-          "st_chg_fx")
-        val c = new graft.catalog.GraftCatalog(fxBase.resolve("wh").toString)
-        c.createNamespace("nyc")
-        region.coalesce(1).write.parquet(fxBase.resolve("r0").toString)
-        c.createTable("nyc", "chg", region.schema)
-        c.registerFiles("nyc", "chg", Seq(fxBase.resolve("r0")))     // s1
-        graft.etl.Merge.deleteWherePos(s, c, "nyc", "chg",
-          col("r_regionkey") === 0)                                  // s2
-        graft.etl.Merge.deleteWhereMor(s, c, "nyc", "chg",
-          col("r_regionkey") === 1, Seq("r_regionkey"))              // s3
-        c.syncChangelogView(s, "nyc", "chg")
-        fxBase.resolve("wh")
-      })
+    val fxWh = Fixtures.memo(("stChangelogFx", d)) {
+      val fxBase = Fixtures.scratch(s, "st_chg_fx")
+      val c = new graft.catalog.GraftCatalog(fxBase.resolve("wh").toString)
+      c.createNamespace("nyc")
+      region.coalesce(1).write.parquet(fxBase.resolve("r0").toString)
+      c.createTable("nyc", "chg", region.schema)
+      c.registerFiles("nyc", "chg", Seq(fxBase.resolve("r0")))     // s1
+      graft.etl.Merge.deleteWherePos(s, c, "nyc", "chg",
+        col("r_regionkey") === 0)                                  // s2
+      graft.etl.Merge.deleteWhereMor(s, c, "nyc", "chg",
+        col("r_regionkey") === 1, Seq("r_regionkey"))              // s3
+      c.syncChangelogView(s, "nyc", "chg")
+      fxBase.resolve("wh")
     }
-    graft.queries.Fixtures.cloneWarehouse(s, fxWh, base.resolve("wh"))
+    Fixtures.cloneWarehouse(s, fxWh, base.resolve("wh"))
     val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
     var mirror = s.createDataFrame(
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row], region.schema)
@@ -940,9 +891,7 @@ object Streaming {
     * yields exactly the batch join — proven by the DuckDB oracle. */
   def stJoin: QFn = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "st_join")
+    val base = Fixtures.scratch(s, "st_join")
     val ev = graft.Tables.events(s, d)
       .select("event_id", "user_id", "event_type", "value", "ts")
     val in = landedEvents(s, d, Seq("event_id", "user_id", "event_type", "value", "ts"))
@@ -965,7 +914,7 @@ object Streaming {
       col("c_user") === col("p_user") &&
         col("p_ts") >= col("c_ts") &&
         col("p_ts") <= col("c_ts") + expr("INTERVAL 10 MINUTES"))
-    val q = withStatePartitions(s, 8)(joined.writeStream
+    val q = withConfs(s, StatePartitions -> "8")(joined.writeStream
       .format("memory").queryName("st_join_sink").outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", base.resolve("ckpt").toString)
@@ -994,9 +943,7 @@ object Streaming {
   def stJoinOuter: QFn = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "st_join_outer")
+    val base = Fixtures.scratch(s, "st_join_outer")
     val ev = graft.Tables.events(s, d)
       .select("event_id", "user_id", "event_type", "value", "ts")
     val in = landedEvents(s, d, Seq("event_id", "user_id", "event_type", "value", "ts"))
@@ -1018,7 +965,7 @@ object Streaming {
         col("p_ts") >= col("c_ts") &&
         col("p_ts") <= col("c_ts") + expr("INTERVAL 10 MINUTES"),
       "leftOuter")
-    val q = withStatePartitions(s, 8)(joined.writeStream
+    val q = withConfs(s, StatePartitions -> "8")(joined.writeStream
       .format("memory").queryName("st_join_outer_sink").outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", base.resolve("ckpt").toString)
@@ -1104,9 +1051,7 @@ object Streaming {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     import graft.queries.Extensions.{piiEmailPat, piiIpPat, piiPhonePat, tokensExpr}
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "st_cur_cat")
+    val base = Fixtures.scratch(s, "st_cur_cat")
     val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
     val input = MemoryStream[(Long, String)]
     val curated = input.toDF().toDF("doc_id", "raw")
@@ -1118,7 +1063,7 @@ object Streaming {
       .filter(expr(s"size($tokensExpr) >= 5"))
       .select(col("doc_id"), col("text"), md5(col("text")).as("h"))
     cat.createTable("stream", "docs_curated", curated.schema)
-    val q = withStatePartitions(s, 4)(curated.writeStream
+    val q = withConfs(s, StatePartitions -> "4")(curated.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val ss = batch.sparkSession
         val hist = cat.readTable(ss, "stream", "docs_curated")
@@ -1193,9 +1138,7 @@ object Streaming {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     import graft.queries.Extensions.{piiEmailPat, piiIpPat, piiPhonePat, tokensExpr}
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("graft.tmp", "/root/repo/target")),
-      "st_cur_full")
+    val base = Fixtures.scratch(s, "st_cur_full")
     val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
     // the static benchmark: its 3-gram shingle hash set is computed ONCE
     // at stream build (a few rows) and enters every batch as a literal
@@ -1222,7 +1165,7 @@ object Streaming {
     cat.createTable("stream", "docs_full_sigs",
       docBandRows(docTokenSets(proto)).schema)
     cat.createTable("stream", "docs_full_toks", docTokenSets(proto).schema)
-    val q = withStatePartitions(s, 4)(curated.writeStream
+    val q = withConfs(s, StatePartitions -> "4")(curated.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val ss = batch.sparkSession
         val hist = cat.readTable(ss, "stream", "docs_full")

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -102,8 +102,7 @@ object ExprBench {
     val sample = ProductQuantizer.sampleRows(emb)
     val model = ProductQuantizer.train(sample.map(_._2).toSeq)
     val probe = sample.head._2
-    val dir = Paths.get(sys.props.getOrElse("graft.tmp", "target"))
-      .resolve(s"pqscore${mult}x_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_"))
+    val dir = graft.queries.Fixtures.root.resolve(s"pqscore${mult}x_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_"))
     if (!Files.exists(dir)) {
       val span = emb.agg(max(col("vec_id"))).head().getLong(0) + 1
       emb.withColumn("codes", ProductQuantizer.packedCodes(model, col("embedding")))

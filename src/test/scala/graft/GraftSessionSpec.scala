@@ -60,4 +60,24 @@ class GraftSessionSpec extends SparkSpec {
     graft.queries.Etl.queries("etl_bucket_join")(s, sfDir).collect()
     assert(current === before, "etl_bucket_join changed the caller's confs")
   }
+
+  test("withCatalog registers for its body only, named by warehouse and options") {
+    val s = SparkSpec.session.newSession()
+    val wh = graft.queries.Fixtures.scratch(s, "withcatalog_spec").resolve("wh")
+    new graft.catalog.GraftCatalog(wh.toString).createTable("ns", "t", s.range(1).schema)
+    def catalogKeys = s.conf.getAll.keySet.filter(_.startsWith("spark.sql.catalog."))
+    val before = catalogKeys
+    val a = GraftSession.withCatalog(s, wh.toString) { c =>
+      assert(s.sql(s"SELECT count(*) FROM $c.ns.t").head().getLong(0) === 0L)
+      c
+    }
+    assert(catalogKeys === before)
+    val again = GraftSession.withCatalog(s, wh.toString)(identity)
+    val mor = GraftSession.withCatalog(s, wh.toString,
+      "rowlevel.mode" -> "merge-on-read")(identity)
+    assert(catalogKeys === before)
+    assert(again === a, "same warehouse and options must reuse the name")
+    assert(mor !== a, "different options must get a fresh name")
+    graft.catalog.Fs.deleteRecursively(wh.getParent)
+  }
 }

@@ -36,7 +36,7 @@ class TablesSpec extends SparkSpec {
   for (unit <- Seq("NANOS", "MICROS", "MILLIS")) {
     test(s"events loader adapts to a TIMESTAMP($unit) footer") {
       val dir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/root/repo/target"), s"tsu$unit")
+        graft.queries.Fixtures.root, s"tsu$unit")
       TsUnitFixture.writeEvents(dir, unit, rows = 50)
       assert(Tables.eventsTsUnit(dir.toString) === unit)
       val ev = Tables.events(spark, dir.toString)

@@ -61,7 +61,7 @@ class BloomIndexSpec extends SparkSpec {
     // [min, max] spans ~the whole domain
     val df = (0L until 800L).map(i => (i, s"v$i")).toDF("id", "payload")
     val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bloom_spec")
+      graft.queries.Fixtures.root, "bloom_spec")
     (0 until 4).foreach { r =>
       df.filter(pmod(col("id"), lit(4)) === r).coalesce(1)
         .write.parquet(base.resolve(s"r$r").toString)
@@ -76,7 +76,7 @@ class BloomIndexSpec extends SparkSpec {
 
   test("point lookup prunes to the id's file where range stats keep everything; read is exact") {
     val wh = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bloom_wh")
+      graft.queries.Fixtures.root, "bloom_wh")
     val cat = new GraftCatalog(wh.resolve("wh").toString)
     cat.createNamespace("b")
     scatteredTable(cat, "b", "t", withBlooms = true)
@@ -108,12 +108,12 @@ class BloomIndexSpec extends SparkSpec {
       .head().getLong(0)
     assert(sparkHash === BloomIndex.hash64("doc-42"))
     val wh = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bloom_str")
+      graft.queries.Fixtures.root, "bloom_str")
     val cat = new GraftCatalog(wh.resolve("wh").toString)
     cat.createNamespace("b")
     val df = (0L until 400L).map(i => (i, s"uuid-$i")).toDF("id", "sid")
     val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bloom_str_rows")
+      graft.queries.Fixtures.root, "bloom_str_rows")
     (0 until 4).foreach { r =>
       df.filter(pmod(col("id"), lit(4)) === r).coalesce(1)
         .write.parquet(base.resolve(s"r$r").toString)
@@ -150,12 +150,12 @@ class BloomIndexSpec extends SparkSpec {
     // silently never prune for such files (ADVICE round 13)
     import spark.implicits._
     val wh = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bloom_sp")
+      graft.queries.Fixtures.root, "bloom_sp")
     val cat = new GraftCatalog(wh.resolve("wh").toString)
     cat.createNamespace("b")
     val df = (0L until 400L).map(i => (i, s"v$i")).toDF("id", "payload")
     val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bloom sp rows")
+      graft.queries.Fixtures.root, "bloom sp rows")
     assert(base.toString.contains(" "), "fixture must exercise a space")
     (0 until 4).foreach { r =>
       df.filter(pmod(col("id"), lit(4)) === r).coalesce(1)
@@ -185,7 +185,7 @@ class BloomIndexSpec extends SparkSpec {
     // kept() reading the row's k=0 keeps the file despite zero bits;
     // assuming HashCount=7 would wrongly skip a file holding real rows
     val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bloom_k")
+      graft.queries.Fixtures.root, "bloom_k")
     val sc = dir.resolve("sidecar").toString
     Seq(("/data/f1.parquet", "id", zeros.length * 8, 0, zeros))
       .toDF("file", "column", "m", "k", "bits").coalesce(1).write.parquet(sc)
@@ -205,7 +205,7 @@ class BloomIndexSpec extends SparkSpec {
 
   test("conservative fallbacks: bloom-less commits and un-bloomed columns stay kept") {
     val wh = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bloom_wh2")
+      graft.queries.Fixtures.root, "bloom_wh2")
     val cat = new GraftCatalog(wh.resolve("wh").toString)
     cat.createNamespace("b")
     // commit 1 without blooms, commit 2 with — pruning applies per commit
@@ -213,7 +213,7 @@ class BloomIndexSpec extends SparkSpec {
     import spark.implicits._
     val extra = Seq((800L, "v800"), (801L, "v801")).toDF("id", "payload")
     val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bloom_extra")
+      graft.queries.Fixtures.root, "bloom_extra")
     extra.coalesce(1).write.mode("overwrite")
       .parquet(dir.resolve("x").toString)
     cat.registerFilesWithBlooms(spark, "b", "mixed",

@@ -17,13 +17,13 @@ class ChangelogSpec extends SparkSpec {
 
   private def freshCat(): GraftCatalog = {
     val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "chg_spec")
+      graft.queries.Fixtures.root, "chg_spec")
     new GraftCatalog(base.resolve("wh").toString)
   }
 
   private def writeRows(df: org.apache.spark.sql.DataFrame): java.nio.file.Path = {
     val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "chg_rows")
+      graft.queries.Fixtures.root, "chg_rows")
     df.coalesce(1).write.mode("overwrite").parquet(dir.resolve("p").toString)
     dir.resolve("p")
   }
@@ -136,7 +136,7 @@ class ChangelogSpec extends SparkSpec {
       .filter(col("id") === 1L)
       .select(col(PosFileCol).as("file_path"), col(PosIdxCol).as("pos"))
     val delDir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "chg_del")
+      graft.queries.Fixtures.root, "chg_del")
     doomed.coalesce(1).write.mode("overwrite")
       .parquet(delDir.resolve("d").toString)
     cat.commitPositionDeletes("c", "t",
@@ -169,7 +169,7 @@ class ChangelogSpec extends SparkSpec {
         col(PosIdxCol).as("pos")).persist()
     def commitTuples(ids: Long*): Unit = {
       val d = Files.createTempDirectory(
-        java.nio.file.Paths.get("/root/repo/target"), "chg_ovl")
+        graft.queries.Fixtures.root, "chg_ovl")
       pos.filter(col("id").isInCollection(ids)).select("file_path", "pos")
         .coalesce(1).write.mode("overwrite").parquet(d.resolve("d").toString)
       cat.commitPositionDeletes("c", "t", Seq(d.resolve("d")))
@@ -248,7 +248,7 @@ class ChangelogSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
     val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "chg_stream")
+      graft.queries.Fixtures.root, "chg_stream")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     cat.createNamespace("c")
     val rows = (1L to 8L).map(i => (i, s"v$i")).toDF("id", "v")
@@ -314,7 +314,7 @@ class ChangelogSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
     val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "chg_retain")
+      graft.queries.Fixtures.root, "chg_retain")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     cat.createNamespace("c")
     val rows = (1L to 8L).map(i => (i, s"v$i")).toDF("id", "v")

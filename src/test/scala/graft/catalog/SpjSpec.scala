@@ -1,6 +1,6 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -16,7 +16,7 @@ class SpjSpec extends SparkSpec {
   import spark.implicits._
 
   private def setup(spec: Seq[(String, String)]): (String, GraftCatalog) = {
-    val base = Files.createTempDirectory(Paths.get("/root/repo/target"), "spj")
+    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "spj")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     val facts = (1L to 400L).map(i => (i % 40, s"f$i", i * 1.5))
       .toDF("k", "tag", "v")

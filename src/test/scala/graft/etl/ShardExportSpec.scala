@@ -31,7 +31,7 @@ class ShardExportSpec extends SparkSpec {
     val draw = expr(
       "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint)")
     val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "rt_spec")
+      graft.queries.Fixtures.root, "rt_spec")
     val out = base.resolve("shards").toString
     val src = graft.Tables.documents(spark, sfDir)
       .select("doc_id", "lang", "source", "text")

@@ -20,7 +20,7 @@ class VectorMaintenanceSpec extends SparkSpec {
     .select(col("vec_id"), col("embedding"))
 
   private def freshCat() = {
-    val base = Files.createTempDirectory(Paths.get("/root/repo/target"), "vecmaint")
+    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "vecmaint")
     new GraftCatalog(base.resolve("wh").toString)
   }
 

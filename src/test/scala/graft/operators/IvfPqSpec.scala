@@ -14,7 +14,7 @@ class IvfPqSpec extends SparkSpec {
 
   private def freshCat() = {
     val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ivfpqspec")
+      graft.queries.Fixtures.root, "ivfpqspec")
     new graft.catalog.GraftCatalog(base.resolve("wh").toString)
   }
 

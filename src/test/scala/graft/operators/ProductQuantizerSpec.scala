@@ -41,7 +41,7 @@ class ProductQuantizerSpec extends SparkSpec {
 
   test("buildIndex commits codes+books; loadModel rehydrates the exact model") {
     val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "pqspec")
+      graft.queries.Fixtures.root, "pqspec")
     val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
     val model = ProductQuantizer.train(
       ProductQuantizer.sampleRows(emb).map(_._2).toSeq)

@@ -16,7 +16,7 @@ class TextIndexSpec extends SparkSpec {
 
   private def freshCat(): GraftCatalog = {
     val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "textidx_spec")
+      graft.queries.Fixtures.root, "textidx_spec")
     new GraftCatalog(base.resolve("wh").toString)
   }
 

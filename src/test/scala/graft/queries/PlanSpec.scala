@@ -333,7 +333,7 @@ class PlanSpec extends SparkSpec {
       BroadcastNestedLoopJoinExec, CartesianProductExec}
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "screen_pin")
+      graft.queries.Fixtures.root, "screen_pin")
     val committed = Seq((1L, "alpha beta gamma delta"),
       (2L, "epsilon zeta eta theta")).toDF("doc_id", "text")
     val sets = Extensions.docTokenSets(committed)
