@@ -177,8 +177,10 @@ object Bench {
     // protocol (re-measure suspicious readings solo before believing
     // them) into the artifact itself instead of a judge-side manual step.
     val sfTag = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val refPath = sys.props.getOrElse("graft.bench.ref",
-      "/root/repo/tools/bench_ref.json")
+    // both files resolve against the working directory, like the scratch
+    // root (`Fixtures.root`): a run reads and writes its own checkout's
+    val refPath = java.nio.file.Paths.get(sys.props.getOrElse("graft.bench.ref",
+      "tools/bench_ref.json")).toAbsolutePath.toString
     val ref: Map[String, Double] = try {
       val txt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(refPath)), "UTF-8")
@@ -225,7 +227,7 @@ object Bench {
     // full per-query detail — survives any stdout truncation/interleaving
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(
-        sys.props.getOrElse("graft.bench.out", "/root/repo/BENCH_LAST.json")),
+        sys.props.getOrElse("graft.bench.out", "BENCH_LAST.json")).toAbsolutePath,
       line(finalResults, isHeadline = false) + "\n")
     // -Dgraft.bench.writeref=1: adopt this run as the reference for the
     // 2.0× rerun gate (run it on a quiet box; other sf tags preserved)

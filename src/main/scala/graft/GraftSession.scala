@@ -18,6 +18,10 @@ import org.apache.spark.sql.SparkSession
   *    gets a fresh one, so every connection would recompile every query;
   *    temp views, `SET` state and catalogs stay per session regardless
   *    (they live in `SessionState`), and graft adds no per-session jars
+  *  - a 1000-entry codegen cache (Spark's 100 thrashed under a dashboard's
+  *    statement mix)
+  *  - small global sorts in one partition (`GraftExtensions`'
+  *    [[graft.plans.SmallSortSinglePartition]])
   *
   * `shufflePartitions` defaults to the machine's cores for local mode; on
   * a real cluster pass ~2-3× total executor cores — AQE coalesces down,
@@ -43,6 +47,8 @@ object GraftSession {
       // read at session creation, so it must ride on the builder options
       // that `newSession()` (one per Thrift connection) inherits
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // 100 entries thrashed under a dashboard mix: bodies recompiled 4-8×
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   /** Run `body` with `confs` set on `spark`'s session, then put back what
     * the session held before — the caller's values, not Spark's defaults

@@ -2137,9 +2137,10 @@ class GraftCatalog(val warehouse: String) {
                 filters: Seq[sources.Filter]): Seq[DataFileMeta] = {
     val fields = meta.currentSchemaVersion.fields
     val schema = meta.schema
-    val byStats = meta.filesAsOf(asOf).filter(f => filters.forall(fl =>
-      Partitioning.keepByPartition(meta.specForFile(f), fields, f, fl) &&
-        Partitioning.keepByStats(f, schema, fl)))
+    val statsTests = filters.map(Partitioning.keepByStats(schema, _))
+    val byStats = meta.filesAsOf(asOf).filter(f => filters.zip(statsTests).forall {
+      case (fl, keep) => Partitioning.keepByPartition(meta.specForFile(f), fields, f, fl) && keep(f)
+    })
     val probes = bloomProbes(schema, filters)
     if (probes.isEmpty) byStats else BloomIndex.keptAny(byStats, probes)
   }

@@ -1015,8 +1015,13 @@ private[catalog] class MorDeltaWriter(
   * `.history` — the surface the reference's served catalog exposes to
   * Superset, `entrypoint-spark.sh:89-92`). The snapshot log already lives
   * on the driver, so the scan is a [[org.apache.spark.sql.connector.read.LocalScan]]:
-  * no job, no tasks, metadata-only — the same cost model as Iceberg's
-  * metadata tables, which read manifests, not data. */
+  * metadata-only, no data file is read — the same cost model as Iceberg's
+  * metadata tables, which read manifests, not data. The scan runs no job
+  * of its own, but a query over it still runs its plan's jobs, at least
+  * the one that returns the rows: `ORDER BY snapshot_id` runs one, since
+  * a global sort over local rows this small runs in one partition
+  * ([[graft.plans.SmallSortSinglePartition]]). The scan reports its size
+  * and row count to the optimizer. */
 private[catalog] object GraftMetadataTable {
   val kinds: Set[String] = Set("snapshots", "files", "history", "partitions",
     "refs")
@@ -1112,6 +1117,8 @@ private[catalog] object GraftMetadataTable {
         (s, rs)
     }
     val localRows: Array[InternalRow] = tblRows.toArray
+    val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(tblSchema)
+    val localBytes = localRows.map(r => toUnsafe(r).getSizeInBytes.toLong).sum
     new Table with SupportsRead {
       override def name(): String = s"$catName.$ns.$t.$kind"
       override def schema(): StructType = tblSchema
@@ -1120,10 +1127,18 @@ private[catalog] object GraftMetadataTable {
       override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
         new ScanBuilder {
           override def build(): org.apache.spark.sql.connector.read.Scan =
-            new org.apache.spark.sql.connector.read.LocalScan {
+            new org.apache.spark.sql.connector.read.LocalScan
+                with org.apache.spark.sql.connector.read.SupportsReportStatistics {
               override def rows(): Array[InternalRow] = localRows
               override def readSchema(): StructType = tblSchema
               override def description(): String = s"$catName.$ns.$t.$kind"
+              override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
+                new org.apache.spark.sql.connector.read.Statistics {
+                  override def sizeInBytes(): java.util.OptionalLong =
+                    java.util.OptionalLong.of(localBytes)
+                  override def numRows(): java.util.OptionalLong =
+                    java.util.OptionalLong.of(localRows.length.toLong)
+                }
             }
         }
     }

@@ -367,9 +367,10 @@ object Partitioning {
     * keeps on missing stats, unknown types, or unprojectable filters.
     * Numeric bounds are physical parquet values (DATE = days since epoch,
     * TIMESTAMP = micros), so literals convert through catalyst's internal
-    * representation — the same encoding Spark writes. */
-  def keepByStats(file: DataFileMeta, schema: StructType,
-                  filter: sources.Filter): Boolean = {
+    * representation — the same encoding Spark writes. Each literal
+    * converts once, when the test is built; apply the returned test to
+    * every file of a scan. */
+  def keepByStats(schema: StructType, filter: sources.Filter): DataFileMeta => Boolean = {
     def numLit(colName: String, v: Any): Option[Double] =
       if (v == null) None
       else schema.find(_.name.equalsIgnoreCase(colName)).flatMap { f =>
@@ -383,49 +384,50 @@ object Partitioning {
           }
         } catch { case scala.util.control.NonFatal(_) => None }
       }
-    def numRange(c: String): Option[ColRange] =
+    def numRange(file: DataFileMeta, c: String): Option[ColRange] =
       file.colRanges.flatMap(m => m.find(_._1.equalsIgnoreCase(c)).map(_._2))
-    def strRange(c: String): Option[StrRange] =
+    def strRange(file: DataFileMeta, c: String): Option[StrRange] =
       file.strRanges.flatMap(m => m.find(_._1.equalsIgnoreCase(c)).map(_._2))
     def strLit(v: Any): Option[String] = v match {
       case s: String => Some(s); case _ => None
     }
-    def keep(f: sources.Filter): Boolean = f match {
-      case sources.And(l, r) => keep(l) && keep(r)
-      case sources.Or(l, r)  => keep(l) || keep(r)
-      case sources.EqualTo(a, v) =>
-        numLit(a, v).flatMap(d => numRange(a).map(r => r.min <= d && d <= r.max))
-          .orElse(strLit(v).flatMap(s =>
-            strRange(a).map(r => r.min <= s && s <= r.max)))
-          .getOrElse(true)
+    // the numeric test when the literal converts and the file has bounds,
+    // else the string test likewise, else keep
+    def bound(a: String, v: Any)(num: (ColRange, Double) => Boolean,
+                                 str: (StrRange, String) => Boolean)
+        : DataFileMeta => Boolean = {
+      val (d, s) = (numLit(a, v), strLit(v))
+      file => d.flatMap(x => numRange(file, a).map(num(_, x)))
+        .orElse(s.flatMap(x => strRange(file, a).map(str(_, x))))
+        .getOrElse(true)
+    }
+    def equal(a: String, v: Any): DataFileMeta => Boolean =
+      bound(a, v)((r, d) => r.min <= d && d <= r.max, (r, s) => r.min <= s && s <= r.max)
+    def test(f: sources.Filter): DataFileMeta => Boolean = f match {
+      case sources.And(l, r) =>
+        val (tl, tr) = (test(l), test(r)); file => tl(file) && tr(file)
+      case sources.Or(l, r) =>
+        val (tl, tr) = (test(l), test(r)); file => tl(file) || tr(file)
+      case sources.EqualTo(a, v) => equal(a, v)
       case sources.GreaterThan(a, v) =>
-        numLit(a, v).flatMap(d => numRange(a).map(_.max > d))
-          .orElse(strLit(v).flatMap(s => strRange(a).map(_.max > s)))
-          .getOrElse(true)
+        bound(a, v)(_.max > _, _.max > _)
       case sources.GreaterThanOrEqual(a, v) =>
-        numLit(a, v).flatMap(d => numRange(a).map(_.max >= d))
-          .orElse(strLit(v).flatMap(s => strRange(a).map(_.max >= s)))
-          .getOrElse(true)
+        bound(a, v)(_.max >= _, _.max >= _)
       case sources.LessThan(a, v) =>
-        numLit(a, v).flatMap(d => numRange(a).map(_.min < d))
-          .orElse(strLit(v).flatMap(s => strRange(a).map(_.min < s)))
-          .getOrElse(true)
+        bound(a, v)(_.min < _, _.min < _)
       case sources.LessThanOrEqual(a, v) =>
-        numLit(a, v).flatMap(d => numRange(a).map(_.min <= d))
-          .orElse(strLit(v).flatMap(s => strRange(a).map(_.min <= s)))
-          .getOrElse(true)
-      case sources.In(a, vs) =>
-        if (vs.isEmpty) true
-        else vs.exists(v => keep(sources.EqualTo(a, v)))
+        bound(a, v)(_.min <= _, _.min <= _)
+      case sources.In(a, vs) if vs.nonEmpty =>
+        val each = vs.toSeq.map(equal(a, _)); file => each.exists(_(file))
       case sources.StringStartsWith(a, p) =>
-        strRange(a).forall { r =>
+        file => strRange(file, a).forall { r =>
           // bounds are truncated (min' <= min, max' >= max): a value with
           // prefix p exists only if [p, p￿..) intersects [min, max]
           r.max >= p && r.min.take(p.length) <= p
         }
-      case _ => true
+      case _ => _ => true
     }
-    keep(filter)
+    test(filter)
   }
 
   /** `lower <= column <= upper` over DOUBLE bounds as a pruning filter

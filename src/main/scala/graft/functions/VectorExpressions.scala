@@ -599,8 +599,10 @@ case class PqScoreF(codes: Expression, lut: Expression, cn2: Expression,
       cn2 = newChildren(2), qnorm = newChildren(3))
 }
 
-/** Session extension registering the native functions, the same injection
-  * point the reference's engine uses for its Iceberg extensions
+/** Session extension registering the native functions and graft's plan
+  * rules ([[graft.plans.DotProductRewrite]],
+  * [[graft.plans.SmallSortSinglePartition]]), the same injection point the
+  * reference's engine uses for its Iceberg extensions
   * (`/root/reference/conf/spark-defaults.conf:1`). Enable with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`.
   */
@@ -633,6 +635,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[NGramsGenerator].getName, "graft_ngrams"),
       (children: Seq[Expression]) => NGramsGenerator(children(0), children(1))))
     ext.injectOptimizerRule(_ => graft.plans.DotProductRewrite)
+    ext.injectQueryStagePrepRule(graft.plans.SmallSortSinglePartition(_))
   }
 }
 

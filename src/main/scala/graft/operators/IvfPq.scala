@@ -1034,7 +1034,7 @@ object IvfPq {
         val files = meta.filesAsOf(None)
         val probedIn = cellIn(probed)
         val probedRows = files
-          .filter(Partitioning.keepByStats(_, meta.schema, probedIn))
+          .filter(Partitioning.keepByStats(meta.schema, probedIn))
           .map(_.rowCount).sum
         val expected = probed.size * files.map(_.rowCount).sum.toDouble /
           math.max(1, cents.size)

@@ -19,6 +19,53 @@ class GraftSessionSpec extends SparkSpec {
     assert(opts("spark.sql.extensions") === "graft.functions.GraftExtensions")
     // served sessions share generated code (next test)
     assert(opts("spark.sql.artifact.isolation.enabled") === "false")
+    // a dashboard's statement mix stays compiled (below)
+    assert(opts("spark.sql.codegen.cache.maxEntries") === "1000")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "1000")
+  }
+
+  test("a dashboard's statement mix over two sessions compiles nothing in its third round") {
+    // bi_serve's charts over the sf tables, served by a graft catalog: a
+    // point lookup, a range aggregate, a group-by, a star join, a top-k,
+    // a VERSION AS OF read and a .snapshots query, each ORDER BY'd
+    val wh = scratchDir("codegen_mix").resolve("wh").toString
+    val cat = new graft.catalog.GraftCatalog(wh)
+    cat.createNamespace("bi")
+    Seq("lineitem", "orders", "customer", "nation").foreach { t =>
+      val file = java.nio.file.Paths.get(sfDir, s"$t.parquet")
+      cat.createTable("bi", t, spark.read.parquet(file.toString).schema)
+      cat.registerFiles("bi", t, Seq(file))
+    }
+    val first = cat.loadTable("bi", "lineitem").currentSnapshotId
+    cat.registerFiles("bi", "lineitem", Seq(java.nio.file.Paths.get(sfDir, "lineitem.parquet")))
+    def mix(c: String) = Seq(
+      s"SELECT l_orderkey, l_linenumber, l_quantity FROM $c.bi.lineitem " +
+        "WHERE l_orderkey = 7 ORDER BY l_linenumber",
+      s"SELECT l_returnflag, l_linestatus, count(*) AS n, sum(l_quantity) AS q " +
+        s"FROM $c.bi.lineitem WHERE l_shipdate BETWEEN TIMESTAMP'1995-01-01 00:00:00' " +
+        "AND TIMESTAMP'1995-03-01 00:00:00' GROUP BY l_returnflag, l_linestatus " +
+        "ORDER BY l_returnflag, l_linestatus",
+      s"SELECT o_orderpriority, o_orderstatus, count(*) AS n FROM $c.bi.orders " +
+        "GROUP BY o_orderpriority, o_orderstatus ORDER BY o_orderpriority, o_orderstatus",
+      s"SELECT n_name, sum(l_extendedprice * (1 - l_discount)) AS revenue, count(*) AS n " +
+        s"FROM $c.bi.lineitem JOIN $c.bi.orders ON l_orderkey = o_orderkey " +
+        s"JOIN $c.bi.customer ON o_custkey = c_custkey " +
+        s"JOIN $c.bi.nation ON c_nationkey = n_nationkey " +
+        "GROUP BY n_name ORDER BY revenue DESC, n_name",
+      s"SELECT c_custkey, c_name, c_acctbal FROM $c.bi.customer " +
+        "WHERE c_mktsegment = 'BUILDING' ORDER BY c_acctbal DESC, c_custkey LIMIT 10",
+      s"SELECT count(*) AS n, sum(l_quantity) AS q FROM $c.bi.lineitem VERSION AS OF $first",
+      s"SELECT snapshot_id, added_rows FROM $c.bi.lineitem.snapshots ORDER BY snapshot_id")
+    val sessions = Seq(SparkSpec.session.newSession(), SparkSpec.session.newSession())
+    def round(): Seq[Int] = sessions.flatMap(s =>
+      GraftSession.withCatalog(s, wh)(c => mix(c).map(q => s.sql(q).collect().length)))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val sizes = round()
+    assert(round() === sizes)
+    val before = compiles.getCount
+    assert(round() === sizes)
+    assert(compiles.getCount === before,
+      s"round three compiled ${compiles.getCount - before} bodies")
   }
 
   test("sessions of one context share generated code, not session state") {

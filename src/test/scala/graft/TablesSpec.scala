@@ -35,8 +35,7 @@ class TablesSpec extends SparkSpec {
   // carries, independent of the current testdata.
   for (unit <- Seq("NANOS", "MICROS", "MILLIS")) {
     test(s"events loader adapts to a TIMESTAMP($unit) footer") {
-      val dir = java.nio.file.Files.createTempDirectory(
-        graft.queries.Fixtures.root, s"tsu$unit")
+      val dir = scratchDir(s"tsu$unit")
       TsUnitFixture.writeEvents(dir, unit, rows = 50)
       assert(Tables.eventsTsUnit(dir.toString) === unit)
       val ev = Tables.events(spark, dir.toString)

@@ -1,7 +1,5 @@
 package graft.catalog
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources
 
@@ -60,8 +58,7 @@ class BloomIndexSpec extends SparkSpec {
     // ids 0..799 scattered across 4 files by residue: every file's
     // [min, max] spans ~the whole domain
     val df = (0L until 800L).map(i => (i, s"v$i")).toDF("id", "payload")
-    val base = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "bloom_spec")
+    val base = scratchDir("bloom_spec")
     (0 until 4).foreach { r =>
       df.filter(pmod(col("id"), lit(4)) === r).coalesce(1)
         .write.parquet(base.resolve(s"r$r").toString)
@@ -75,8 +72,7 @@ class BloomIndexSpec extends SparkSpec {
   }
 
   test("point lookup prunes to the id's file where range stats keep everything; read is exact") {
-    val wh = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "bloom_wh")
+    val wh = scratchDir("bloom_wh")
     val cat = new GraftCatalog(wh.resolve("wh").toString)
     cat.createNamespace("b")
     scatteredTable(cat, "b", "t", withBlooms = true)
@@ -107,13 +103,11 @@ class BloomIndexSpec extends SparkSpec {
       "SELECT cast(conv(substring(md5('doc-42'), 1, 15), 16, 10) as bigint)")
       .head().getLong(0)
     assert(sparkHash === BloomIndex.hash64("doc-42"))
-    val wh = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "bloom_str")
+    val wh = scratchDir("bloom_str")
     val cat = new GraftCatalog(wh.resolve("wh").toString)
     cat.createNamespace("b")
     val df = (0L until 400L).map(i => (i, s"uuid-$i")).toDF("id", "sid")
-    val base = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "bloom_str_rows")
+    val base = scratchDir("bloom_str_rows")
     (0 until 4).foreach { r =>
       df.filter(pmod(col("id"), lit(4)) === r).coalesce(1)
         .write.parquet(base.resolve(s"r$r").toString)
@@ -149,13 +143,11 @@ class BloomIndexSpec extends SparkSpec {
     // probes the manifest's raw ".../my dir/..." — the blooms would
     // silently never prune for such files (ADVICE round 13)
     import spark.implicits._
-    val wh = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "bloom_sp")
+    val wh = scratchDir("bloom_sp")
     val cat = new GraftCatalog(wh.resolve("wh").toString)
     cat.createNamespace("b")
     val df = (0L until 400L).map(i => (i, s"v$i")).toDF("id", "payload")
-    val base = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "bloom sp rows")
+    val base = scratchDir("bloom sp rows")
     assert(base.toString.contains(" "), "fixture must exercise a space")
     (0 until 4).foreach { r =>
       df.filter(pmod(col("id"), lit(4)) === r).coalesce(1)
@@ -184,8 +176,7 @@ class BloomIndexSpec extends SparkSpec {
     // a sidecar built under a DIFFERENT k must be probed with ITS k —
     // kept() reading the row's k=0 keeps the file despite zero bits;
     // assuming HashCount=7 would wrongly skip a file holding real rows
-    val dir = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "bloom_k")
+    val dir = scratchDir("bloom_k")
     val sc = dir.resolve("sidecar").toString
     Seq(("/data/f1.parquet", "id", zeros.length * 8, 0, zeros))
       .toDF("file", "column", "m", "k", "bits").coalesce(1).write.parquet(sc)
@@ -204,16 +195,14 @@ class BloomIndexSpec extends SparkSpec {
   }
 
   test("conservative fallbacks: bloom-less commits and un-bloomed columns stay kept") {
-    val wh = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "bloom_wh2")
+    val wh = scratchDir("bloom_wh2")
     val cat = new GraftCatalog(wh.resolve("wh").toString)
     cat.createNamespace("b")
     // commit 1 without blooms, commit 2 with — pruning applies per commit
     scatteredTable(cat, "b", "mixed", withBlooms = false)
     import spark.implicits._
     val extra = Seq((800L, "v800"), (801L, "v801")).toDF("id", "payload")
-    val dir = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "bloom_extra")
+    val dir = scratchDir("bloom_extra")
     extra.coalesce(1).write.mode("overwrite")
       .parquet(dir.resolve("x").toString)
     cat.registerFilesWithBlooms(spark, "b", "mixed",

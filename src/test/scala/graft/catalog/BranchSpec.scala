@@ -12,7 +12,7 @@ class BranchSpec extends SparkSpec {
   import spark.implicits._
 
   private def setup(): (GraftCatalog, java.nio.file.Path) = {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "branch")
+    val base = scratchDir("branch")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
     cat.createTable("nyc", "t", df.schema)
@@ -96,7 +96,7 @@ class BranchSpec extends SparkSpec {
   }
 
   test("branch forked from the empty table reads empty even after main advances") {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "branch0")
+    val base = scratchDir("branch0")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     val df = Seq((1L, "a")).toDF("id", "v")
     cat.createTable("nyc", "t0", df.schema)

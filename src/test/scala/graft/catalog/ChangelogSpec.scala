@@ -16,14 +16,12 @@ import graft.SparkSpec
 class ChangelogSpec extends SparkSpec {
 
   private def freshCat(): GraftCatalog = {
-    val base = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "chg_spec")
+    val base = scratchDir("chg_spec")
     new GraftCatalog(base.resolve("wh").toString)
   }
 
   private def writeRows(df: org.apache.spark.sql.DataFrame): java.nio.file.Path = {
-    val dir = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "chg_rows")
+    val dir = scratchDir("chg_rows")
     df.coalesce(1).write.mode("overwrite").parquet(dir.resolve("p").toString)
     dir.resolve("p")
   }
@@ -135,8 +133,7 @@ class ChangelogSpec extends SparkSpec {
     val doomed = cat.readTableWithPositions(spark, "c", "t")
       .filter(col("id") === 1L)
       .select(col(PosFileCol).as("file_path"), col(PosIdxCol).as("pos"))
-    val delDir = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "chg_del")
+    val delDir = scratchDir("chg_del")
     doomed.coalesce(1).write.mode("overwrite")
       .parquet(delDir.resolve("d").toString)
     cat.commitPositionDeletes("c", "t",
@@ -168,8 +165,7 @@ class ChangelogSpec extends SparkSpec {
       .select(col("id"), col(PosFileCol).as("file_path"),
         col(PosIdxCol).as("pos")).persist()
     def commitTuples(ids: Long*): Unit = {
-      val d = Files.createTempDirectory(
-        graft.queries.Fixtures.root, "chg_ovl")
+      val d = scratchDir("chg_ovl")
       pos.filter(col("id").isInCollection(ids)).select("file_path", "pos")
         .coalesce(1).write.mode("overwrite").parquet(d.resolve("d").toString)
       cat.commitPositionDeletes("c", "t", Seq(d.resolve("d")))
@@ -247,8 +243,7 @@ class ChangelogSpec extends SparkSpec {
   test("streaming changelog: replay law holds across drains, exactly-once, expired view refuses") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val base = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "chg_stream")
+    val base = scratchDir("chg_stream")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     cat.createNamespace("c")
     val rows = (1L to 8L).map(i => (i, s"v$i")).toDF("id", "v")
@@ -313,8 +308,7 @@ class ChangelogSpec extends SparkSpec {
   test("expiration prunes the changelog view's storage; a caught-up drain is unaffected; stale view still refuses") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val base = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "chg_retain")
+    val base = scratchDir("chg_retain")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     cat.createNamespace("c")
     val rows = (1L to 8L).map(i => (i, s"v$i")).toDF("id", "v")

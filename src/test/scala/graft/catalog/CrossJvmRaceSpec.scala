@@ -37,7 +37,7 @@ class CrossJvmRaceSpec extends SparkSpec {
     .select(col("vec_id"), col("embedding"))
 
   private def freshWh(): String = {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "xjvm")
+    val base = scratchDir("xjvm")
     base.resolve("wh").toString
   }
 
@@ -181,7 +181,7 @@ class CrossJvmRaceSpec extends SparkSpec {
     val cat = new GraftCatalog(wh)
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
     cat.createTable("c", "t", df.schema)
-    val tmp = Files.createTempDirectory(graft.queries.Fixtures.root, "xjvm_cl")
+    val tmp = scratchDir("xjvm_cl")
     df.coalesce(1).write.parquet(tmp.resolve("r1").toString)
     cat.registerFiles("c", "t", Seq(tmp.resolve("r1")))            // s1
     graft.etl.Merge.deleteWherePos(spark, cat, "c", "t",
@@ -224,7 +224,7 @@ class CrossJvmRaceSpec extends SparkSpec {
     val cat = new GraftCatalog(wh)
     val df = Seq((1L, "a")).toDF("id", "v")
     cat.createTable("c", "t", df.schema)
-    val fdir = Files.createTempDirectory(graft.queries.Fixtures.root, "xjvm_f")
+    val fdir = scratchDir("xjvm_f")
     df.coalesce(1).write.mode("overwrite").parquet(fdir.toString)
     val file = Fs.regularFiles(fdir, Seq(".parquet")).head
     val perWorker = 20

@@ -24,7 +24,7 @@ class GraftCatalogSpec extends SparkSpec {
     cat.planFiles(cat.loadTable("nyc", "ts"), None, nameBetween(lo, hi))
 
   private def freshDirs() = {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "cat_spec")
+    val base = scratchDir("cat_spec")
     val data = base.resolve("data"); Files.createDirectories(data)
     val wh = base.resolve("warehouse"); Files.createDirectories(wh)
     (data, wh)

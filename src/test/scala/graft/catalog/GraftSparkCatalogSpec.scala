@@ -11,7 +11,7 @@ class GraftSparkCatalogSpec extends SparkSpec {
   import spark.implicits._
 
   private def setup(): (String, GraftCatalog) = {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "sparkcat")
+    val base = scratchDir("sparkcat")
     val dataDir = base.resolve("in"); Files.createDirectories(dataDir)
     Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("id", "name", "score")
@@ -301,7 +301,7 @@ class GraftSparkCatalogSpec extends SparkSpec {
   }
 
   test("SQL DELETE keeps rows where the predicate evaluates NULL (3VL)") {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "sparkcat_null")
+    val base = scratchDir("sparkcat_null")
     val dataDir = base.resolve("in"); Files.createDirectories(dataDir)
     Seq((1L, Some(10.0)), (2L, None), (3L, Some(30.0)))
       .toDF("id", "score")
@@ -410,7 +410,7 @@ class GraftSparkCatalogSpec extends SparkSpec {
   }
 
   private def setupMor(): (String, GraftCatalog) = {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "sparkcatmor")
+    val base = scratchDir("sparkcatmor")
     val dataDir = base.resolve("in"); Files.createDirectories(dataDir)
     Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("id", "name", "score")

@@ -1,6 +1,5 @@
 package graft.catalog
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.SparkSpec
@@ -109,7 +108,7 @@ class PartitioningSpec extends SparkSpec {
   }
 
   test("partitioned write records tuples; planFiles projects predicates") {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "partcat")
+    val base = scratchDir("partcat")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     val days = Seq("2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04")
     val df = days.zipWithIndex.flatMap { case (d, i) =>
@@ -144,8 +143,8 @@ class PartitioningSpec extends SparkSpec {
       meta.currentSchemaVersion.fields, f,
       sources.LessThan("ts", ts("2024-01-04 00:00:00")))),
       "inclusive projection must keep the boundary partition")
-    assert(jan04files.forall(f => !Partitioning.keepByStats(f, meta.schema,
-      sources.LessThan("ts", ts("2024-01-04 00:00:00")))),
+    assert(jan04files.forall(f => !Partitioning.keepByStats(meta.schema,
+      sources.LessThan("ts", ts("2024-01-04 00:00:00")))(f)),
       "footer stats must veto the boundary partition's files")
     // bucket equality keeps one bucket per day
     val bucketOf7 = Partitioning.canonical("bucket[4]", LongType, 7L).get
@@ -159,7 +158,7 @@ class PartitioningSpec extends SparkSpec {
   }
 
   test("partition spec evolution: per-file spec pruning, guards") {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "specevo")
+    val base = scratchDir("specevo")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     val mk = (d: String, n: Int) => (0 until n).map(j =>
       (ts(s"$d 0${j % 9}:00:00"), j.toLong, s"r$j")).toDF("ts", "id", "payload")
@@ -214,7 +213,7 @@ class PartitioningSpec extends SparkSpec {
   }
 
   test("SQL: PARTITIONED BY transforms, INSERT clusters, scans prune") {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "partsql")
+    val base = scratchDir("partsql")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     val c = "gp" + base.getFileName.toString.replaceAll("[^a-zA-Z0-9]", "")
     spark.conf.set(s"spark.sql.catalog.$c", classOf[GraftSparkCatalog].getName)
@@ -284,7 +283,7 @@ class PartitioningSpec extends SparkSpec {
   }
 
   test("optimize preserves partition tuples on a partitioned table") {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "partopt")
+    val base = scratchDir("partopt")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     val df = Seq("2024-01-01", "2024-02-01").zipWithIndex.flatMap { case (d, i) =>
       (0 until 10).map(j => (ts(s"$d 01:00:00"), (i * 10 + j).toLong))
@@ -303,7 +302,7 @@ class PartitioningSpec extends SparkSpec {
   }
 
   test("stats pruning: footer bounds veto files independently of the spec") {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "statpr")
+    val base = scratchDir("statpr")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     val df1 = (1L to 100L).map(i => (i, s"k$i")).toDF("id", "k")
     val df2 = (1000L to 1100L).map(i => (i, s"z$i")).toDF("id", "k")

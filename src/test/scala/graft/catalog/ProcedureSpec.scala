@@ -1,6 +1,6 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import graft.SparkSpec
 
@@ -11,7 +11,7 @@ class ProcedureSpec extends SparkSpec {
   import spark.implicits._
 
   private def setup(): (String, GraftCatalog, java.nio.file.Path) = {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "proc")
+    val base = scratchDir("proc")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
     cat.createTable("nyc", "t", df.schema)
@@ -105,7 +105,7 @@ class ProcedureSpec extends SparkSpec {
   test("CALL search_text tokenizes under the ONE corpus convention — adversarial queries match the Scala entry") {
     import org.apache.spark.sql.functions.{asc, desc}
     import graft.queries.Extensions
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "proctok")
+    val base = scratchDir("proctok")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     val docs = Seq(
       (1L, "spark shuffles data wins"),

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Path, Paths}
 import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -19,7 +19,7 @@ class ScanPlannerSpec extends SparkSpec {
   import spark.implicits._
 
   private def fresh(tag: String): (Path, GraftCatalog) = {
-    val base = Files.createTempDirectory(Paths.get("target").toAbsolutePath, tag)
+    val base = scratchDir(tag)
     val cat = new GraftCatalog(base.resolve("wh").toString)
     cat.createNamespace("p")
     (base, cat)

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
@@ -15,7 +15,7 @@ import graft.SparkSpec
 class SchemaEvolutionSpec extends SparkSpec {
 
   private def freshCat(tag: String): GraftCatalog = {
-    val base = Files.createTempDirectory(Paths.get("target"), s"evo_$tag")
+    val base = scratchDir(s"evo_$tag")
     new GraftCatalog(base.resolve("wh").toString)
   }
 

@@ -1,7 +1,5 @@
 package graft.catalog
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
@@ -16,7 +14,7 @@ class SpjSpec extends SparkSpec {
   import spark.implicits._
 
   private def setup(spec: Seq[(String, String)]): (String, GraftCatalog) = {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "spj")
+    val base = scratchDir("spj")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     val facts = (1L to 400L).map(i => (i % 40, s"f$i", i * 1.5))
       .toDF("k", "tag", "v")

@@ -10,7 +10,7 @@ class WapRollbackSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshCat(tag: String): (GraftCatalog, Path) = {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, tag)
+    val base = scratchDir(tag)
     (new GraftCatalog(base.resolve("wh").toString), base)
   }
 

@@ -9,7 +9,7 @@ class CompactSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeInputs(n: Int): (Seq[String], java.nio.file.Path) = {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "compact_spec")
+    val base = scratchDir("compact_spec")
     val files = (0 until n).map { i =>
       val dir = base.resolve(s"in$i")
       (1 to 1000).map(j => (i.toLong * 1000 + j, s"v$j")).toDF("id", "v")

@@ -19,7 +19,7 @@ class MaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
   private def setup(): GraftCatalog = {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "maint")
+    val base = scratchDir("maint")
     val dataDir = base.resolve("in"); Files.createDirectories(dataDir)
     // 8 tiny files of 64 rows each
     (1 to 512).map(i => (i.toLong, (i % 97).toLong, i * 1.5))
@@ -134,7 +134,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("expireSnapshots drops history, deletes orphans, keeps retained state") {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "expire")
+    val base = scratchDir("expire")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     cat.createTable("nyc", "e", spark.range(1).schema)
     cat.registerFiles("nyc", "e", Seq(landRange(cat, "e", 10, "b1")))
@@ -177,7 +177,7 @@ class MaintenanceSpec extends SparkSpec {
     import graft.queries.Extensions.{docTokenSets, docBandRows}
     import graft.streaming.Streaming.neardupScreen
     import org.apache.spark.sql.functions.col
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "underindex")
+    val base = scratchDir("underindex")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     val tA = "the quick brown fox jumps over the lazy dog while rain falls on the quiet village green at dawn"
     val proto = Seq((0L, "x")).toDF("doc_id", "text")
@@ -212,7 +212,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("expireSnapshots refuses a boundary carrying merge-on-read debt") {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "expire_mor")
+    val base = scratchDir("expire_mor")
     val cat = new GraftCatalog(base.resolve("wh").toString)
     cat.createTable("nyc", "em", spark.range(1).schema)
     cat.registerFiles("nyc", "em", Seq(landRange(cat, "em", 10, "b1")))

@@ -14,7 +14,7 @@ class MergeSpec extends SparkSpec {
   import spark.implicits._
 
   private def setup() = {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "merge_spec")
+    val base = scratchDir("merge_spec")
     val dataDir = base.resolve("in"); Files.createDirectories(dataDir)
     Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("id", "name", "score")
@@ -49,7 +49,7 @@ class MergeSpec extends SparkSpec {
   test("deleteWhere keeps rows where the predicate evaluates NULL (3VL)") {
     // SQL DELETE removes only predicate-TRUE rows; a naive filter(!cond)
     // would silently drop id=2 (score NULL ⇒ cond NULL ⇒ !cond NULL)
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "merge_null")
+    val base = scratchDir("merge_null")
     val dataDir = base.resolve("in"); Files.createDirectories(dataDir)
     Seq((1L, Some(10.0)), (2L, None), (3L, Some(30.0)))
       .toDF("id", "score")
@@ -82,7 +82,7 @@ class MergeSpec extends SparkSpec {
     assert(cat.readTable(spark, "nyc", "t").select("id").as[Long].collect().sorted
       === Seq(1L, 3L))
     // re-insert id=2 AFTER the delete: the old delete must NOT hit it
-    val dir = Files.createTempDirectory(graft.queries.Fixtures.root, "mor_add")
+    val dir = scratchDir("mor_add")
     Seq((2L, "b-new", 25.0)).toDF("id", "name", "score")
       .coalesce(1).write.mode("overwrite").parquet(dir.resolve("f").toString)
     cat.registerFiles("nyc", "t", Seq(dir.resolve("f")))
@@ -120,7 +120,7 @@ class MergeSpec extends SparkSpec {
 
   test("position deletes hit the SAME commit's added files (<= sequence rule)") {
     val cat = setup()
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "pos_own")
+    val base = scratchDir("pos_own")
     Seq((10L, "x", 1.0), (11L, "y", 2.0)).toDF("id", "name", "score")
       .coalesce(1).write.parquet(base.resolve("add").toString)
     // the (file_path, pos) tuple of id=10 INSIDE the about-to-be-added file
@@ -146,7 +146,7 @@ class MergeSpec extends SparkSpec {
     val cat = setup()
     import graft.catalog.GraftCatalog.{PosFileCol, PosIdxCol}
     val base = cat.loadTable("nyc", "t").currentSnapshotId
-    val tmp = Files.createTempDirectory(graft.queries.Fixtures.root, "race_pos")
+    val tmp = scratchDir("race_pos")
     cat.readTableWithPositions(spark, "nyc", "t", asOf = Some(base))
       .filter(col("id") === 2L)
       .select(col(PosFileCol).as("file_path"), col(PosIdxCol).as("pos"))
@@ -179,7 +179,7 @@ class MergeSpec extends SparkSpec {
     val cat = setup()
     import graft.catalog.GraftCatalog.{PosFileCol, PosIdxCol}
     val base = cat.loadTable("nyc", "t").currentSnapshotId
-    val tmp = Files.createTempDirectory(graft.queries.Fixtures.root, "race_ok")
+    val tmp = scratchDir("race_ok")
     cat.readTableWithPositions(spark, "nyc", "t", asOf = Some(base))
       .filter(col("id") === 2L)
       .select(col(PosFileCol).as("file_path"), col(PosIdxCol).as("pos"))

@@ -81,7 +81,7 @@ class SanitizeSpec extends SparkSpec {
 
   test("B5 sanitizeTree: mirror tree, only-if-changed, dry-run, overwrite guard") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "santree_spec")
+    val base = scratchDir("santree_spec")
     val in = base.resolve("in"); val out = base.resolve("out")
     Files.createDirectories(in.resolve("nested"))
     def writeOne(df: org.apache.spark.sql.DataFrame, dst: java.nio.file.Path): Unit = {

@@ -30,8 +30,7 @@ class ShardExportSpec extends SparkSpec {
     val nShards = 8
     val draw = expr(
       "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint)")
-    val base = java.nio.file.Files.createTempDirectory(
-      graft.queries.Fixtures.root, "rt_spec")
+    val base = scratchDir("rt_spec")
     val out = base.resolve("shards").toString
     val src = graft.Tables.documents(spark, sfDir)
       .select("doc_id", "lang", "source", "text")

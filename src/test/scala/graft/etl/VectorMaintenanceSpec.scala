@@ -1,6 +1,6 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import graft.{SparkSpec, Tables}
 import graft.catalog.GraftCatalog
@@ -20,7 +20,7 @@ class VectorMaintenanceSpec extends SparkSpec {
     .select(col("vec_id"), col("embedding"))
 
   private def freshCat() = {
-    val base = Files.createTempDirectory(graft.queries.Fixtures.root, "vecmaint")
+    val base = scratchDir("vecmaint")
     new GraftCatalog(base.resolve("wh").toString)
   }
 

@@ -13,8 +13,7 @@ class IvfPqSpec extends SparkSpec {
     .select(col("vec_id"), col("embedding"))
 
   private def freshCat() = {
-    val base = java.nio.file.Files.createTempDirectory(
-      graft.queries.Fixtures.root, "ivfpqspec")
+    val base = scratchDir("ivfpqspec")
     new graft.catalog.GraftCatalog(base.resolve("wh").toString)
   }
 
@@ -251,7 +250,7 @@ class IvfPqSpec extends SparkSpec {
     val probed = IvfPq.probeCells(cents, probeVec)
     val codesMeta = cat.loadTable("vec", "emb_ivfpq_codes")
     val files = codesMeta.filesAsOf(None)
-    val probedRows = files.filter(graft.catalog.Partitioning.keepByStats(_,
+    val probedRows = files.filter(graft.catalog.Partitioning.keepByStats(
         codesMeta.schema, org.apache.spark.sql.sources.In("cell",
           probed.toArray[Any])))
       .map(_.rowCount).sum

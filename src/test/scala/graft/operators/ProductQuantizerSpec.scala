@@ -40,8 +40,7 @@ class ProductQuantizerSpec extends SparkSpec {
   }
 
   test("buildIndex commits codes+books; loadModel rehydrates the exact model") {
-    val base = java.nio.file.Files.createTempDirectory(
-      graft.queries.Fixtures.root, "pqspec")
+    val base = scratchDir("pqspec")
     val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
     val model = ProductQuantizer.train(
       ProductQuantizer.sampleRows(emb).map(_._2).toSeq)

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.{SparkEntry, SparkSpec}
@@ -15,8 +13,7 @@ class TextIndexSpec extends SparkSpec {
   private val tok = graft.queries.Extensions.tokensExpr
 
   private def freshCat(): GraftCatalog = {
-    val base = Files.createTempDirectory(
-      graft.queries.Fixtures.root, "textidx_spec")
+    val base = scratchDir("textidx_spec")
     new GraftCatalog(base.resolve("wh").toString)
   }
 

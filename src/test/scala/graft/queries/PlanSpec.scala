@@ -332,8 +332,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.{BaseJoinExec,
       BroadcastNestedLoopJoinExec, CartesianProductExec}
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory(
-      graft.queries.Fixtures.root, "screen_pin")
+    val base = scratchDir("screen_pin")
     val committed = Seq((1L, "alpha beta gamma delta"),
       (2L, "epsilon zeta eta theta")).toDF("doc_id", "text")
     val sets = Extensions.docTokenSets(committed)

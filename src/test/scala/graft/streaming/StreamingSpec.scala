@@ -107,8 +107,7 @@ class StreamingSpec extends SparkSpec {
       "distinct_queries" -> nBatch, "neighbors_from_corpus" -> nBatch))
     // recall: one-shot augmentTop1 over the same split vs the driver's
     // brute exact top-1 (the probed-cell search may miss — pin the floor)
-    val base = java.nio.file.Files.createTempDirectory(
-      graft.queries.Fixtures.root, "augment_recall")
+    val base = scratchDir("augment_recall")
     val cat = new graft.catalog.GraftCatalog(base.resolve("wh").toString)
     val emb = graft.Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
     val corpus = emb.filter(pmod(col("vec_id"), lit(10)) =!= 7)
