@@ -249,7 +249,8 @@ case class TableMeta(namespace: String, name: String, schemaDdl: String,
       }
   }
 
-  /** Live equality-delete files at `asOf` (merge-on-read debt). */
+  /** Live delete files at `asOf`, position and equality alike
+    * (merge-on-read debt). */
   def deleteFilesAsOf(asOf: Option[Long]): List[DataFileMeta] =
     stateAsOf(asOf).flatMap(_.deletes)
 }
@@ -305,6 +306,24 @@ object GraftCatalog {
     * nowhere, but TPC-H-style schemas never use them). */
   val PosFileCol = "__graft_file"
   val PosIdxCol = "__graft_pos"
+
+  /** One step of [[GraftCatalog.readInternal]]'s fold, in commit order:
+    * the kept files snapshot `sn` adds, or the delete files it carries. */
+  private sealed trait ReadStep {
+    def sn: SnapshotMeta
+    /** Whether this step and `o`, adjacent, fold as one scan or one
+      * anti-join. */
+    def foldsWith(o: ReadStep): Boolean = (this, o) match {
+      case (_: AddFiles, _: AddFiles) | (_: PosDeletes, _: PosDeletes) => true
+      case (EqDeletes(_, k1), EqDeletes(_, k2)) => k1 == k2
+      case _ => false
+    }
+  }
+  private case class AddFiles(sn: SnapshotMeta) extends ReadStep
+  private case class PosDeletes(sn: SnapshotMeta) extends ReadStep
+  /** Equality deletes on the current key fields `keys`. */
+  private case class EqDeletes(sn: SnapshotMeta, keys: List[FieldMeta])
+      extends ReadStep
 
   /** Max recorded string-bound length — Iceberg's manifest `truncate(16)`. */
   private val StrBoundLen = 16
@@ -1184,10 +1203,8 @@ class GraftCatalog(val warehouse: String) {
                  branch: String): DataFrame = {
     val meta = loadTable(ns, t)
     val head = meta.branchOf(branch).headId
-    if (head == 0)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
-    else readTable(spark, ns, t, asOf = Some(head))
+    if (head == 0) scanFiles(spark, meta, Nil)
+    else readInternal(spark, meta, Some(head), Nil, withPos = false)
   }
 
   /** FAST-FORWARD main to a branch head: the branch's snapshots graft onto
@@ -1380,13 +1397,15 @@ class GraftCatalog(val warehouse: String) {
   def files(ns: String, t: String, asOf: Option[Long] = None): Seq[DataFileMeta] =
     loadTable(ns, t).filesAsOf(asOf)
 
-  /** Read the table, optionally time-traveling to a snapshot id
-    * ("AS OF snapshot" — served by the reference via Iceberg extensions,
-    * `/root/reference/conf/spark-defaults.conf:1-5`). File pruning happens
-    * here, before Spark ever plans the scan. */
+  /** Read the table, optionally time-traveling to a snapshot id (the
+    * reference's "AS OF snapshot", served through Iceberg's Spark
+    * extensions). Only the files [[planFiles]] keeps for the conjunctive
+    * source `filters` are scanned; the caller still applies its row-level
+    * filter. Merge-on-read delete debt is applied ([[readInternal]]). */
   def readTable(spark: SparkSession, ns: String, t: String,
-                asOf: Option[Long] = None): DataFrame =
-    readInternal(spark, ns, t, asOf, withPos = false)
+                asOf: Option[Long] = None,
+                filters: Seq[sources.Filter] = Nil): DataFrame =
+    readInternal(spark, loadTable(ns, t), asOf, filters, withPos = false)
 
   /** Read the current table state with two extra columns — the physical
     * file path and 0-based row ordinal every row came from
@@ -1398,91 +1417,120 @@ class GraftCatalog(val warehouse: String) {
     * rows are never re-emitted. */
   def readTableWithPositions(spark: SparkSession, ns: String, t: String,
                              asOf: Option[Long] = None): DataFrame =
-    readInternal(spark, ns, t, asOf, withPos = true)
+    readInternal(spark, loadTable(ns, t), asOf, Nil, withPos = true)
 
-  private def readInternal(spark: SparkSession, ns: String, t: String,
-                           asOf: Option[Long], withPos: Boolean): DataFrame = {
-    val meta = loadTable(ns, t)
+  /** The one fold over a table state: every DataFrame read of a table's
+    * live rows goes through it. It walks `stateAsOf(asOf)` in commit
+    * order and scans only the files [[planFiles]] keeps for `filters`:
+    *
+    *  - each maximal run of delete-free snapshots is ONE [[scanFiles]]
+    *    call (one multi-file scan per schema version, projected to the
+    *    current schema by field id), so a table without debt reads as
+    *    exactly that;
+    *  - an EQUALITY-delete snapshot's tombstones apply to the accumulated
+    *    earlier state, then its own added files union in — Iceberg's
+    *    sequence-number rule, which is what makes a one-snapshot upsert
+    *    atomic. Keys match null-safe: Iceberg equality deletes treat null
+    *    key values as equal;
+    *  - a POSITION-delete snapshot's (file_path, pos) tuples apply AFTER
+    *    its own added files union in — Iceberg v2's `<=` rule for
+    *    position deletes (a one-commit upsert may delete rows of its own
+    *    new files). A row in a LATER file can never be hit, even if a path
+    *    were registered twice;
+    *  - consecutive delete steps of one kind (and, for equality deletes,
+    *    the same keys) merge into one anti-join: no file enters between
+    *    them, so their order cannot matter.
+    *
+    * Pruning is exact: it drops whole files and a delete only removes
+    * rows, so the fold over the kept files returns exactly the kept
+    * files' rows of the full fold. Each delete file is tiny relative to
+    * the table, so every anti-join broadcasts; debt is cleared by
+    * materialization (overwrite), not by scale-up. With `withPos` every
+    * row carries its file path and row ordinal. */
+  private[catalog] def readInternal(spark: SparkSession, meta: TableMeta,
+                                    asOf: Option[Long],
+                                    filters: Seq[sources.Filter],
+                                    withPos: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    import GraftCatalog.{AddFiles, EqDeletes, PosDeletes, PosFileCol,
+      PosIdxCol, ReadStep}
     val snaps = meta.stateAsOf(asOf)
     // a position-delete snapshot anywhere in the state means every scanned
     // row must carry its (file, pos) tuple for the anti-join to bind to
     val needPos = withPos ||
       snaps.exists(sn => sn.isPositionDelete && sn.deletes.nonEmpty)
-    val empty = () => scanFiles(spark, meta, Nil, keepPos = needPos)
-    val merged = if (!snaps.exists(_.deletes.nonEmpty)) {
-      // fast path (no merge-on-read debt): one multi-file scan per schema
-      // version the live files were written under (almost always exactly
-      // one), each projected to the current schema by field id
-      scanFiles(spark, meta, snaps, keepPos = needPos)
-    } else {
-      // Merge-on-read: fold the snapshot log. Within one snapshot the
-      // deletes apply to the ACCUMULATED earlier state first, then that
-      // snapshot's own added files union in — Iceberg's sequence-number
-      // rule, which is what makes a one-snapshot upsert atomic. Each delete
-      // file is tiny relative to the table, so every anti-join broadcasts;
-      // debt is cleared by materialization (overwrite), not by scale-up.
-      snaps.foldLeft(empty()) { (acc, sn) =>
-        if (sn.isPositionDelete && sn.deletes.nonEmpty) {
-          // position deletes pin exact (file_path, pos) tuples. Iceberg
-          // v2's sequence rule for POSITION deletes is `<=`: they apply to
-          // data files of the SAME commit as well as all earlier state, so
-          // the snapshot's own added files union in BEFORE the anti-join
-          // (a one-commit upsert that deletes rows of its own new files is
-          // legal). A row in a LATER file can never be hit even if a path
-          // were recycled.
-          import org.apache.spark.sql.functions.broadcast
-          val withOwn =
-            if (sn.addedFiles.isEmpty) acc
-            else acc.unionByName(scanAt(spark, meta, sn.schemaVer,
-              sn.addedFiles.map(_.path), keepPos = needPos))
-          val del = spark.read.parquet(sn.deletes.map(_.path): _*)
-          withOwn.join(broadcast(del),
-            withOwn(GraftCatalog.PosFileCol) === del("file_path") &&
-              withOwn(GraftCatalog.PosIdxCol) === del("pos"), "left_anti")
-        } else {
-        val afterDeletes =
-          if (sn.deletes.isEmpty) acc
-          else {
-            import org.apache.spark.sql.functions.{broadcast, col}
-            val keys = sn.equalityKeys.getOrElse(Nil)
-            // Equality keys were recorded under THIS snapshot's schema
-            // version; resolve each by field id to its CURRENT name/type so
-            // deletes keep applying across renames/widenings. A key whose
-            // column was dropped later cannot be applied — refuse rather
-            // than silently keep deleted rows.
-            val sv = meta.versionOf(sn.schemaVer)
-            val cur = meta.currentSchemaVersion
-            val keyPairs = keys.map { k =>
-              val old = sv.fields.find(_.name == k).getOrElse(
-                throw new IllegalStateException(
-                  s"$ns.$t: delete key $k not in schema version ${sv.version}"))
-              val now = cur.fields.find(_.id == old.id).getOrElse(
-                throw new IllegalStateException(
-                  s"$ns.$t: delete-key column $k (field ${old.id}) was dropped; " +
-                    "materialize before dropping equality-key columns"))
-              (k, now)
-            }
-            // NULL-SAFE match (<=>): Iceberg equality deletes treat null
-            // key values as equal, so a delete row carrying nulls must
-            // remove the matching null-valued data rows — a plain
-            // equi-anti-join would silently keep them
-            val del = spark.read.parquet(sn.deletes.map(_.path): _*)
-              .select(keyPairs.map { case (k, now) =>
-                col(k).cast(now.dataType).as(s"__del_${now.name}") }: _*)
-            val cond = keyPairs.map { case (_, now) =>
-              col(now.name) <=> col(s"__del_${now.name}") }.reduce(_ && _)
-            acc.join(broadcast(del), cond, "left_anti")
-          }
-        if (sn.addedFiles.isEmpty) afterDeletes
-        else afterDeletes.unionByName(
-          scanAt(spark, meta, sn.schemaVer, sn.addedFiles.map(_.path),
-            keepPos = needPos))
+    val keep: String => Boolean =
+      if (filters.isEmpty) _ => true
+      else planFiles(meta, asOf, filters).map(_.path).toSet
+    val steps: List[ReadStep] = snaps.flatMap { sn =>
+      val add =
+        if (sn.addedFiles.exists(f => keep(f.path))) List(AddFiles(sn)) else Nil
+      if (sn.deletes.isEmpty) add
+      else if (sn.isPositionDelete) add :+ PosDeletes(sn)
+      else EqDeletes(sn, equalityKeyFields(meta, sn)) :: add
+    }
+    val groups = steps.foldRight(List.empty[List[ReadStep]]) {
+      case (s, (g @ (h :: _)) :: rest) if s.foldsWith(h) => (s :: g) :: rest
+      case (s, gs) => List(s) :: gs
+    }
+    // deletes before the first kept file have nothing to remove
+    val folded = groups.foldLeft(Option.empty[DataFrame]) { (acc, g) =>
+      g.head match {
+        case _: AddFiles =>
+          val added = scanFiles(spark, meta, g.map(_.sn), needPos, keep)
+          Some(acc.fold(added)(_.unionByName(added)))
+        case _: PosDeletes => acc.map { df =>
+          val del = spark.read.parquet(g.flatMap(_.sn.deletes.map(_.path)): _*)
+          df.join(broadcast(del), df(PosFileCol) === del("file_path") &&
+            df(PosIdxCol) === del("pos"), "left_anti")
+        }
+        case EqDeletes(_, keys) => acc.map { df =>
+          df.join(broadcast(tombstones(spark, g.map(_.sn), keys)),
+            keys.map(k => col(k.name) <=> col(s"__del_${k.name}"))
+              .reduce(_ && _), "left_anti")
         }
       }
     }
-    if (needPos && !withPos)
-      merged.drop(GraftCatalog.PosFileCol, GraftCatalog.PosIdxCol)
-    else merged
+    val merged = folded.getOrElse(scanFiles(spark, meta, Nil, needPos))
+    if (needPos && !withPos) merged.drop(PosFileCol, PosIdxCol) else merged
+  }
+
+  /** The current fields an equality-delete snapshot's keys name. Keys are
+    * recorded under the snapshot's schema version; each resolves by field
+    * id to its CURRENT name and type, so deletes keep applying across
+    * renames and widenings. A key whose column was dropped later cannot
+    * apply — refuse rather than silently keep deleted rows. */
+  private def equalityKeyFields(meta: TableMeta,
+                                sn: SnapshotMeta): List[FieldMeta] = {
+    val at = s"${meta.namespace}.${meta.name} snapshot ${sn.id}"
+    val keys = sn.equalityKeys.getOrElse(Nil)
+    require(keys.nonEmpty, s"$at: equality-delete snapshot without keys")
+    val sv = meta.versionOf(sn.schemaVer)
+    keys.map { k =>
+      val old = sv.fields.find(_.name == k).getOrElse(
+        throw new IllegalStateException(
+          s"$at: delete key $k not in schema version ${sv.version}"))
+      meta.currentSchemaVersion.fields.find(_.id == old.id).getOrElse(
+        throw new IllegalStateException(
+          s"$at: delete-key column $k (field ${old.id}) was dropped; " +
+            "materialize before dropping equality-key columns"))
+    }
+  }
+
+  /** The tombstone values of equality-delete snapshots `snaps`, all keyed
+    * on the current fields `keys` ([[equalityKeyFields]]): one
+    * `__del_<name>` column per key, cast to its current type. Snapshots
+    * that recorded the same key names read their files in one scan. */
+  private def tombstones(spark: SparkSession, snaps: Seq[SnapshotMeta],
+                         keys: List[FieldMeta]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val names = (sn: SnapshotMeta) => sn.equalityKeys.getOrElse(Nil)
+    snaps.map(names).distinct.map { recorded =>
+      spark.read.parquet(
+          snaps.filter(names(_) == recorded).flatMap(_.deletes.map(_.path)): _*)
+        .select(recorded.zip(keys).map { case (k, f) =>
+          col(k).cast(f.dataType).as(s"__del_${f.name}") }: _*)
+    }.reduce(_ unionByName _)
   }
 
   // ------------------------------------------------------- streaming read
@@ -1785,6 +1833,10 @@ class GraftCatalog(val warehouse: String) {
       val prevId = meta.snapshots
         .filter(p => !p.isStaged && p.id < sn.id)
         .map(_.id).maxOption.getOrElse(0L)
+      // the state's raw files at this snapshot named by `paths`, no debt
+      // applied: a same-commit insert and delete must both be emitted
+      def raw(paths: Set[String], keepPos: Boolean = false): DataFrame =
+        scanFiles(spark, meta, meta.stateAsOf(Some(sn.id)), keepPos, paths)
       if (sn.deletes.nonEmpty && sn.isPositionDelete) {
         val tuples = spark.read.parquet(sn.deletes.map(_.path): _*)
         // bounded driver fetch: the distinct files this delete touches
@@ -1797,8 +1849,7 @@ class GraftCatalog(val warehouse: String) {
         // OWN new files; the added rows also emit as inserts below (a
         // same-commit insert+delete of one row nets out, the standard
         // CDC encoding)
-        val ref = readKeptFiles(spark, meta, Some(sn.id), refPaths,
-          keepPos = true)
+        val ref = raw(refPaths, keepPos = true)
         // rows already dead under EARLIER position deletes must not
         // re-emit: Merge.deleteWherePos never re-references a dead
         // (file, pos), but commitPositionDeletes is a public surface —
@@ -1830,46 +1881,26 @@ class GraftCatalog(val warehouse: String) {
           "delete", ord)
         val added = sn.addedFiles.map(_.path).toSet
         if (added.isEmpty) Seq(dels)
-        else Seq(dels,
-          tag(readKeptFiles(spark, meta, Some(sn.id), added), "insert", ord))
+        else Seq(dels, tag(raw(added), "insert", ord))
       } else if (sn.deletes.nonEmpty) {
-        val keys = sn.equalityKeys.getOrElse(Nil)
-        require(keys.nonEmpty,
-          s"$ns.$t snapshot ${sn.id}: equality-delete snapshot without keys")
-        // keys were recorded under the SNAPSHOT's schema version —
-        // resolve by field id to the current name/type and cast the
-        // tombstone values, exactly like readInternal's fold, so the
-        // changelog serves schema-evolved histories the table itself
-        // serves (a raw-name join would throw after a key rename)
-        val sv = meta.versionOf(sn.schemaVer)
-        val cur = meta.currentSchemaVersion
-        val keyPairs = keys.map { k =>
-          val old = sv.fields.find(_.name == k).getOrElse(
-            throw new IllegalStateException(
-              s"$ns.$t: delete key $k not in schema version ${sv.version}"))
-          val now = cur.fields.find(_.id == old.id).getOrElse(
-            throw new IllegalStateException(
-              s"$ns.$t: delete-key column $k (field ${old.id}) was " +
-                "dropped; the changelog cannot resolve its tombstones"))
-          (k, now)
-        }
-        val vals = spark.read.parquet(sn.deletes.map(_.path): _*)
-          .select(keyPairs.map { case (k, now) =>
-            col(k).cast(now.dataType).as(s"__del_${now.name}") }: _*)
-        val prev = readTable(spark, ns, t, asOf = Some(prevId))
-        val cond = keyPairs.map { case (_, now) =>
-          prev(now.name) <=> vals(s"__del_${now.name}") }.reduce(_ && _)
+        // keys resolve by field id to the current name/type, exactly like
+        // readInternal's fold, so the changelog serves schema-evolved
+        // histories the table itself serves (a raw-name join would throw
+        // after a key rename)
+        val keys = equalityKeyFields(meta, sn)
+        val vals = tombstones(spark, Seq(sn), keys)
+        val prev = readInternal(spark, meta, Some(prevId), Nil, withPos = false)
+        val cond = keys.map(k =>
+          prev(k.name) <=> vals(s"__del_${k.name}")).reduce(_ && _)
         val dels = tag(prev.join(broadcast(vals), cond, "left_semi"),
           "delete", ord)
         val added = sn.addedFiles.map(_.path).toSet
         if (added.isEmpty) Seq(dels)
-        else Seq(dels,
-          tag(readKeptFiles(spark, meta, Some(sn.id), added), "insert", ord))
+        else Seq(dels, tag(raw(added), "insert", ord))
       } else if (sn.operation == "append") {
         val files = sn.addedFiles.map(_.path).toSet
         if (files.isEmpty) Nil
-        else Seq(tag(readKeptFiles(spark, meta, Some(sn.id), files),
-          "insert", ord))
+        else Seq(tag(raw(files), "insert", ord))
       } else { // overwrite / replace: file-set diff
         // prevId 0 = no previous lineage (e.g. the boundary checkpoint
         // expiration leaves as the earliest snapshot): the previous
@@ -1888,7 +1919,7 @@ class GraftCatalog(val warehouse: String) {
             // merge-on-read tombstones had already deleted before this
             // overwrite (materialize/compaction folds that debt away,
             // and so must the changelog)
-            val prevLive = readInternal(spark, ns, t, Some(prevId),
+            val prevLive = readInternal(spark, meta, Some(prevId), Nil,
               withPos = true)
             Seq(tag(prevLive.filter(
               org.apache.spark.sql.functions.regexp_replace(
@@ -1897,8 +1928,7 @@ class GraftCatalog(val warehouse: String) {
           }
         val inss =
           if (added.isEmpty) Nil
-          else Seq(tag(readKeptFiles(spark, meta, Some(sn.id), added),
-            "insert", ord))
+          else Seq(tag(raw(added), "insert", ord))
         dels ++ inss
       }
     }
@@ -2113,8 +2143,8 @@ class GraftCatalog(val warehouse: String) {
 
   /** THE scan planner: the one place a pruned read decides which of the
     * live files at `asOf` to scan — SQL ([[GraftPruningScanBuilder]]'s
-    * `pushFilters`) and the DataFrame API ([[readPruned]],
-    * [[readPrunedLive]] and the operators built on them) alike. Iceberg's
+    * `pushFilters`) and the DataFrame read ([[readTable]]'s `filters` and
+    * the operators built on it) alike. Iceberg's
     * `planFiles` shape: driver-side and metadata-only (no Spark job),
     * three conservative layers in order, each a file veto that never
     * drops a file holding a row the (conjunctive) `filters` accept:
@@ -2174,86 +2204,6 @@ class GraftCatalog(val warehouse: String) {
       case _                     => None
     }
   }
-
-  /** Read the files [[planFiles]] keeps, data files only (no
-    * merge-on-read delete debt applied); the caller still applies its
-    * row-level filter. */
-  def readPruned(spark: SparkSession, ns: String, t: String,
-                 filters: Seq[sources.Filter],
-                 asOf: Option[Long] = None): DataFrame = {
-    val meta = loadTable(ns, t)
-    readKeptFiles(spark, meta, asOf,
-      planFiles(meta, asOf, filters).map(_.path).toSet)
-  }
-
-  /** [[readPruned]] of the head with merge-on-read delete debt applied —
-    * the scan an auxiliary INDEX probe runs once its table can carry
-    * tombstones (a vector removed from the corpus must not surface from
-    * the ANN index, even before compaction pays the debt down). The kept
-    * files are scanned WITH their (file, pos) identity and anti-join the
-    * state's position-delete tuples (each delete file is tiny relative to
-    * the table, so the join broadcasts — same cost argument as
-    * [[readInternal]]'s fold). Position deletes bind to exact
-    * (file_path, pos) pairs and paths are never recycled, so applying ALL
-    * of them to any file subset is order-independent.
-    *
-    * EQUALITY-delete debt is ordered in general (a re-inserted key in a
-    * later file must survive an earlier delete), which a flat pruned scan
-    * cannot honor — refused, unless `appendOnlyKey` declares the table
-    * append-only on that column (a key value is inserted at most once and
-    * never re-inserted after a delete; true by construction for ANN code
-    * tables, whose vec_ids never recycle). Then the ordering is vacuous,
-    * and every PURE equality-delete snapshot keyed exactly on that column
-    * applies to the whole scan as one broadcast anti-join — how an
-    * id-keyed right-to-be-forgotten delete reaches a pruned index probe
-    * without a rewrite. Deletes on any other key, and upsert-shaped
-    * snapshots (equality deletes plus added files in one commit, which
-    * re-insert the keys they delete), still refuse: materialize first
-    * ([[graft.etl.Merge.materialize]]). */
-  def readPrunedLive(spark: SparkSession, ns: String, t: String,
-                     filters: Seq[sources.Filter],
-                     appendOnlyKey: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    val meta = loadTable(ns, t)
-    val snaps = meta.stateAsOf(None)
-    val eqSnaps = snaps.filter(sn => sn.deletes.nonEmpty && !sn.isPositionDelete)
-    require(eqSnaps.forall(sn =>
-        appendOnlyKey.exists(k => sn.equalityKeys.contains(List(k))) &&
-          sn.addedFiles.isEmpty),
-      s"$ns.$t carries equality-delete debt this scan cannot apply " +
-        "order-free: either the deletes are not keyed on the declared " +
-        "append-only column, or an upsert-shaped snapshot re-inserts " +
-        "keys in the same commit (sequence-ordered semantics) — " +
-        "materialize the table first")
-    val delFiles = snaps.filter(_.isPositionDelete).flatMap(_.deletes)
-    val keep = planFiles(meta, None, filters).map(_.path).toSet
-    val scanned =
-      if (delFiles.isEmpty) readKeptFiles(spark, meta, None, keep)
-      else {
-        val withPos = readKeptFiles(spark, meta, None, keep, keepPos = true)
-        val del = spark.read.parquet(delFiles.map(_.path): _*)
-        withPos.join(broadcast(del),
-            withPos(GraftCatalog.PosFileCol) === del("file_path") &&
-              withPos(GraftCatalog.PosIdxCol) === del("pos"), "left_anti")
-          .drop(GraftCatalog.PosFileCol, GraftCatalog.PosIdxCol)
-      }
-    val eqFiles = eqSnaps.flatMap(_.deletes)
-    if (eqFiles.isEmpty) scanned
-    else {
-      // order-free under the declared invariant: one anti-join over ALL
-      // equality tombstones, null-safe like readInternal's ordered fold
-      val k = appendOnlyKey.get
-      val eq = spark.read.parquet(eqFiles.map(_.path): _*)
-      scanned.join(broadcast(eq), scanned(k) <=> eq(k), "left_anti")
-    }
-  }
-
-  /** Scan the subset `keep` of the table's live files, grouped by the
-    * schema version each file was written under (see [[scanAt]]). */
-  private def readKeptFiles(spark: SparkSession, meta: TableMeta,
-                            asOf: Option[Long], keep: Set[String],
-                            keepPos: Boolean = false): DataFrame =
-    scanFiles(spark, meta, meta.stateAsOf(asOf), keepPos, keep)
 
   /** The files `snaps` added (those `keep` accepts), as one multi-file
     * [[scanAt]] per schema version they were written under, unioned in

@@ -508,14 +508,12 @@ private[catalog] class GraftSqlTable(cat: GraftCatalog, catName: String,
     !morDml && filters.forall(filterToColumn(_).isDefined)
 
   override def deleteWhere(filters: Array[sources.Filter]): Unit = {
-    requireServable() // rewrites the survivors by reading files by name
+    requireServable() // the SQL table's refusals hold for DELETE as for scans
     val spark = SparkSession.active
     val cond = filters.flatMap(filterToColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
-    val current =
-      if (paths.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
-      else spark.read.schema(tableSchema).parquet(paths: _*)
+    // the state this table was loaded at, through the catalog's one read
+    val current = cat.readInternal(spark, meta, asOf, Nil, withPos = false)
     // SQL DELETE removes only rows where the predicate is TRUE — a row where
     // it evaluates NULL must survive, so the keep-filter is NOT(coalesce(p,
     // false)), not NOT(p) (which is NULL for NULL inputs and would drop them).

@@ -237,8 +237,8 @@ private[catalog] object GraftProcedures {
         require(cat.tableExists(ns, rawT),
           s"$ns.$t carries no committed raw re-rank store; " +
             "rebuild the index to serve SQL vector search")
-        val probeRows = cat.readPruned(spark, ns, rawT,
-            Seq(org.apache.spark.sql.sources.EqualTo("vec_id", pid)))
+        val probeRows = cat.readTable(spark, ns, rawT,
+            filters = Seq(org.apache.spark.sql.sources.EqualTo("vec_id", pid)))
           .filter(col("vec_id") === pid)
           .select("embedding").collect()
         require(probeRows.nonEmpty, s"probe vector $pid is not indexed")

@@ -717,20 +717,19 @@ object IvfPq {
         lit(0.0).as("cos_sim")).limit(0)
     if (probedUnion.isEmpty)
       // empty batch: no cells to probe — return the empty result frame
-      // rather than handing readPrunedLive a vacuous cell set
+      // rather than reading the index with a vacuous cell set
       return emptyResult()
     // STAGE 1 — approximate shortlist per query. The LIVE read (pruned
-    // to the probed union): position-delete tombstones apply exactly as
-    // in [[probedCodes]] — a vector deleted from the corpus must not
+    // to the probed union): delete tombstones apply exactly as in
+    // [[probedCodes]] — a vector deleted from the corpus must not
     // surface as anyone's neighbor, even before compaction.
     def codeSum(tbl: Column): Column = (0 until ProductQuantizer.M).map { m =>
       val code = shiftright(col("codes"), 4 * m).bitwiseAND(lit(15L)).cast("int")
       element_at(element_at(tbl, m + 1), code + lit(1))
     }.reduce(_ + _)
     val scored = byCell
-      .join(cat.readPrunedLive(s, ns, s"${table}_ivfpq_codes",
-          Seq(cellIn(probedUnion)),
-          appendOnlyKey = Some("vec_id"))
+      .join(cat.readTable(s, ns, s"${table}_ivfpq_codes",
+          filters = Seq(cellIn(probedUnion)))
         .select(col("vec_id").as("neighbor_id"), col("cell"),
           col("codes")), Seq("cell"))
       // self-exclusion: when the batch overlaps the indexed corpus (the
@@ -1112,11 +1111,11 @@ object IvfPq {
     * kept-fraction floor (per file, P[any of n ids passes] = 1-(1-p)^n
     * — at n≈500 even a 1%-FPP bloom keeps a material slice of an
     * arbitrarily large table), while the cell layer caps candidates at
-    * the ids' OWN cells regardless of |ids|. Data files only: the raw
-    * store carries no delete debt. */
+    * the ids' OWN cells regardless of |ids|. The raw store carries no
+    * delete debt, so the read is one pruned scan. */
   private def rawFetch(spark: SparkSession, cat: GraftCatalog, ns: String,
                        rawT: String, cells: Seq[Long], ids: Seq[Long]): DataFrame =
-    cat.readPruned(spark, ns, rawT, Seq(sources.And(
+    cat.readTable(spark, ns, rawT, filters = Seq(sources.And(
       cellIn(cells), sources.In("vec_id", ids.toArray[Any]))))
 
   /** The scan-planner filter selecting cells: `cell` is BIGINT (the
@@ -1127,25 +1126,19 @@ object IvfPq {
 
   /** The probe-side inverted-list fetch: ONE manifest-pruned read of
     * the codes table over the union of probed cells ([[GraftCatalog
-    * .readPrunedLive]] keeps only files whose [min,max] on `cell`
-    * touches a probed cell) with the row-level `isin` on top —
+    * .readTable]] with `filters` keeps only files whose [min,max] on
+    * `cell` touches a probed cell) with the row-level `isin` on top —
     * at scale this reads ~nProbe/k of the index files and nothing
-    * else, and the plan stays a single scan however many cells the
-    * √N-sized index probes. The LIVE read also applies any
-    * position-delete debt the codes table carries (a vector deleted
-    * from the corpus must not surface from the index probe, even
-    * before compaction rewrites the files — see
-    * [[graft.etl.VectorMaintenance]]); debt-free tables take the
-    * identical plain pruned scan. */
+    * else, and a debt-free table's plan stays a single scan however
+    * many cells the √N-sized index probes. The read also applies the
+    * delete debt the codes table carries, position and equality alike,
+    * in commit order (a vector deleted from the corpus must not surface
+    * from the index probe, even before compaction rewrites the files —
+    * see [[graft.etl.VectorMaintenance]]), at most one broadcast
+    * anti-join per delete snapshot. */
   def probedCodes(spark: SparkSession, cat: GraftCatalog, ns: String,
                   table: String, cells: Seq[Long]): DataFrame =
-    cat.readPrunedLive(spark, ns, s"${table}_ivfpq_codes",
-        Seq(cellIn(cells)),
-        // codes tables are append-only on vec_id BY CONSTRUCTION (ids
-        // never recycle), so id-keyed equality tombstones — the shape
-        // right-to-be-forgotten events actually arrive in — fold into
-        // the pruned probe as a broadcast anti-join; deletes on any
-        // other key still refuse
-        appendOnlyKey = Some("vec_id"))
+    cat.readTable(spark, ns, s"${table}_ivfpq_codes",
+        filters = Seq(cellIn(cells)))
       .filter(col("cell").isin(cells: _*))
 }

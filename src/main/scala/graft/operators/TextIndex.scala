@@ -331,7 +331,7 @@ object TextIndex {
     * pushdown inside the survivors). */
   def postingsFor(spark: SparkSession, cat: GraftCatalog, ns: String,
                   table: String, terms: Seq[String]): DataFrame =
-    cat.readPruned(spark, ns, s"${table}_postings", termsIn(terms))
+    cat.readTable(spark, ns, s"${table}_postings", filters = termsIn(terms))
       .filter(col("term").isInCollection(terms))
 
   /** Corpus statistics as ONE row: the sum of the committed deltas. */

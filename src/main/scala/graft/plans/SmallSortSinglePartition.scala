@@ -29,13 +29,15 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * "Small" is at most `spark.sql.adaptive.coalescePartitions.minPartitionSize`:
   * a shuffle of at most that size always coalesces to one partition, under
-  * either `parallelismFirst` setting. Only sizes that cannot underestimate
-  * count, read through filters and projections:
+  * either `parallelismFirst` setting. Only these sizes count, read through
+  * filters and projections:
   *  - the runtime statistics of a materialized query stage (what AQE's
   *    re-optimization supplies once an aggregate's shuffle has run), also
   *    under the final aggregate that reads it;
   *  - the bytes of the data files a file scan reads (the files the
-  *    catalog's planner kept);
+  *    catalog's planner kept). These are compressed parquet bytes, so the
+  *    decoded rows can exceed them by the files' compression ratio: over
+  *    a scan, the one partition may hold that ratio times the limit;
   *  - local rows, as unsafe rows.
   * Any other operator (a join, a `Generate`, a window, a union) declines.
   *
@@ -58,10 +60,12 @@ case class SmallSortSinglePartition(session: SparkSession) extends Rule[SparkPla
 }
 
 object SmallSortSinglePartition {
-  /** An upper bound on the bytes `p` produces, or None where no bound that
-    * cannot underestimate is known. Counting local rows stops once past
-    * `limit`, so a large local relation costs no more than `limit` bytes
-    * of projection. */
+  /** The bytes `p` produces, or None where no size is known: a query
+    * stage's runtime statistics (the sizes AQE itself coalesces by),
+    * local rows as unsafe rows, and for a file scan the compressed file
+    * bytes, which the decoded rows can exceed. Counting local rows stops
+    * once past `limit`, so a large local relation costs no more than
+    * `limit` bytes of projection. */
   private[plans] def inputBytes(p: SparkPlan, limit: Long): Option[BigInt] = p match {
     case f: FilterExec          => inputBytes(f.child, limit)
     case pr: ProjectExec        => inputBytes(pr.child, limit)

@@ -315,14 +315,17 @@ object Etl {
     val expected = li.filter(rowPred).count()
     val rows = Seq("linear", "zorder", "hilbert").map { name =>
       val meta = cat.loadTable("layout", name)
-      def kept(column: String, lo: Double, hi: Double): Set[String] =
-        cat.planFiles(meta, None,
-          Seq(graft.catalog.Partitioning.between(meta.schema, column, lo, hi)))
-          .map(_.path).toSet
-      val keptX = kept("l_orderkey", oxLo, oxHi)
-      val keptY = kept("l_partkey", pxLo, pxHi)
-      val keptBoth = (keptX intersect keptY).toSeq.sorted
-      val got = s.read.schema(li.schema).parquet(keptBoth: _*)
+      def box(column: String, lo: Double, hi: Double) =
+        graft.catalog.Partitioning.between(meta.schema, column, lo, hi)
+      val onX = box("l_orderkey", oxLo, oxHi)
+      val onY = box("l_partkey", pxLo, pxHi)
+      def kept(f: org.apache.spark.sql.sources.Filter): Set[String] =
+        cat.planFiles(meta, None, Seq(f)).map(_.path).toSet
+      val keptX = kept(onX)
+      val keptY = kept(onY)
+      val keptBoth = keptX intersect keptY
+      // the one read with both filters scans exactly keptX ∩ keptY
+      val got = cat.readTable(s, "layout", name, filters = Seq(onX, onY))
         .filter(rowPred).count()
       (name, nFiles.toLong, keptX.size.toLong, keptY.size.toLong,
         keptBoth.size.toLong, got == expected)

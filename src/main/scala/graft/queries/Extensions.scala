@@ -1766,14 +1766,11 @@ object Extensions {
     * id-keyed EQUALITY delete ([[graft.etl.Merge.deleteWhereMor]] on
     * `vec_id`: O(deleted) write, one slim key column) lands on the
     * committed IVF+PQ codes table, and the very next index read must
-    * stop surfacing the deleted vectors. Equality deletes are ordered
-    * in general — a flat pruned scan rightly refuses them — but an ANN
-    * codes table is APPEND-ONLY on vec_id by construction (ids never
-    * recycle), which makes the ordering vacuous: the catalog read folds
-    * ALL equality tombstones as one broadcast anti-join on the key,
-    * beside the position path ([[graft.catalog.GraftCatalog
-    * .readPrunedLive]]'s `appendOnlyKey` declaration; deletes on
-    * any other key still refuse). The probe is the DEPLOYMENT shape
+    * stop surfacing the deleted vectors. The catalog's one read
+    * ([[graft.catalog.GraftCatalog.readTable]] with `filters`) folds the
+    * tombstones in commit order over the pruned kept files: here one
+    * broadcast anti-join on the key after the index's scan. The probe
+    * is the DEPLOYMENT shape
     * (the round-12 verdict item: this row previously spanned the full
     * cell range as a fixture choice): [[graft.operators.IvfPq.search]]
     * verbatim — the policy-fraction pruned probe with the tombstone

@@ -1616,7 +1616,8 @@ object Meta {
     val point = (c: String, v: Any) => Seq(sources.EqualTo(c, v))
     val bloomKept = cat.planFiles(meta, None, point("l_orderkey", probe))
       .size.toLong
-    val pruned = cat.readPruned(s, "nyc", t, point("l_orderkey", probe))
+    val pruned = cat.readTable(s, "nyc", t,
+        filters = point("l_orderkey", probe))
       .filter(col("l_orderkey") === probe).count()
     val full = cat.readTable(s, "nyc", t)
       .filter(col("l_orderkey") === probe).count()
@@ -1626,7 +1627,8 @@ object Meta {
     // against TOTAL, not the range-kept count
     val keptStr = cat.planFiles(meta, None,
       point("okey_str", probe.toString)).size.toLong
-    val prunedStr = cat.readPruned(s, "nyc", t, point("okey_str", probe.toString))
+    val prunedStr = cat.readTable(s, "nyc", t,
+        filters = point("okey_str", probe.toString))
       .filter(col("okey_str") === probe.toString).count()
     Seq((total, rangeKept, bloomKept < rangeKept, pruned, full,
         pruned == full && pruned > 0,
@@ -1658,7 +1660,7 @@ object Meta {
       "l_orderkey", 1, mid / 2))
     val kept = cat.planFiles(cat.loadTable("nyc", "li_split"), None,
       lowHalf).size.toLong
-    val prunedCount = cat.readPruned(s, "nyc", "li_split", lowHalf)
+    val prunedCount = cat.readTable(s, "nyc", "li_split", filters = lowHalf)
       .filter(col("l_orderkey") <= mid / 2).count()
     val fullCount = cat.readTable(s, "nyc", "li_split")
       .filter(col("l_orderkey") <= mid / 2).count()
@@ -1678,7 +1680,7 @@ object Meta {
       sources.LessThanOrEqual("l_returnflag", "B")))
     val strKept = cat.planFiles(cat.loadTable("nyc", "li_split_str"), None,
       flagAB).size.toLong
-    val strPruned = cat.readPruned(s, "nyc", "li_split_str", flagAB)
+    val strPruned = cat.readTable(s, "nyc", "li_split_str", filters = flagAB)
       .filter(col("l_returnflag").between("A", "B")).count()
     val strFull = cat.readTable(s, "nyc", "li_split_str")
       .filter(col("l_returnflag").between("A", "B")).count()

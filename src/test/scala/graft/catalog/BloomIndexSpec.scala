@@ -85,12 +85,12 @@ class BloomIndexSpec extends SparkSpec {
     assert(kept.size < 4, s"bloom kept ${kept.size}/4 files — no pruning")
     assert(kept.exists(_.path.contains("/r3/")),
       "the file actually holding the id must survive")
-    val rows = cat.readPruned(spark, "b", "t", point("id", probe))
+    val rows = cat.readTable(spark, "b", "t", filters = point("id", probe))
       .filter(col("id") === probe).collect()
     assert(rows.map(_.getString(1)).toSeq === Seq("v399"))
     // an id that is in NO file: every bloom may reject it (exactness
     // comes from the row filter either way)
-    val none = cat.readPruned(spark, "b", "t", point("id", 12345L))
+    val none = cat.readTable(spark, "b", "t", filters = point("id", 12345L))
       .filter(col("id") === 12345L).count()
     assert(none === 0L)
   }
@@ -132,7 +132,7 @@ class BloomIndexSpec extends SparkSpec {
       point("sid", "uuid-37"))
     assert(kept.exists(_.path.contains("/r1/")), "the holder file was pruned")
     assert(kept.size < 4, s"string bloom kept ${kept.size}/4 — no pruning")
-    val rows = cat.readPruned(spark, "b", "t", point("sid", "uuid-37"))
+    val rows = cat.readTable(spark, "b", "t", filters = point("sid", "uuid-37"))
       .filter(col("sid") === "uuid-37").collect()
     assert(rows.map(_.getLong(0)).toSeq === Seq(37L))
   }
@@ -162,7 +162,7 @@ class BloomIndexSpec extends SparkSpec {
       "encodable path — the sidecar keys never matched")
     assert(kept.exists(_.path.contains("/part 3/")),
       "the file actually holding the id must survive")
-    assert(cat.readPruned(spark, "b", "t", point("id", 399L))
+    assert(cat.readTable(spark, "b", "t", filters = point("id", 399L))
       .filter(col("id") === 399L).count() === 1L)
   }
 
@@ -219,7 +219,7 @@ class BloomIndexSpec extends SparkSpec {
       cat.loadTable("b", "mixed").filesAsOf(None), Seq("payload" -> Seq(1L)))
     assert(keptPayload.size === 5)
     // reads stay exact across the mixed commits
-    assert(cat.readPruned(spark, "b", "mixed", point("id", 800L))
+    assert(cat.readTable(spark, "b", "mixed", filters = point("id", 800L))
       .filter(col("id") === 800L).count() === 1L)
   }
 }

@@ -208,7 +208,7 @@ class GraftCatalogSpec extends SparkSpec {
 
     val hit = idRange(cat, 12, 15)
     assert(hit.size === 1 && hit.head.path.endsWith("f2.parquet"))
-    assert(cat.readPruned(spark, "nyc", "t",
+    assert(cat.readTable(spark, "nyc", "t", filters =
       Seq(Partitioning.between(cat.loadTable("nyc", "t").schema, "id", 12, 15))).count() === 2) // file rows
     assert(idRange(cat, 0, 100).size === 3)
     assert(idRange(cat, 500, 600).isEmpty)
@@ -242,7 +242,7 @@ class GraftCatalogSpec extends SparkSpec {
     // to the 16-char prefix (true values extend past it) keeps the file
     assert(nameRange(cat, "zulu-" + "y" * 11, "zz").size === 1)
     assert(nameRange(cat, "a", "zzzz").size === 2)
-    assert(cat.readPruned(spark, "nyc", "ts", nameBetween("a", "m"))
+    assert(cat.readTable(spark, "nyc", "ts", filters = nameBetween("a", "m"))
       .count() === 3)
     // bounds themselves are truncated to 16 chars
     val rg = cat.files("nyc", "ts").flatMap(_.strRanges).flatMap(_.get("name"))

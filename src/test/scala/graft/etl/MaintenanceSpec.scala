@@ -63,7 +63,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(files.size >= 3)
     // a narrow id predicate must keep fewer files than exist
     assert(kept(cat, "id", 1, 64).size < files.size)
-    assert(cat.readPruned(spark, "nyc", "t", Seq(Partitioning.between(
+    assert(cat.readTable(spark, "nyc", "t", filters = Seq(Partitioning.between(
         cat.loadTable("nyc", "t").schema, "id", 1, 64)))
       .filter(col("id") <= 64).count() === 64)
   }

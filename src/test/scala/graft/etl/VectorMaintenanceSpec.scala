@@ -5,13 +5,15 @@ import java.nio.file.Paths
 import graft.{SparkSpec, Tables}
 import graft.catalog.GraftCatalog
 import graft.operators.{IvfPq, ProductQuantizer}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources
 
 /** The ANN-index delete/compaction lifecycle behind q_vec_knn_deleted and
   * etl_vec_index_compact: position-delete tombstones are honored by the
-  * manifest-pruned probe IMMEDIATELY (before any rewrite), equality debt
-  * is refused by the pruned live read, and compaction purges the debt +
+  * manifest-pruned probe IMMEDIATELY (before any rewrite), so is equality
+  * debt on any key (the pruned read folds it in commit order), and
+  * compaction purges the debt +
   * restores the ≤ k cell-clustered layout (k = the index's own √N-sized cell count) without changing any
   * probe answer. */
 class VectorMaintenanceSpec extends SparkSpec {
@@ -53,25 +55,33 @@ class VectorMaintenanceSpec extends SparkSpec {
     assert(probed.count() === expected)
   }
 
-  test("readPrunedLive refuses equality-delete debt (ordered semantics)") {
+  test("the pruned read equals the filtered full read under equality debt") {
     val cat = freshCat()
     IvfPq.buildIndex(spark, cat, "vec", "emb", emb)
     Merge.deleteWhereMor(spark, cat, "vec", "emb_ivfpq_codes",
       col("vec_id") === 1L, Seq("vec_id"))
-    val e = intercept[IllegalArgumentException] {
-      cat.readPrunedLive(spark, "vec", "emb_ivfpq_codes",
-        Seq(sources.EqualTo("cell", 1L)))
-    }
-    assert(e.getMessage.contains("equality-delete"))
-    // after materialization the pruned live read works again
-    Merge.materialize(spark, cat, "vec", "emb_ivfpq_codes")
     val k = IvfPq.loadCells(spark, cat, "vec", "emb").size
-    assert(cat.readPrunedLive(spark, "vec", "emb_ivfpq_codes",
-      Seq(sources.And(sources.GreaterThanOrEqual("cell", 1L),
-        sources.LessThanOrEqual("cell", k.toLong)))).filter(col("vec_id") === 1L).count() === 0)
+    val allCells = sources.And(sources.GreaterThanOrEqual("cell", 1L),
+      sources.LessThanOrEqual("cell", k.toLong))
+    def agree(f: sources.Filter, p: Column): Unit = {
+      val pruned = cat.readTable(spark, "vec", "emb_ivfpq_codes",
+        filters = Seq(f)).filter(p)
+      val full = cat.readTable(spark, "vec", "emb_ivfpq_codes").filter(p)
+      assert(pruned.count() === full.count())
+      assert(pruned.exceptAll(full).isEmpty)
+    }
+    agree(sources.EqualTo("cell", 1L), col("cell") === 1L)
+    agree(allCells, col("cell").between(1L, k.toLong))
+    assert(cat.readTable(spark, "vec", "emb_ivfpq_codes",
+      filters = Seq(allCells)).filter(col("vec_id") === 1L).count() === 0)
+    // a delete keyed on a column that is not append-only folds too
+    Merge.deleteWhereMor(spark, cat, "vec", "emb_ivfpq_codes",
+      col("cell") === 2L, Seq("cell"))
+    agree(sources.EqualTo("cell", 2L), col("cell") === 2L)
+    agree(allCells, col("cell").between(1L, k.toLong))
   }
 
-  test("append-only declaration folds id-keyed equality deletes into the pruned probe") {
+  test("id-keyed equality deletes fold into the pruned probe") {
     // two index twins over the same corpus: one takes the delete as
     // POSITION tombstones, the other as id-keyed EQUALITY tombstones —
     // every live read and search answer must agree exactly
@@ -84,7 +94,7 @@ class VectorMaintenanceSpec extends SparkSpec {
     Merge.deleteWhereMor(spark, catEq, "vec", "emb_ivfpq_codes", doomed,
       Seq("vec_id"))
     val k = IvfPq.loadCells(spark, catEq, "vec", "emb").size
-    // probedCodes (which declares appendOnlyKey) sees identical live rows
+    // probedCodes sees identical live rows
     val cells = 1L to k.toLong
     val livePos = IvfPq.probedCodes(spark, catPos, "vec", "emb", cells)
       .select("vec_id").collect().map(_.getLong(0)).sorted
@@ -98,22 +108,17 @@ class VectorMaintenanceSpec extends SparkSpec {
     val sEq = IvfPq.search(spark, catEq, "vec", "emb", emb, probeId, probeVec)
       .collect().toSeq
     assert(sEq === sPos)
-    // the declaration does NOT bless equality deletes on other keys:
-    // a cell-keyed delete still refuses (cells are not append-only)
+    // an equality delete on another key (cells are not append-only)
+    // applies to the probe as it does to the full read
     Merge.deleteWhereMor(spark, catEq, "vec", "emb_ivfpq_codes",
       col("cell") === 1L, Seq("cell"))
-    val e = intercept[IllegalArgumentException] {
-      IvfPq.probedCodes(spark, catEq, "vec", "emb", Seq(1L)).count()
-    }
-    assert(e.getMessage.contains("equality-delete"))
+    assert(IvfPq.probedCodes(spark, catEq, "vec", "emb", Seq(1L)).count() === 0)
   }
 
-  test("append-only declaration refuses UPSERT-shaped equality snapshots") {
+  test("the pruned probe serves UPSERT-shaped equality snapshots") {
     // mergeIntoMor on vec_id deletes AND re-inserts the key in one
-    // snapshot — sequence-ordered semantics the order-free anti-join
-    // cannot honor (it would delete the re-inserted row). The pruned
-    // live read must refuse loudly, not silently diverge from
-    // readInternal's ordered fold (the round-12 advice note).
+    // snapshot: by the sequence rule the re-inserted row survives its
+    // own tombstone, in the pruned probe as in the full read
     val cat = freshCat()
     IvfPq.buildIndex(spark, cat, "vec", "emb", emb)
     val k = IvfPq.loadCells(spark, cat, "vec", "emb").size
@@ -122,14 +127,12 @@ class VectorMaintenanceSpec extends SparkSpec {
       .withColumn("cell", lit(1L))
     Merge.mergeIntoMor(spark, cat, "vec", "emb_ivfpq_codes", upsert,
       Seq("vec_id"))
-    // the ordered fold keeps the re-inserted row...
     assert(cat.readTable(spark, "vec", "emb_ivfpq_codes")
       .filter(col("vec_id") === 1L).count() === 1)
-    // ...so the order-free pruned read must refuse rather than drop it
-    val e = intercept[IllegalArgumentException] {
-      IvfPq.probedCodes(spark, cat, "vec", "emb", 1L to k.toLong).count()
-    }
-    assert(e.getMessage.contains("upsert-shaped"))
+    val probed = IvfPq.probedCodes(spark, cat, "vec", "emb", 1L to k.toLong)
+    assert(probed.filter(col("vec_id") === 1L).count() === 1)
+    assert(probed.count() ===
+      cat.readTable(spark, "vec", "emb_ivfpq_codes").count())
   }
 
   test("appendCodesBatch replay is a no-op even after compaction") {

@@ -46,8 +46,8 @@ class DeterminismSpec extends SparkSpec {
     "q_dedup_semantic", "q_decontaminate_semantic", "q_vec_knn_join",
     // round 12: the √N-sized index family's new pins rest on this —
     // the drift rebuild (3 trainings + occupancy aggregates + recall
-    // sets), the equality-tombstone fold-in (order-free anti-join
-    // claim), the parameterized BM25 (map-typed tf + term-keyed df
+    // sets), the equality-tombstone fold-in (one anti-join after the
+    // index scan), the parameterized BM25 (map-typed tf + term-keyed df
     // exchange), and the learned-cell variants (cluster histogram;
     // integer-checksum fingerprint over a windowed join)
     "etl_vec_index_rebuild", "q_vec_knn_deleted_eq", "q_text_bm25_param",

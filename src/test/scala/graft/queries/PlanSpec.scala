@@ -588,9 +588,9 @@ class PlanSpec extends SparkSpec {
     assert(scans.forall(_.relation.location.inputFiles.forall(
         _.contains("emb_ivfpq_codes"))),
       "equality-deleted scoring must read codes + tombstones, not vectors")
-    // the fold is ONE broadcast anti-join on vec_id (order-free under
-    // the append-only invariant — a shuffled anti-join or a per-snapshot
-    // ordered fold would re-shuffle the index at 100 TB)
+    // the delete snapshot folds in as a broadcast anti-join on vec_id
+    // after the index's scan (a shuffled anti-join would re-shuffle the
+    // index at 100 TB)
     val anti = shortlist.collect {
       case j: BroadcastHashJoinExec
         if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
